@@ -61,12 +61,12 @@ def spread_input(
         est = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-        max_pb = int("".join(c for c in str(raw) if c.isdigit()) or "134217728")
     except Exception:  # noqa: BLE001 -- estimation must never kill a plan
         return df
     if est < min_bytes:
         return df
+    # the JVM's parsed value, so a user's "128m" reads as 128 MiB
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if math.ceil(est / max_pb) >= target:
         return df
     return df.repartition(target, key)

@@ -51,8 +51,8 @@ def synth_pcm16(media_id: int, n_samples: int) -> list[int]:
 def synth_pcm16_np(media_id: int, n_samples: int):
     """Vectorized ``synth_pcm16`` (same recurrence, same values --
     pinned by tests/test_audio.py): int64 numpy evaluation so corpus
-    builders (tools/media_probe.py) can synthesize huge corpora
-    without a Python per-sample loop. Arithmetic is REDUCED MOD P
+    builders can synthesize huge corpora without a Python per-sample
+    loop. Arithmetic is REDUCED MOD P
     term-by-term (k*k computed on residues), so intermediates stay
     under ~P^2*31 ~= 1.3e14 and the recurrence never hits int64 wrap
     -- a naive k*k*31 overflows silently past k ~= 5.4e8, which would

@@ -1,34 +1,24 @@
 """Connected components (N19-N20) without a graph library.
 
 Reference: duplicate-pair edges -> DFS single-linkage clusters
-(pipeline/duplicate_detector.py:216-264). DFS doesn't distribute;
-the Spark-first equivalent is iterative min-label propagation
-(SURVEY §4 item 2):
+(pipeline/duplicate_detector.py:216-264). DFS doesn't distribute, so
+there are two paths, both labeling every node with the min node id it
+reaches:
 
-    label(v) <- min(label(v), min over neighbors u of label(u))
-
-repeated until fixpoint. Convergence is detected with the (monotone
-non-increasing) global sum of labels; ``localCheckpoint`` every
-iteration cuts the lineage so plan size stays O(1) per round instead
-of growing with iterations -- at 100 TB the checkpoint also bounds
-recovery cost. Iteration count is O(graph diameter); duplicate
-clusters are near-cliques, so 2-4 rounds in practice.
-
-For graphs whose diameter is NOT small (substring-overlap chains,
-citation paths), min-label's O(diameter) rounds is the wall, so the
-``star`` strategy implements alternating large-star / small-star
-contraction (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC 2014): each round re-points whole neighborhoods at the
-neighborhood minimum, so label distance to the component root shrinks
-multiplicatively -- O(log^2 n) rounds worst case, ~log2 n measured
-(tools/cc_probe.py: a 65,536-node path converges in 17 rounds, a
-4,096-node path in 13, where min-label needs rounds = diameter and
-is still 99% unconverged at a 40-round cap; near-clique dup graphs
-converge in 2). Each round runs TWO groupBy+join pairs (large-star
-over the symmetric edge set, small-star over the canonical one) plus
-an O(1)-output fingerprint agg -- roughly 2x the per-round shuffle
-work of a min-label round, repaid exponentially in round count on
-anything that is not a near-clique.
+- ``local``: a small edge list is collected and solved with driver-side
+  union-find.
+- ``star``: alternating large-star / small-star contraction (Kiveris
+  et al., "Connected Components in MapReduce and Beyond", SoCC 2014).
+  Each round re-points whole neighborhoods at the neighborhood
+  minimum, so label distance to the component root shrinks
+  multiplicatively: O(log^2 n) rounds worst case, ~log2 n measured (a
+  65,536-node path converges in 17 rounds, a 4,096-node path in 13,
+  near-clique dup graphs in 2; SCALE.md "Iterative operators").
+  Min-label propagation needs rounds = diameter instead, which is why
+  it is not offered. Each round runs TWO groupBy+join pairs (large-star
+  over the symmetric edge set, small-star over the canonical one) plus
+  an O(1)-output fingerprint agg, and ``localCheckpoint`` cuts the
+  lineage every round so plan size stays O(1) per round.
 """
 
 from __future__ import annotations
@@ -43,8 +33,8 @@ from conversation_analysis_tools_spark.operators.cache import track
 #: driver-side union-find: a duplicate graph's edge list is almost
 #: always tiny relative to the corpus (it IS the point of dedup), and
 #: a local union-find on 10^5 edges is milliseconds, vs several
-#: distributed join rounds. Above the limit the iterative min-label
-#: loop runs (scales to any size).
+#: distributed join rounds. Above the limit star contraction runs
+#: (scales to any size).
 SMALL_GRAPH_LIMIT = 500_000
 
 #: Rounds the most recent _cc_star call ran (incl. the fixpoint-
@@ -63,16 +53,14 @@ def connected_components(
     min node id reachable (matches the reference's min-representative
     selection, duplicate_detector.py:266-299).
 
-    Strategies: ``local`` (driver union-find, small graphs),
-    ``distributed`` (min-label propagation, O(diameter) rounds --
-    right for near-clique dup graphs), ``star`` (large-star/small-star
-    contraction, O(log n) rounds on ANY topology -- the choice when
-    the graph may contain long chains). ``auto`` probes the edge
-    count and picks ``local`` below :data:`SMALL_GRAPH_LIMIT`, else
-    ``star`` (diameter-robust: above the limit nothing guarantees the
-    dup graph's near-clique shape, and on near-cliques star converges
-    in the same 2-3 rounds min-label does).
+    Strategies: ``local`` (driver union-find, small graphs) and
+    ``star`` (large-star/small-star contraction, O(log n) rounds on
+    any topology). ``auto`` probes the edge count and picks ``local``
+    up to :data:`SMALL_GRAPH_LIMIT` edges, else ``star``. Any other
+    value raises ``ValueError``.
     """
+    if strategy not in ("auto", "local", "star"):
+        raise ValueError(f"unknown strategy {strategy!r}: use 'auto', 'local' or 'star'")
     # persist first: the probe, the collect/loop, and any downstream
     # join would otherwise re-materialize the (often expensive)
     # edge-producing plan -- e.g. the all-pairs similarity join
@@ -89,18 +77,14 @@ def connected_components(
         head = edges.select(src, dst).limit(SMALL_GRAPH_LIMIT + 1).collect()
         if len(head) <= SMALL_GRAPH_LIMIT:
             return _cc_local_rows(head, edges, src)
-        strategy = "star"
-    if strategy == "local":
+    elif strategy == "local":
         return _cc_local(edges, src, dst)
-    if strategy == "star":
-        # max_iter=None -> _cc_star self-sizes its round cap from the
-        # node count (a fixed cap would be too tight past ~10^8
-        # nodes); an explicit max_iter is honored verbatim so
-        # round-bound certificates (cc_star_chain_fixed) keep their
-        # teeth, and hitting it raises rather than returning
-        # silently-split components
-        return _cc_star(edges, src, dst, max_iter)
-    return _cc_distributed(edges, src, dst, 25 if max_iter is None else max_iter)
+    # max_iter=None -> _cc_star self-sizes its round cap from the
+    # node count (a fixed cap would be too tight past ~10^8 nodes); an
+    # explicit max_iter is honored verbatim so round-bound certificates
+    # (cc_star_chain_fixed) keep their teeth, and hitting it raises
+    # rather than returning silently-split components
+    return _cc_star(edges, src, dst, max_iter)
 
 
 def _cc_local(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -144,68 +128,6 @@ def _cc_local_rows(rows, edges: DataFrame, src: str) -> DataFrame:
 
 def _id_type(edges: DataFrame, col: str) -> str:
     return edges.schema[col].dataType.simpleString()
-
-
-def _cc_distributed(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Iterative min-label propagation (the at-scale path).
-
-    Labels only ever DECREASE, so an unchanged label sum proves a
-    fixpoint; exhausting ``max_iter`` without reaching one raises
-    instead of returning silently-split components (the same loud
-    contract as ``_cc_star`` -- with max_iter below the graph
-    diameter the partial labels would make downstream dedup KEEP
-    duplicates)."""
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter!r}")
-    nodes = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
-        .distinct()
-    )
-    labels = nodes.select("id", F.col("id").alias("component")).localCheckpoint()
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint()
-    )
-
-    prev_sum = labels.agg(F.sum("component")).first()[0]
-    converged = False
-    # max_iter + 1: the sum probe proves a fixpoint one round AFTER
-    # the last change, so a graph whose labels settle exactly at
-    # round max_iter needs one change-free confirming round -- the
-    # same +1 courtesy _cc_star grants (and the failure path costs
-    # the same one extra round either way)
-    for _ in range(max_iter + 1):
-        # neighbor labels flowing over edges + own label, min per node
-        msgs = (
-            sym.join(labels, sym.a == labels.id)
-            .select(F.col("b").alias("id"), "component")
-        )
-        labels = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("component")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"min-label propagation did not converge in {max_iter} rounds "
-            "(+1 change-free confirming round; rounds needed ~= graph "
-            "diameter); raise max_iter or use strategy='star' (O(log n) "
-            "rounds on any topology)"
-        )
-    return labels
 
 
 def _edge_fingerprint(cur: DataFrame) -> tuple:
@@ -334,8 +256,7 @@ def _cc_star(
         raise RuntimeError(
             f"star contraction did not reach its fixpoint in {max_iter} "
             "rounds (+1 change-free confirming round); raise max_iter "
-            "(rounds needed ~= log2(n_nodes)+1, see tools/cc_probe.py "
-            "measurements)"
+            "(rounds needed ~= log2(n_nodes)+1)"
         )
     # converged: the edge set is (child, root) stars
     child = cur.groupBy(F.col("hi").alias("id")).agg(F.min("lo").alias("component"))

@@ -29,165 +29,21 @@ from conversation_analysis_tools_spark.queries import ingest  # noqa: F401
 #
 # The external driver records correctness rows for only the FIRST 50
 # entries of ``__spark_entry__.queries()`` per round, so registration
-# order is a scarce verification window. This list pins ONLY the
-# current round's new/changed-plan queries; everything else is
-# AUTO-RANKED by ordered_registry() from the CORRECTNESS_r*.json
-# history -- never-checked oracled queries first, then oldest-green
-# ascending -- so rotation needs no manual bookkeeping.
+# order is a scarce verification window. The rule:
 #
-# Rotation cadence rule (restated per VERDICT r3 item 5): with 150+
-# oracled queries and a 50-slot window, a "<=2 rounds stale" cadence is
-# arithmetically impossible (needs >=76 slots/round). The guarantee the
-# auto-ranking actually provides -- enforced mechanically by
-# tests/test_rollup_audit.py::test_rotation_staleness_bound -- is that
-# an oracled query's driver row is refreshed at least every
-# ceil(O / (50 - len(VERIFY_PRIORITY))) rounds (O = oracled count).
-# Round-6 note: O grew to ~161 (collapse certificates, IVF frontier,
-# manifest path), so the bound is now FOUR rounds, not three --
-# VERDICT r5's "nothing older than r4 after r6" needs 161 distinct
-# slots across r4-r6 but only 150 exist even with zero overlap; the
-# ~16 r3-green spillover queries are the oldest bucket and
-# auto-promote ahead of everything in r7. Keeping this list to
-# genuinely-changed plans IS the cadence
-# discipline.
+# - VERIFY_PRIORITY pins only the current round's new or changed-plan
+#   queries, and each round's list is cleared once its green driver
+#   rows land. A plan that is byte-identical at the driver's sf needs
+#   no pin.
+# - Everything else is auto-ranked by ordered_registry() from the
+#   CORRECTNESS_r*.json history: never-checked oracled queries first,
+#   then oracled ones by oldest green round, then rows-only queries.
+# - tests/test_rollup_audit.py::test_rotation_staleness_bound enforces
+#   it: at most 50 // 4 pins, and every oracled query's driver row is
+#   refreshed within ceil(O / 50) <= 4 rounds (O = oracled count),
+#   plus at most one round of delay from a pin list.
 #
-# Round-8 window: the r7 pins are cleared (all five got green r7
-# rows). This round's job is the r4 rotation -- the 36 r4-green
-# queries hit the 4-round staleness bound and auto-promote by age
-# (VERDICT r7 item 2), which consumes nearly the whole free window,
-# so the pin list must stay <= 4: oracled reaches ~183 this round
-# (dedup_jaccard_routed_fixed, csv_roundtrip, the planted-pair sf1
-# certificate), and ceil(183 / (50 - 4)) = 4 while 5 pins push the
-# bound to 5 (test_rotation_staleness_bound enforces it). The new
-# queries need no pin -- never-checked oracled queries auto-rank
-# AHEAD of the r4 tail. The manual list holds only round 8's
-# changed-plan re-certifications: dedup_ngram_jaccard +
-# dedup_collapse_jaccard_fixed (both now run the saturation router's
-# cost probe; the exact branch their driver-sf output rides is
-# unchanged, but the plan gained an eager probe job) and
-# corr_matrix_by_flag (NaN->NULL nanvl fold on every coefficient --
-# value-identical on lineitem groups, new expression tree). The
-# _cc_star confirming-round change needs no pin: the extra round
-# fires only on NON-convergence (previously a guaranteed
-# RuntimeError), so every converging query's plan is untouched.
-# Late round 8: score_documents moved to the shared-counts plan (one
-# tokenize pass feeds density/coverage/tfidf; nlp_relevance sf1
-# 9.7 -> 5.3 s). All five consumers (nlp_relevance,
-# nlp_relevance_topk, nlp_priority, nlp_priority_distribution,
-# pipeline_analysis_results) passed the local oracle gate after the
-# change; the rolling_avg_daily precedent applies for the driver
-# row -- pipeline_analysis_results is r4-green and auto-promotes
-# into the r8 window carrying the changed operator, while the
-# r5-green members' own rows auto-promote in round 9 by age
-# (pinning them would push the staleness bound past 4 at 187
-# oracled).
-# ROUND-9 HEADROOM WARNING: at 187 oracled, ceil(O / (50 - pins))
-# stays <= 4 only while O + pin-pressure is low -- with 3 pins the
-# registry can reach 188 oracled, with 2 pins 192, with 1 pin 196.
-# Adding oracled queries in round 9 therefore requires SHRINKING the
-# pin list first (the r8 pins all clear once CORRECTNESS_r08 lands);
-# test_rotation_staleness_bound enforces the arithmetic.
-#
-# Round-9 window: the r8 pins cleared (all three green r8). The 43
-# r5-green queries hit the 4-round staleness bound and auto-promote
-# by age; the round's new oracled certificates
-# (dedup_jaccard_recall_grid_fixed, curation_pipeline_v3,
-# streaming_curation_funnel, nlp_dup_routed_fixed) are never-checked
-# and auto-rank ahead of them, so O reaches 191 and the pin budget is
-# TWO (ceil(191/48) = 4; a third pin pushes the bound to 5). The two
-# pins are this round's changed-plan re-certifications:
-# dedup_jaccard_routed_fixed (tuned_lsh_pairs over-cap buckets now
-# star-degrade instead of dropping; route recording moved to the
-# per-call route_info) and gopher_repetition_flags (passes_repetition
-# gained the dup_line_char_frac <= 0.2 gate in both engines -- value
-# change on every dup-line doc). pii_redaction_fixed's plan also
-# changed (leading \b on the phone pattern + a new negative control
-# in case 7) but is NOT pinned: its oracle recomputes from the same
-# PII_PATTERNS/case constants via redact_sql, so parity is mechanical
-# -- it re-certifies by age in r10. Window arithmetic: 2 pins + 4
-# never-checked + 43 r5 = 49 of 50 slots; the spare goes to the
-# oldest r6 row.
-# ROUND-10 HEADROOM: at 191 oracled, ceil(191 / (50 - P)) <= 4 holds
-# for P <= 2 pins and ONE more oracled registration (192 = 4 * 48);
-# any further growth requires zero pins (196 = 4 * 49) or shrinking
-# the registry. The r6-green cohort hits the staleness bound at r10
-# and auto-promotes by age; candidates deserving an r10 pin if their
-# plans change again: none pre-committed (the r9 pins clear once
-# CORRECTNESS_r09 lands).
-#
-# Round-10 window: the r9 pins cleared (both green r9). The registry
-# was CONSOLIDATED to reopen the window (VERDICT r9 item 1): the three
-# dedup_collapse_*_fixed certificates merged into dedup_collapse_fixed,
-# the four ANN recall certificates into ann_recall_frontier, and
-# pii_scrub into pii_redaction_fixed -- 191 -> 185 oracled with every
-# retired assertion preserved in a survivor's literal oracle; the new
-# simhash_recall_frontier_fixed (the routed-cosine recall-vs-threshold
-# frontier, VERDICT r9 item 3) brings it to 186. Window arithmetic:
-# 2 pins + 3 never-checked (the two merged certificates + the
-# frontier) + 40 r6-green aging out = 45 of 50; the 5 spares go to the
-# oldest r7 rows. The two pins are this round's changed-plan/value
-# re-certifications: pipeline_analysis_results (the duplicate stage
-# now rides the engine's route='auto' default -- the plan gains the
-# linear candidate-volume probe job; output identical at driver sfs,
-# and the exact-plan siblings pin route='exact' explicitly) and
-# pii_redaction_fixed (gained the corpus-grain scrub rows in the
-# pii_scrub merge -- its oracle recomputes mechanically via
-# redact_sql, but the VALUES changed, so the r8-green row no longer
-# reflects the query).
-# ROUND-11 HEADROOM: at 186 oracled, ceil(186 / (50 - P)) <= 4 holds
-# for P <= 3 pins; with 2 pins the registry can grow to 192 oracled
-# (six more registrations), with 3 pins to 188.
-#
-# Round-11 window: the r10 pins cleared (both green r10). One pin:
-# pipeline_analysis_results -- its route probe's expression changed
-# again this round (rsd=0.02 on the HLL count + the strategy-aware
-# dense fence; decision and output unchanged at driver sfs, but the
-# probe job differs). pii_redaction_fixed's plan is untouched and
-# re-certifies by age. New never-checked oracled certificates
-# auto-rank ahead of the aging r7 cohort (41 queries, at the 4-round
-# bound this round): simhash_walkback_fixed (the volume-aware
-# walk-back, VERDICT r10 item 1) and ingest_fixed (VERDICT r10 item
-# 3). Window arithmetic: 1 pin + ~2 never-checked + 41 r7-green = 44
-# of 50; spares go to the oldest r8 rows. Oracled reaches ~188;
-# ceil(188 / 49) = 4 holds with room for 8 more registrations.
-#
-# Round-12 window (VERDICT r11 item 2 -- restore the changed-plan
-# pinning contract): the r11 pin cleared (pipeline_analysis_results
-# green r11). Round 11 changed NINE more plans but pinned only one;
-# the other eight rode the builder's self-run full-registry gate.
-# This round pins the full r11 changed-plan set so the driver
-# independently re-certifies every one of them: nlp_tfidf /
-# nlp_relevance (shared tokenize exchange), dedup_span_removal /
-# dedup_substring_spans (min/max window pass), decontamination_bloom
-# (eval-distinct drop), curation_pipeline_v3 (windowed CCNet cut +
-# fused funnel), semdedup_prune / near_dup_canonicalize (fused CC
-# probe; semdedup_prune is rows-only but carries the changed
-# operator), streaming_stream_join (state sizing -- derived formula
-# this round, r12 plan). Queries whose plans change in round 12
-# are added alongside. Window arithmetic: pins exceed the old
-# every-round budget of 2, which is fine because pins are PER-ROUND
-# by discipline (every past round's list cleared once its green rows
-# landed); test_rotation_staleness_bound now models exactly that --
-# a transient fat pin round cannot push any query past the
-# ceil(O / window) = 4 steady-state bound.
-#
-# Round-12 optimization-session additions (changed plans this round,
-# appended for the same independent re-certification, within the
-# 50//4 pin budget test_rotation_staleness_bound enforces):
-# dedup_simhash (signature bit-sums now 60 codegen'd aggregates),
-# nlp_duplicate_pairs + pipeline_analysis_results (dense doc vectors
-# as per-slot codegen'd sums), dedup_jaccard_routed_fixed (the ONLY
-# oracle that executes tuned_lsh_pairs' F.expr-folded band/aggregate
-# builders end to end). To stay inside the budget, semdedup_prune is
-# dropped from the r11 carry-over (rows-only row; the changed CC
-# probe operator is identically covered by the oracled
-# near_dup_canonicalize pin). Deliberately NOT pinned:
-# dedup_minhash_lsh / dedup_edit_distance (F.expr fold only -- values
-# byte-identical, same aggregate buffers; self-run oracle green),
-# dedup_ngram_jaccard (driver sfs run the untouched exact path; the
-# folded routed path is what the pinned routed_fixed certificate
-# executes), rollup_heavy_hitters_cms (events-scan spread engages
-# above a 4 MB floor -- the sf0.01/0.1 plans are byte-identical).
+# Past rounds' pin lists and window arithmetic are in CHANGES.md.
 # ---------------------------------------------------------------------------
 
 VERIFY_PRIORITY: list[str] = [
@@ -250,7 +106,7 @@ def ordered_registry() -> dict[str, Query]:
     2. oracled queries with NO green driver row in any recorded round
        (never-checked);
     3. oracled queries by ASCENDING last-green round (the cadence
-       rule: a row must never age past 2 rounds);
+       rule above);
     4. everything else (rows-only queries, freshest-green last).
 
     Ages come from the CORRECTNESS_r*.json files the driver writes

@@ -126,8 +126,10 @@ def nlp_dup_planted_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares 6 of 12 terms with cluster 1 (cos .5 -- the negative
     control the threshold must exclude). kept = unique_representatives
     membership (min-id rep per cluster + every standalone,
-    duplicate_detector.py:266-299). The sf1-scale sibling of this
-    check is tools/planted_probe.py (SCALE.md records its runs).
+    duplicate_detector.py:266-299). Its sf1-scale runs are recorded in
+    SCALE.md ("Planted-duplicate invariant runs"), and
+    tests/test_similarity_dedup.py pins the routed path's recall on
+    planted pairs.
     sf_dir unused (fixed corpus)."""
     w, v = _PL_W, _PL_V
     docs = spark.createDataFrame(

@@ -1676,9 +1676,9 @@ def rollup_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE events scan -- the exact counts, total-N, and the
     sketch all derive from the per-(day,user) partial-count
     aggregate, whose exchange Catalyst reuses across the branches
-    (ReusedExchange in PLANS.md). That first exchange is
-    per-(day,user) grain: it scales with distinct keys, like any
-    per-user aggregate. What is BOUNDED is the sketch state the
+    (ReusedExchange in ``tools/profile.py --plans``). That first
+    exchange is per-(day,user) grain: it scales with distinct keys,
+    like any per-user aggregate. What is BOUNDED is the sketch state the
     rollup materializes and every exchange after it -- day x D x W
     cells regardless of row count, ONE md5 per (day,user), not per
     event, D precomputed positions via posexplode (no interpreted
@@ -1887,8 +1887,8 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape), then answer a 3-day range query off the partitioned copy.
     The filter prunes at the DIRECTORY level -- the scan touches 3
     partitions out of the month, which at 100 TB is the difference
-    between reading ~300 GB and reading the full table (PLANS.md shows
-    PartitionFilters on the scan). Oracle: the same aggregate off the
+    between reading ~300 GB and reading the full table (the plan from
+    ``tools/profile.py --plans`` shows PartitionFilters on the scan). Oracle: the same aggregate off the
     raw unpartitioned table -- layout changes bytes read, never
     results."""
     from conversation_analysis_tools_spark.catalog import staging_dir

@@ -55,8 +55,7 @@ def test_connected_components_empty(spark):
 
     edges = spark.createDataFrame([], schema="id1 bigint, id2 bigint")
     assert C.connected_components(edges).count() == 0
-    # distributed and star paths must also tolerate zero edges
-    assert C.connected_components(edges, strategy="distributed").count() == 0
+    # the star path must also tolerate zero edges
     assert C.connected_components(edges, strategy="star").count() == 0
 
 

@@ -111,21 +111,26 @@ def test_exact_dup_collapse_matches_direct(spark, sample_docs):
 
 
 def test_cc_strategies_agree(spark):
-    # the driver-side union-find and the distributed min-label loop
-    # must produce identical components
+    # the driver-side union-find and star contraction must produce
+    # identical components
     edges = spark.createDataFrame(
         [(5, 9), (9, 2), (11, 12), (3, 4), (4, 2)], "id1 long, id2 long"
     )
     local = sorted(map(tuple, connected_components(edges, strategy="local").collect()))
-    dist = sorted(
-        map(tuple, connected_components(edges, strategy="distributed").collect())
-    )
-    assert local == dist
     comp = dict(local)
     assert comp[5] == comp[9] == comp[2] == comp[3] == comp[4] == 2
     assert comp[11] == comp[12] == 11
     star = sorted(map(tuple, connected_components(edges, strategy="star").collect()))
     assert local == star
+
+
+def test_cc_unknown_strategy_raises(spark):
+    import pytest
+
+    edges = spark.createDataFrame([(1, 2)], "id1 long, id2 long")
+    for strategy in ("distributed", "min-label"):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            connected_components(edges, strategy=strategy)
 
 
 def test_cc_star_random_parity(spark):
@@ -176,14 +181,6 @@ def test_cc_star_high_diameter(spark):
     from conversation_analysis_tools_spark.operators import components as C
 
     assert C.LAST_STAR_ROUNDS <= 12  # logarithmic, not O(diameter)
-    # min-label advances the minimum ONE hop per round, so 12 rounds
-    # cannot close a 199-diameter path -- and that must now be LOUD
-    # (silent partial labels would make downstream dedup keep
-    # duplicates; review round 8)
-    import pytest
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, strategy="distributed", max_iter=12)
 
 
 def test_cc_star_raises_at_cap(spark):
@@ -1084,25 +1081,6 @@ def test_tuned_lsh_band_solver_values(spark):
         assert D.LAST_TUNED_BANDS == (want_b, 2 * want_b), t
     with pytest.raises(ValueError, match="threshold"):
         D.tuned_lsh_pairs(arrs, 1.0)
-
-
-def test_cc_distributed_confirming_round_boundary(spark):
-    """A 5-node path (diameter 4) settles its min-labels in exactly 4
-    propagation rounds: max_iter=4 leaves the loop without an
-    in-loop fixpoint proof and must converge via the free confirming
-    round, while max_iter=3 must raise loudly (review round 8: the
-    distributed path previously returned silently split components
-    at the cap)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    path = spark.range(0, 4).select(
-        F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
-    )
-    ok = connected_components(path, strategy="distributed", max_iter=4).collect()
-    assert {r["component"] for r in ok} == {0} and len(ok) == 5
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, strategy="distributed", max_iter=3)
 
 
 def test_tuned_lsh_seeded_random_parity(spark):

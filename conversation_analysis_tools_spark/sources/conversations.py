@@ -7,16 +7,26 @@ INSERT OR REPLACE in chunks. Spark-first replacement:
 
 * S1 streaming array scan -> ``spark.read.json(multiLine=True)``;
   Spark's Jackson scanner is already incremental per record and
-  distributes across files. No hand-rolled brace parser.
-* S2 platform sniff -> schema probe on the inferred DataFrame
-  (presence of ``chat_messages`` vs ``mapping``).
+  distributes across files. No hand-rolled brace parser. ChatGPT
+  exports are read against a declared schema, never inferred: their
+  ``mapping`` is keyed by node id, so inference makes one struct
+  field per tree node (1,556 fields for 150 conversations, unbounded
+  on a real export) and costs a full scan per read. Claude keeps one
+  inferred read; its fixed field set bounds the schema's width.
+* S2 platform sniff -> the two marker fields (``chat_messages`` vs
+  ``mapping``) read as strings against a two-field schema; a filter
+  plus ``first()`` is one job with no shuffle and no inference.
 * S3 Claude normalize -> ``posexplode(chat_messages)``; order_index =
   array position (uni_parse.py:332).
-* S4 ChatGPT tree flatten -> per-conversation BFS in ``applyInPandas``
+* S4 ChatGPT tree flatten -> per-conversation BFS in ``mapInPandas``
   at ingest only (SURVEY §3.1: keep trees out of the query path);
   order_index = BFS visit position (uni_parse.py:380-421,502).
-* S5 upsert -> ``dropDuplicates(["id"])`` keep-last + atomic
-  overwrite (swap-in parquet; Delta MERGE on a real lake).
+* S5 upsert -> union with the store, keep the newest row per key,
+  write beside the store and swap it in (Delta MERGE on a real lake).
+  The store is read against the batch's schema, not inferred, which
+  starts no job; its column names are first checked from the parquet
+  footers on the driver, so a store that does not match, or whose
+  files cannot be read, raises and is left as it was.
 * content truncated to 100,000 chars at ingest (uni_parse.py:329,
   497-499).
 * timestamps: ISO with Z and unix epochs both normalized to UTC
@@ -83,17 +93,31 @@ def _norm_ts(col):
     return F.to_timestamp(c)
 
 
+# Export schemas declared for the reads that need only these fields.
+# ChatGPT's matches the ingest_fixed oracle's pinned read_json columns
+# (queries/ingest.py); ``mapping`` stays raw JSON text for the flatten.
+_MARKERS_SCHEMA = "chat_messages string, mapping string"
+CHATGPT_EXPORT_SCHEMA = (
+    "conversation_id string, id string, title string, "
+    "create_time double, update_time double, mapping string"
+)
+
+
 def detect_platform(spark: SparkSession, path: str) -> str:
-    """S2: sniff 'claude' vs 'chatgpt' by probing the inferred schema
-    for the marker fields (uni_parse.py:88-123 reads the file head;
-    the schema probe is the distributed equivalent)."""
-    df = spark.read.option("multiLine", "true").json(path)
-    fields = set(df.schema.fieldNames())
-    if "chat_messages" in fields:
-        return "claude"
-    if "mapping" in fields:
-        return "chatgpt"
-    raise ValueError(f"cannot detect platform for {path}: fields={sorted(fields)}")
+    """S2: sniff 'claude' vs 'chatgpt' from the first record carrying a
+    marker field (uni_parse.py:88-123 reads the file head). The markers
+    are read as strings against a declared schema, so the sniff infers
+    nothing and is one job."""
+    row = (
+        spark.read.option("multiLine", "true")
+        .schema(_MARKERS_SCHEMA)
+        .json(path)
+        .where(F.col("chat_messages").isNotNull() | F.col("mapping").isNotNull())
+        .first()
+    )
+    if row is None:
+        raise ValueError(f"cannot detect platform for {path}: no chat_messages or mapping")
+    return "claude" if row["chat_messages"] is not None else "chatgpt"
 
 
 # ---------------------------------------------------------------------------
@@ -105,15 +129,32 @@ def ingest_claude(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]
     """Claude export JSON array -> (conversations, messages)."""
     raw = spark.read.option("multiLine", "true").json(path)
 
+    # optional fields: an export in which no record carries one has no
+    # such column after inference, and it reads as NULL
+    fields = {f.name: f.dataType for f in raw.schema.fields}
+    account = fields.get("account")
+    account_id = (
+        F.col("account.uuid").cast("string")
+        if isinstance(account, StructType) and "uuid" in account.fieldNames()
+        else F.lit(None).cast("string")
+    )
+    summary = F.col("summary") if "summary" in fields else F.lit(None).cast("string")
+    msg = fields["chat_messages"].elementType
+    attachments = (
+        F.col("m.attachments")
+        if isinstance(msg, StructType) and "attachments" in msg.fieldNames()
+        else F.lit(None).cast("string")
+    )
+
     convs = raw.select(
         F.col("uuid").cast("string").alias("id"),
         F.col("name").cast("string").alias("title"),
         F.lit("claude").alias("platform"),
         _norm_ts(F.col("created_at")).alias("created_at"),
         _norm_ts(F.col("updated_at")).alias("updated_at"),
-        F.get_json_object(F.to_json(F.col("account")), "$.uuid").alias("account_id"),
+        account_id.alias("account_id"),
         F.col("uuid").cast("string").alias("original_id"),
-        F.to_json(F.struct(F.col("summary"))).alias("metadata"),
+        F.to_json(F.struct(summary.alias("summary"))).alias("metadata"),
     )
 
     msgs = raw.select(
@@ -129,7 +170,7 @@ def ingest_claude(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]
         _norm_ts(F.col("m.created_at")).alias("created_at"),
         F.lit("claude").alias("model"),  # default model (uni_parse.py:309)
         F.col("order_index").cast("int").alias("order_index"),
-        F.to_json(F.struct(F.col("m.attachments"))).alias("metadata"),
+        F.to_json(F.struct(attachments.alias("attachments"))).alias("metadata"),
     )
     return convs, msgs
 
@@ -174,9 +215,9 @@ def _bfs_flatten(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """
     for pdf in pdf_iter:
         out = []
-        for _, row in pdf.iterrows():
-            conv_id = row["conv_id"]
-            mapping = json.loads(row["mapping_json"]) or {}
+        times = []  # message create_time, converted once per batch
+        for conv_id, mapping_json in zip(pdf["conv_id"], pdf["mapping_json"]):
+            mapping = json.loads(mapping_json) or {}
             roots = [k for k, v in mapping.items() if not v.get("parent")]
             queue = deque(sorted(roots))
             seen: set[str] = set()
@@ -200,7 +241,7 @@ def _bfs_flatten(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     for p in parts
                     if p
                 )
-                ct = msg.get("create_time")
+                times.append(msg.get("create_time") or None)
                 meta = msg.get("metadata") or {}
                 out.append(
                     {
@@ -216,61 +257,43 @@ def _bfs_flatten(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                         ),
                         "role": author,  # raw author.role (uni_parse.py:447)
                         "content": text[:MAX_CONTENT_CHARS],
-                        "created_at": (
-                            pd.to_datetime(ct, unit="s", utc=True).tz_localize(None)
-                            if ct
-                            else None
-                        ),
                         "model": meta.get("model_slug") or "unknown",  # uni_parse.py:477-480
                         "order_index": idx,
                         "metadata": json.dumps({"node_id": node_id}),
                     }
                 )
                 idx += 1
-        yield pd.DataFrame(
-            out,
-            columns=[f.name for f in MESSAGES_SCHEMA.fields],
-        )
+        batch = pd.DataFrame(out, columns=[f.name for f in MESSAGES_SCHEMA.fields])
+        # unix seconds; a missing time is NaN -> NaT -> NULL
+        batch["created_at"] = pd.to_datetime(
+            pd.Series(times, dtype="float64"), unit="s", utc=True
+        ).dt.tz_localize(None)
+        yield batch
 
 
 def ingest_chatgpt(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    """ChatGPT export JSON array -> (conversations, messages)."""
-    raw = spark.read.option("multiLine", "true").json(path)
-
-    # exports carry the id as conversation_id and/or id; use whichever
-    # exists (schema-on-read: referencing a missing field won't resolve)
-    fields = set(raw.schema.fieldNames())
-    id_cols = [F.col(c) for c in ("conversation_id", "id") if c in fields]
-    conv_id = F.coalesce(*id_cols) if len(id_cols) > 1 else id_cols[0]
+    """ChatGPT export JSON array -> (conversations, messages), both from
+    one read against ``CHATGPT_EXPORT_SCHEMA``. ``mapping`` stays raw
+    JSON text, so the flatten sees real dicts for non-string content
+    parts; an inferred struct would coerce a heterogeneous parts array
+    to array<string> and make ingested content depend on the export's
+    formatting (caught by the ingest_fixed oracle, round 11)."""
+    raw = spark.read.option("multiLine", "true").schema(CHATGPT_EXPORT_SCHEMA).json(path)
+    # exports carry the id as conversation_id and/or id
+    conv_id = F.coalesce(F.col("conversation_id"), F.col("id"))
 
     convs = raw.select(
-        conv_id.cast("string").alias("id"),
-        F.col("title").cast("string").alias("title"),
+        conv_id.alias("id"),
+        "title",
         F.lit("chatgpt").alias("platform"),
         F.to_timestamp(F.from_unixtime(F.col("create_time"))).alias("created_at"),
         F.to_timestamp(F.from_unixtime(F.col("update_time"))).alias("updated_at"),
         F.lit(None).cast("string").alias("account_id"),  # always NULL (uni_parse.py:367)
-        conv_id.cast("string").alias("original_id"),
+        conv_id.alias("original_id"),
         # minimal metadata {"id": conv_id} (uni_parse.py:369)
-        F.to_json(F.struct(conv_id.cast("string").alias("id"))).alias("metadata"),
+        F.to_json(F.struct(conv_id.alias("id"))).alias("metadata"),
     )
-
-    # The tree is re-read with mapping pinned to StringType so the
-    # flatten parses the RAW JSON (real dicts for non-string content
-    # parts). Round-trip through the inferred struct + to_json is
-    # LOSSY here: inference coerces a heterogeneous parts array to
-    # array<string>, turning object parts into whitespace-preserving
-    # source spans -- ingested content would depend on export file
-    # formatting (caught by the ingest_fixed oracle, round 11).
-    trees = (
-        spark.read.option("multiLine", "true")
-        .schema("conversation_id string, id string, mapping string")
-        .json(path)
-        .select(
-            F.coalesce(F.col("conversation_id"), F.col("id")).alias("conv_id"),
-            F.col("mapping").alias("mapping_json"),
-        )
-    )
+    trees = raw.select(conv_id.alias("conv_id"), F.col("mapping").alias("mapping_json"))
     msgs = trees.mapInPandas(_bfs_flatten, schema=MESSAGES_SCHEMA)
     return convs, msgs
 
@@ -289,11 +312,44 @@ def ingest_file(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
+def _store_columns(spark: SparkSession, fs, root) -> list[str] | None:
+    """Column names of the parquet store at Hadoop path ``root``, from
+    the footer of every data file, read on the driver (no Spark job);
+    None when it holds no data file. Names starting with ``_`` or ``.``
+    are skipped, as Spark's file listing skips them. Raises when a
+    footer cannot be read or two files disagree."""
+    if not fs.exists(root):
+        return None
+    parquet = spark.sparkContext._jvm.org.apache.parquet.hadoop
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    pending, names = [root], None
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            p = st.getPath()
+            if p.getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                pending.append(p)
+                continue
+            reader = parquet.ParquetFileReader.open(
+                parquet.util.HadoopInputFile.fromPath(p, conf)
+            )
+            try:
+                fields = reader.getFileMetaData().getSchema().getFields()
+                cols = [fields.get(i).getName() for i in range(fields.size())]
+            finally:
+                reader.close()
+            if names is not None and cols != names:
+                raise ValueError(f"store {root}: {p} has columns {cols}, not {names}")
+            names = cols
+    return names
+
+
 def upsert_parquet(
     df: DataFrame, path: str, key: str = "id", latest_by: str | None = None
 ) -> None:
     """INSERT OR REPLACE semantics on parquet: union with the existing
-    table (if any), keep the newest row per key, atomic overwrite.
+    table (if any), keep the newest row per key, overwrite.
     (On a production lake this is a Delta/Iceberg MERGE; plain parquet
     needs the read-union-rewrite.)
 
@@ -305,16 +361,29 @@ def upsert_parquet(
     (e.g. ``order_index`` for re-exported conversations, where the
     last occurrence in file order carries the highest index). Without
     ``latest_by``, duplicate keys WITHIN one batch resolve
-    arbitrarily -- pass it whenever a batch can carry duplicate keys."""
+    arbitrarily -- pass it whenever a batch can carry duplicate keys.
+
+    A store whose column names differ from the batch's, or whose file
+    footers cannot be read, raises before anything is written; a write
+    that fails leaves the store as it was."""
     from pyspark.sql.window import Window
 
     spark = df.sparkSession
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    root = hadoop_path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     tagged = df.withColumn("_src", F.lit(1))
-    try:
-        existing = spark.read.parquet(path).withColumn("_src", F.lit(0))
-        merged = tagged.unionByName(existing)
-    except Exception:  # no existing table
+    stored = _store_columns(spark, fs, root)
+    if stored is None:
         merged = tagged
+    elif sorted(stored) != sorted(df.columns):
+        raise ValueError(
+            f"store {path} has columns {stored}, the batch has {df.columns}"
+        )
+    else:
+        # names match; reading with the batch's schema infers nothing
+        existing = spark.read.schema(df.schema).parquet(path)
+        merged = tagged.unionByName(existing.withColumn("_src", F.lit(0)))
     order = [F.desc("_src")] + (
         [F.desc(latest_by)] if latest_by is not None else []
     )
@@ -324,7 +393,14 @@ def upsert_parquet(
         .where(F.col("_rn") == 1)
         .drop("_src", "_rn")
     )
-    merged.write.mode("overwrite").parquet(path)
+    # Written beside the store, then swapped in. Overwriting the path
+    # being read deletes the old files before the job runs; only AQE's
+    # eager shuffle stage would have read them by then.
+    staged = hadoop_path(root.getParent(), f".{root.getName()}.upsert")
+    merged.write.mode("overwrite").parquet(staged.toString())
+    fs.delete(root, True)
+    if not fs.rename(staged, root):
+        raise OSError(f"cannot move the upserted store {staged} to {path}")
 
 
 def read_json_with_repair(

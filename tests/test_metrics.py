@@ -81,9 +81,10 @@ def test_bench_emit_line_stays_parseable_at_any_size():
     line). The emit contract: valid JSON, under 1800 bytes, totals
     always present -- even with 3x today's headline count."""
     import json as _json
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
     # today's size, with the jobs/stages census riding the line

@@ -13,7 +13,8 @@ thresholds and selectivities at 10x the rows. NOT for correctness
 oracles (the driver's sf0.01 gate stays canonical); this exists so the
 SCALE.md sweep spans a true 1000x (sf0.001 -> sf1) instead of 100x.
 
-Usage: python tools/gen_testdata.py [--sf 1.0] [--out /root/repo/testdata_sf1]
+Usage: python tools/gen_testdata.py [--sf 1.0] [--out DIR]
+(``--out`` defaults to ``testdata_sf1/`` at the repo root.)
 Deterministic (numpy PCG64 seed 42); ~170 MB at sf1.
 
 Round-9 extensions (VERDICT r8 items 1 and 4):
@@ -68,7 +69,12 @@ def write(out_dir: str, name: str, table: pa.Table) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=1.0)
-    ap.add_argument("--out", default="/root/repo/testdata_sf1")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testdata_sf1"
+        ),
+    )
     ap.add_argument("--docs-only", action="store_true")
     ap.add_argument("--events-only", action="store_true")
     ap.add_argument(

@@ -68,12 +68,7 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every table of the star schema as a DataFrame."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")  # oracle tz parity
-    out = {}
-    for name in TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        out[name] = _read_events(spark, path) if name == "events" else spark.read.parquet(path)
-    return out
+    return {name: table(spark, name, sf_dir) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:

@@ -62,11 +62,6 @@ def avg4_sql(scaled_sum: str, scaled_count: str) -> str:
     )
 
 
-#: SQL fragment: exact integer-cent sum of a 2-decimal double column.
-def cents_sum_sql(col: str) -> str:
-    return f"sum(CAST(round(({col}) * 100) AS BIGINT))"
-
-
 def cents(col: Column | str) -> Column:
     """Exact integer cents of a 2-decimal currency double."""
     c = F.col(col) if isinstance(col, str) else col

@@ -29,6 +29,8 @@ import math
 
 from pyspark.sql import DataFrame
 
+from conversation_analysis_tools_spark.decisions import record
+
 #: Inputs below this estimated size are never spread: the derived work
 #: on a sub-half-MB relation is cheaper than scheduling a full-width
 #: shuffle (and the fixed-corpus certificate plans stay untouched).
@@ -63,10 +65,11 @@ def spread_input(
         )
     except Exception:  # noqa: BLE001 -- estimation must never kill a plan
         return df
-    if est < min_bytes:
-        return df
-    # the JVM's parsed value, so a user's "128m" reads as 128 MiB
-    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    if math.ceil(est / max_pb) >= target:
-        return df
-    return df.repartition(target, key)
+    # the JVM's parsed value, so a user's "128m" reads as 128 MiB; read
+    # only past the floor, where the split estimate matters
+    spread = est >= min_bytes and math.ceil(
+        est / spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    ) < target
+    record("spread_input", "spread" if spread else "identity",
+           est_bytes=est, min_bytes=min_bytes, target=target)
+    return df.repartition(target, key) if spread else df

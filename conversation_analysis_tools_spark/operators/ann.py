@@ -65,12 +65,6 @@ def hyperplane_bucket_expr(
     return F.aggregate(bits, F.lit(0), lambda a, b: a + b).cast("int")
 
 
-def with_buckets(
-    emb: DataFrame, dim: int, vec_col: str = "embedding", n_planes: int = DEFAULT_N_PLANES
-) -> DataFrame:
-    return emb.withColumn("bucket", hyperplane_bucket_expr(vec_col, dim, n_planes))
-
-
 def _ranked_topk(
     sims, k: int, id_col: str, query_id_col: str, dedup: bool = False
 ):
@@ -494,15 +488,6 @@ def pq_train(
     return np.stack(
         [_lloyd(X[:, s * sub : (s + 1) * sub], k, seed=_SEED + s) for s in range(m)]
     )
-
-
-def _normalized(vec_col: str, dim: int):
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    return F.transform(F.col(vec_col), lambda x: x / F.greatest(nrm, F.lit(1e-12)))
 
 
 def pq_encode(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import record
 from conversation_analysis_tools_spark.operators.cache import track
 
 
@@ -36,10 +37,6 @@ from conversation_analysis_tools_spark.operators.cache import track
 #: distributed join rounds. Above the limit star contraction runs
 #: (scales to any size).
 SMALL_GRAPH_LIMIT = 500_000
-
-#: Rounds the most recent _cc_star call ran (incl. the fixpoint-
-#: confirming one) -- probe/test instrumentation, not an API.
-LAST_STAR_ROUNDS = 0
 
 
 def connected_components(
@@ -65,6 +62,7 @@ def connected_components(
     # join would otherwise re-materialize the (often expensive)
     # edge-producing plan -- e.g. the all-pairs similarity join
     edges = track(edges)
+    requested, head, rounds = strategy, None, None
     if strategy == "auto":
         # Fused probe+collect (one materialization, not two): take up
         # to LIMIT+1 edge rows. At or under the limit those rows ARE
@@ -75,16 +73,21 @@ def connected_components(
         # incrementally, so huge edge plans often probe FEWER
         # partitions than the old limit+count job did.
         head = edges.select(src, dst).limit(SMALL_GRAPH_LIMIT + 1).collect()
-        if len(head) <= SMALL_GRAPH_LIMIT:
-            return _cc_local_rows(head, edges, src)
-    elif strategy == "local":
-        return _cc_local(edges, src, dst)
-    # max_iter=None -> _cc_star self-sizes its round cap from the
-    # node count (a fixed cap would be too tight past ~10^8 nodes); an
-    # explicit max_iter is honored verbatim so round-bound certificates
-    # (cc_star_chain_fixed) keep their teeth, and hitting it raises
-    # rather than returning silently-split components
-    return _cc_star(edges, src, dst, max_iter)
+        strategy = "local" if len(head) <= SMALL_GRAPH_LIMIT else "star"
+    if strategy == "local":
+        out = (_cc_local(edges, src, dst) if head is None
+               else _cc_local_rows(head, edges, src))
+    else:
+        # max_iter=None -> _cc_star self-sizes its round cap from the
+        # node count (a fixed cap would be too tight past ~10^8
+        # nodes); an explicit max_iter is honored verbatim so
+        # round-bound certificates (cc_star_chain_fixed) keep their
+        # teeth, and hitting it raises rather than returning
+        # silently-split components
+        out, rounds = _cc_star(edges, src, dst, max_iter)
+    record("connected_components", strategy, requested=requested,
+           probe_edges=None if head is None else len(head), star_rounds=rounds)
+    return out
 
 
 def _cc_local(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -149,7 +152,7 @@ def _cc_star(
     src: str = "id1",
     dst: str = "id2",
     max_iter: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star contraction (Kiveris et
     al., SoCC 2014) -- O(log n) rounds on any topology, so long
     chains don't stall it the way they stall min-label propagation.
@@ -167,9 +170,9 @@ def _cc_star(
     fingerprint fixpoint each component is exactly the star of its
     minimum, and (child -> root) edges ARE the label table. Nodes
     are captured up front so self-loop-only and already-root nodes
-    still label themselves.
+    still label themselves. Returns (labels, rounds run, counting the
+    fixpoint-confirming one).
     """
-    global LAST_STAR_ROUNDS
     nodes = (
         edges.select(F.col(src).alias("id"))
         .union(edges.select(F.col(dst).alias("id")))
@@ -247,7 +250,6 @@ def _cc_star(
         if _edge_fingerprint(confirm) == fp:
             converged = True
             cur = confirm
-    LAST_STAR_ROUNDS = rounds
     if not converged:
         # LOUD, not silently wrong: at the cap the edge set can still
         # contain chains, and groupBy-min labels would split one
@@ -262,7 +264,7 @@ def _cc_star(
     child = cur.groupBy(F.col("hi").alias("id")).agg(F.min("lo").alias("component"))
     return nodes.join(child, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
-    )
+    ), rounds
 
 
 def clusters(components: DataFrame, min_size: int = 2) -> DataFrame:

@@ -22,12 +22,12 @@ Design constraints:
 from __future__ import annotations
 
 import logging
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from conversation_analysis_tools_spark.decisions import record
 from conversation_analysis_tools_spark.operators.cache import track
 
 _LOG = logging.getLogger(__name__)
@@ -154,28 +154,6 @@ N_BANDS = 4  # 4 rows per band
 #: Double-hashing modulus (Mersenne prime 2^31 - 1). All arithmetic
 #: below stays under 2^35 -- safe in ANSI BIGINT on both engines.
 MINHASH_P = 2_147_483_647
-
-#: Per-THREAD routing record (ADVICE r8: module globals were racy
-#: under concurrent query execution -- an interleaved call on another
-#: thread could overwrite the record between plan construction and a
-#: certificate's check). ``LAST_JACCARD_ROUTE`` / ``LAST_TUNED_BANDS``
-#: remain readable as module attributes via ``__getattr__`` below, but
-#: each thread sees only its own calls; race-free callers (the routing
-#: certificate) should prefer the per-call ``route_info`` out-param of
-#: :func:`ngram_jaccard_pairs`.
-_ROUTE_STATE = threading.local()
-
-
-def __getattr__(name: str):
-    """PEP 562 shim: LAST_JACCARD_ROUTE ('exact'|'minhash'|None before
-    the first call on this thread) and LAST_TUNED_BANDS ((bands,
-    hashes) tuple) read the THREAD-LOCAL record."""
-    if name == "LAST_JACCARD_ROUTE":
-        return getattr(_ROUTE_STATE, "route", None)
-    if name == "LAST_TUNED_BANDS":
-        return getattr(_ROUTE_STATE, "bands", None)
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-
 
 def km_u_step(digest_col):
     """Kirsch-Mitzenmacher base/step pair from ONE md5 digest column:
@@ -398,7 +376,7 @@ def tuned_lsh_pairs(
         )
     b = min(256, max(4, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - t * t))))
     k = 2 * b
-    _ROUTE_STATE.bands = (b, k)
+    record("tuned_lsh_pairs", b, hashes=k, threshold=t, recall_target=recall_target)
     sh = sh_arr.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
     digested = sh.select(
         F.col(id_col), F.md5(F.col("shingle").cast("binary")).alias("_d")
@@ -1206,7 +1184,6 @@ def ngram_jaccard_pairs(
     collapse: str = "auto",
     route: str = "auto",
     route_budget: int = 32_000_000,
-    route_info: dict | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard >= threshold via inverted shingle index:
     only pairs sharing a shingle are generated, length-filtered
@@ -1266,16 +1243,12 @@ def ngram_jaccard_pairs(
     linear in corpus size), then the same exact array-intersect
     verify -- every emitted pair carries its TRUE Jaccard and the
     trade is the bounded recall near the threshold (measured 27/27 at
-    sf1). Routing decisions are recorded three ways (ADVICE r8): a
-    WARNING log line when 'auto' swaps the exact operator for the
-    approximate path (visible in driver logs, not just a global), the
-    thread-local :data:`LAST_JACCARD_ROUTE` for tests, and -- the
-    race-free channel certificates should use -- the ``route_info``
-    out-param: pass a dict and it is filled in place with
-    ``{'requested': ..., 'route': ..., 'probe_rows': ...,
-    'route_budget': ..., 'bands': ...}`` for THIS call. Callers who
-    need the exact contract unconditionally pin ``route='exact'`` and
-    own the quadratic cost the probe would have refused.
+    sf1). The route is recorded via ``decisions.record`` (gate
+    ``ngram_jaccard_pairs``; the band solve as ``tuned_lsh_pairs``),
+    and 'auto' logs a WARNING when it swaps in the approximate path.
+    Callers who need the exact contract unconditionally pin
+    ``route='exact'`` and own the quadratic cost the probe would have
+    refused.
     """
     if route not in ("auto", "exact", "minhash"):
         raise ValueError(f"route must be auto|exact|minhash, got {route!r}")
@@ -1308,7 +1281,6 @@ def ngram_jaccard_pairs(
             .first()["rows"]
         )
         route = "minhash" if (est or 0.0) > route_budget else "exact"
-        _ROUTE_STATE.probe_rows = est
         if route == "minhash":
             _LOG.warning(
                 "ngram_jaccard_pairs: auto-routing to tuned-LSH "
@@ -1319,7 +1291,8 @@ def ngram_jaccard_pairs(
                 est or 0.0,
                 route_budget,
             )
-    _ROUTE_STATE.route = route
+    record("ngram_jaccard_pairs", route, requested=requested,
+           probe_rows=est, route_budget=route_budget)
     if route == "minhash":
         rep_pairs = tuned_lsh_pairs(rep_arrs, threshold, id_col)
     else:
@@ -1347,14 +1320,6 @@ def ngram_jaccard_pairs(
                 "jaccard"
             ),
         ).where(F.col("jaccard") >= threshold)
-    if route_info is not None:
-        route_info.update(
-            requested=requested,
-            route=route,
-            probe_rows=est,
-            route_budget=route_budget,
-            bands=getattr(_ROUTE_STATE, "bands", None) if route == "minhash" else None,
-        )
     if members is None:
         return rep_pairs
     return _expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
@@ -1475,22 +1440,23 @@ def _skew_safe_engaged(df: DataFrame, skew_safe: bool | None) -> bool:
     """Resolve the span/line family's ``skew_safe`` tri-state: explicit
     True/False pins the plan; None sizes the decision from Catalyst's
     input-size estimate (driver-side metadata, no job)."""
-    if skew_safe is not None:
-        return skew_safe
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 -- estimation must never kill the plan
-        return False
-    # Catalyst reports spark.sql.defaultSizeInBytes (Long.MaxValue)
-    # for relations it cannot size (in-memory/RDD-backed inputs, e.g.
-    # test corpora): that is "unknown", not "huge" -- keep the
-    # one-pass plan there rather than pessimizing every
-    # createDataFrame input.
-    if est >= 1 << 60:
-        return False
-    return est > SKEW_SAFE_MIN_BYTES
+    engaged, est = skew_safe, None
+    if skew_safe is None:
+        try:
+            est = int(
+                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+            )
+        except Exception:  # noqa: BLE001 -- estimation must never kill the plan
+            pass
+        # Catalyst reports spark.sql.defaultSizeInBytes (Long.MaxValue)
+        # for relations it cannot size (in-memory/RDD-backed inputs, e.g.
+        # test corpora): that is "unknown", not "huge" -- keep the
+        # one-pass plan there rather than pessimizing every
+        # createDataFrame input.
+        engaged = est is not None and SKEW_SAFE_MIN_BYTES < est < 1 << 60
+    record("skew_safe", "twin" if engaged else "direct", requested=skew_safe,
+           est_bytes=est, min_bytes=SKEW_SAFE_MIN_BYTES)
+    return engaged
 
 
 def _salted_cross_flags(
@@ -1851,8 +1817,12 @@ def semdedup_prune(
     )
     from conversation_analysis_tools_spark.operators.ann import _centroid_dist_array
 
+    n_vectors = None  # stays None when the caller pins the path
     if dense_path is None:
-        dense_path = emb.count() > 2048
+        n_vectors = emb.count()
+        dense_path = n_vectors > 2048
+    record("semdedup_prune", "dense" if dense_path else "expression",
+           n_vectors=n_vectors)
 
     from conversation_analysis_tools_spark.operators.components import (
         connected_components,

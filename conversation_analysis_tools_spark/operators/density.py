@@ -50,6 +50,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark import fitcache
+from conversation_analysis_tools_spark.decisions import record
+
 #: Minimum exact-dup fraction for the collapse plan to pay for the
 #: extra stages it adds around the pair join (approx_count_distinct
 #: probe, so an absolute floor of 16 also absorbs HLL estimation
@@ -119,31 +122,29 @@ def dup_density_decision(
         )
         sig_col = "_tsig"
     key, file_backed = _memo_key(member)
-    if key is not None and key in _DECISION_CACHE:
-        return _DECISION_CACHE[key]
     key_repr = repr(("dup_density", key)) if file_backed else None
-    if key_repr is not None:
-        from conversation_analysis_tools_spark import fitcache
-
+    decision = _DECISION_CACHE.get(key) if key is not None else None
+    source, n, distinct = "memo", None, None  # counts only from a probe
+    if decision is None and key_repr is not None:
         hit = fitcache._disk_load(key_repr)
         if isinstance(hit, bool):
-            _DECISION_CACHE[key] = hit
-            return hit
-    stats = member.agg(
-        F.count("*").alias("n"),
-        # rsd 0.01: keeps the HLL's 1-sigma error ~5x below the 5%
-        # decision threshold, so a dup-free corpus never trips it
-        F.approx_count_distinct(sig_col, 0.01).alias("nd"),
-    ).first()
-    decision = stats["n"] - stats["nd"] > max(
-        16, DUP_COLLAPSE_MIN_FRAC * stats["n"]
-    )
-    if key is not None:
-        if len(_DECISION_CACHE) >= _DECISION_CACHE_MAX:
-            _DECISION_CACHE.pop(next(iter(_DECISION_CACHE)))
-        _DECISION_CACHE[key] = decision
-    if key_repr is not None:
-        from conversation_analysis_tools_spark import fitcache
-
-        fitcache._disk_store(key_repr, decision)
+            decision = _DECISION_CACHE[key] = hit
+            source = "disk"
+    if decision is None:
+        source = "probe"
+        n, distinct = member.agg(
+            F.count("*").alias("n"),
+            # rsd 0.01: keeps the HLL's 1-sigma error ~5x below the 5%
+            # decision threshold, so a dup-free corpus never trips it
+            F.approx_count_distinct(sig_col, 0.01).alias("nd"),
+        ).first()
+        decision = n - distinct > max(16, DUP_COLLAPSE_MIN_FRAC * n)
+        if key is not None:
+            if len(_DECISION_CACHE) >= _DECISION_CACHE_MAX:
+                _DECISION_CACHE.pop(next(iter(_DECISION_CACHE)))
+            _DECISION_CACHE[key] = decision
+        if key_repr is not None:
+            fitcache._disk_store(key_repr, decision)
+    record("dup_density", "collapse" if decision else "direct", source=source,
+           n=n, distinct=distinct, min_frac=DUP_COLLAPSE_MIN_FRAC)
     return decision

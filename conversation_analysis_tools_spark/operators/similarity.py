@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import record
 from conversation_analysis_tools_spark.operators import tfidf as T
 
 
@@ -105,7 +106,8 @@ def pairwise_cosine(
         tf = tf.join(
             F.broadcast(doc_freq.where(F.col("df") <= max_df)), "term", "left_semi"
         )
-    vocab = None
+    requested, vocab, n_docs, per_doc = strategy, None, None, None
+    terms = None  # distinct terms the probe saw, capped at the limit + 1
     if strategy == "auto":
         from conversation_analysis_tools_spark.operators.cache import track
 
@@ -120,7 +122,8 @@ def pairwise_cosine(
         probe = (
             tf.select("term").distinct().limit(SMALL_VOCAB_LIMIT + 1).collect()
         )
-        if len(probe) <= SMALL_VOCAB_LIMIT:
+        terms, strategy = len(probe), "inverted"
+        if terms <= SMALL_VOCAB_LIMIT:
             # Tentatively dense: build (and persist) the vectors, and
             # let their count -- needed for grid blocking anyway --
             # double as the DENSE_MAX_N fence (even a tiny vocabulary
@@ -133,11 +136,14 @@ def pairwise_cosine(
             per_doc = track(_dense_doc_vectors(tf, id_col, vocab))
             n_docs = per_doc.count()
             if n_docs <= DENSE_MAX_N:
-                return grid_blocked_pairs(per_doc, threshold, n=n_docs)
-            per_doc.unpersist()
-            strategy = "inverted"
-        else:
-            strategy = "inverted"
+                strategy = "dense"
+            else:
+                per_doc.unpersist()
+                per_doc = None
+    record("pairwise_cosine", strategy, requested=requested, terms=terms,
+           n_docs=n_docs)
+    if per_doc is not None:
+        return grid_blocked_pairs(per_doc, threshold, n=n_docs)
     if strategy == "dense":
         return _pairwise_cosine_dense(tf, id_col, threshold, vocab)
     return _pairwise_cosine_inverted(tf, id_col)
@@ -163,12 +169,12 @@ def _dense_doc_vectors(
     order exactly like the old F.aggregate, so every float is
     bit-identical."""
     if not vocab:
-        # empty vocabulary <=> empty tf (vocab is its distinct terms,
-        # e.g. max_df dropped every term): no docs, no vectors
+        # empty vocabulary: no slots, so no vectors whatever tf holds
+        # (e.g. max_df dropped every term); same (_id, v) schema
         return tf.select(
             F.col(id_col).alias("_id"),
             F.array(F.lit(0.0)).alias("v"),
-        )
+        ).where(F.lit(False))
     vcols = [
         F.sum(F.when(F.col("term") == t, F.col("tf"))).alias(f"_s{i}")
         for i, t in enumerate(vocab)
@@ -499,7 +505,6 @@ def duplicate_pairs(
     collapse: str = "auto",
     route: str = "auto",
     route_budget: int = 32_000_000,
-    route_info: dict | None = None,
     cand_budget: int | None = None,
 ) -> DataFrame:
     """N17: pairs with cosine >= threshold (default 0.8,
@@ -559,11 +564,11 @@ def duplicate_pairs(
     shares a term (500k 55-word docs over a 4096-word vocabulary put
     ~52% of all pairs in the inverted index: ~1e11 candidate rows --
     measured killing the JVM through a 126 GiB scratch), which is why
-    the engine default must not be the exact plan. The routed
-    decision is WARN-logged and recorded in the ``route_info``
-    out-param; ``max_df`` pins the exact plan (the routed path has no
-    df filter), with ``route_info['requested']`` still reporting the
-    caller's actual request.
+    the engine default must not be the exact plan. The route is
+    recorded via ``decisions.record`` (gate ``duplicate_pairs``, with
+    ``requested`` the caller's own request), and 'auto' logs a
+    WARNING when it swaps in the routed path. ``max_df`` pins the
+    exact plan (the routed path has no df filter).
     """
     import logging
 
@@ -668,19 +673,12 @@ def duplicate_pairs(
                     "dense pairs" if dense_ok else "inverted-index rows",
                     eff_budget,
                 )
-        if route_info is not None:
-            route_info.update(
-                requested=requested, route=rt, probe_rows=est,
-                route_budget=route_budget, dense_feasible=dense_ok,
-                n_docs=n_docs if dense_ok is not None else None,
-            )
+        record("duplicate_pairs", rt, requested=requested, probe_rows=est,
+               route_budget=route_budget, dense_feasible=dense_ok,
+               n_docs=n_docs if dense_ok is not None else None)
         if rt == "simhash":
-            # route_info doubles as tuning_info so the solved (r, b)
-            # and expected recall ride the routing record (ADVICE r9:
-            # a clamped low-threshold solve must be visible at the
-            # call site, not just in a log)
             return tuned_simhash_pairs(
-                tf_df, threshold, id_col, tuning_info=route_info,
+                tf_df, threshold, id_col,
                 n_docs=n_docs if requested == "auto" else None,
                 cand_budget=cand_budget,
             )
@@ -854,7 +852,6 @@ def tuned_simhash_pairs(
     recall_target: float = 0.98,
     r: int | None = None,
     max_bucket: int = 20,
-    tuning_info: dict | None = None,
     n_docs: int | None = None,
     cand_budget: int | None = None,
 ) -> DataFrame:
@@ -878,8 +875,9 @@ def tuned_simhash_pairs(
     (certified by simhash_recall_frontier_fixed); t = 0.7 solves at
     (r=14, b=232). Only when every ladder step clamps (t below
     ~0.6) does the last step run at 256 bands, and then the degraded
-    expected recall is WARN-logged and reported in ``tuning_info``
-    instead of failing silently (ADVICE r9). An explicit ``r`` pins
+    expected recall is WARN-logged. The solve is recorded via
+    ``decisions.record`` (gate ``tuned_simhash_pairs``: choice ``r``,
+    with ``b`` and ``est_recall``). An explicit ``r`` pins
     the band length (the pre-r10 behavior, clamp included). The band
     length sets the random-pair collision floor: near-orthogonal
     pairs (p ~ 0.5) collide w.p. b * 2^-r, so candidates stay
@@ -930,8 +928,8 @@ def tuned_simhash_pairs(
             max(4, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - p**r))),
         )
         est_recall = 1.0 - (1.0 - p**r) ** b
-    if tuning_info is not None:
-        tuning_info.update(r=r, b=b, est_recall=est_recall)
+    record("tuned_simhash_pairs", r, b=b, est_recall=est_recall,
+           n_docs=n_docs, cand_budget=cand_budget)
     if est_recall < recall_target:
         logging.getLogger(__name__).warning(
             "tuned_simhash_pairs: the 256-band clamp binds at threshold "

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from conversation_analysis_tools_spark.catalog import table as _catalog_table
+from conversation_analysis_tools_spark.decisions import capture
 from conversation_analysis_tools_spark.operators import dedup as D
 from conversation_analysis_tools_spark.operators.cache import track
 from conversation_analysis_tools_spark.queries.registry import register
@@ -262,12 +263,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~121M rows and the route engages (the routed path's own
     correctness is pinned by dedup_jaccard_routed_fixed, where
     routing provably engages under the driver's oracle gate). A
-    LAST_JACCARD_ROUTE == 'exact' guard here was considered and
-    REJECTED: the sf1 oracle run deliberately executes the ROUTED
-    plan against the exact DuckDB oracle (value-identical there,
-    SCALE.md), so pinning the route would forfeit that evidence; if
-    corpus density ever pushes an oracle-gated sf over budget, the
-    gate's red row plus this paragraph is the diagnosis. At
+    route == 'exact' guard here was considered and REJECTED: the sf1
+    oracle run deliberately executes the ROUTED plan against the
+    exact DuckDB oracle (value-identical there, SCALE.md), so pinning
+    the route would forfeit that evidence; if corpus density ever
+    pushes an oracle-gated sf over budget, the gate's red row plus
+    this paragraph is the diagnosis. At
     0.15 a prefix-filter (ppjoin) index would not help: the required
     prefix is 1-t = 85% of each shingle set."""
     pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.15)
@@ -310,11 +311,9 @@ def dedup_jaccard_routed_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigrams with cluster 1 (jaccard 2/15 = 0.133 < 0.3 -- candidate
     or not, the exact verify excludes it). The expected rows equal
     the exact path's output on this corpus, so the certificate pins
-    routed recall 1.0 here, and a loud guard on the PER-CALL
-    route_info record (race-free under concurrent query execution --
-    ADVICE r8; the thread-local LAST_JACCARD_ROUTE is for tests)
-    fails if the probe ever picks 'exact'. sf_dir unused (fixed
-    corpus)."""
+    routed recall 1.0 here, and a loud guard on the captured route
+    record fails if the probe ever picks 'exact'. sf_dir unused
+    (fixed corpus)."""
     docs = spark.createDataFrame(
         [
             (1, _RJ_BASE),
@@ -328,13 +327,20 @@ def dedup_jaccard_routed_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "doc_id long, text string",
     )
-    info: dict = {}
-    pairs = D.ngram_jaccard_pairs(
-        docs, threshold=0.3, route="auto", route_budget=0, route_info=info
-    )
-    if info.get("route") != "minhash":  # pragma: no cover - loud guard
+    return _budget0_jaccard(docs, "routing")
+
+
+def _budget0_jaccard(docs: DataFrame, cert: str) -> DataFrame:
+    """ngram_jaccard_pairs at t = 0.3 with the budget-0 route probe;
+    raises unless the captured route record says 'minhash'."""
+    with capture() as recs:
+        pairs = D.ngram_jaccard_pairs(
+            docs, threshold=0.3, route="auto", route_budget=0
+        )
+    route = [r for r in recs if r["gate"] == "ngram_jaccard_pairs"]
+    if [r["choice"] for r in route] != ["minhash"]:  # pragma: no cover - loud guard
         raise RuntimeError(
-            f"routing certificate ran on route_info={info!r}; "
+            f"{cert} certificate ran on {route!r}; "
             "the budget-0 probe must pick 'minhash'"
         )
     return pairs.select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
@@ -408,16 +414,7 @@ def dedup_jaccard_recall_grid_fixed(spark: SparkSession, sf_dir: str) -> DataFra
     contract); the grid itself is beyond-reference scale hygiene.
     sf_dir unused (fixed corpus)."""
     docs = spark.createDataFrame(_recall_grid_rows(), "doc_id long, text string")
-    info: dict = {}
-    pairs = D.ngram_jaccard_pairs(
-        docs, threshold=0.3, route="auto", route_budget=0, route_info=info
-    )
-    if info.get("route") != "minhash":  # pragma: no cover - loud guard
-        raise RuntimeError(
-            f"recall-grid certificate ran on route_info={info!r}; "
-            "the budget-0 probe must pick 'minhash'"
-        )
-    return pairs.select("id1", "id2", F.round("jaccard", 6).alias("jaccard"))
+    return _budget0_jaccard(docs, "recall-grid")
 
 
 # ---------------------------------------------------------------------------

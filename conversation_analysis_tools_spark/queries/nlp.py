@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from conversation_analysis_tools_spark.catalog import table as _catalog_table
+from conversation_analysis_tools_spark.decisions import capture
 from conversation_analysis_tools_spark.functions.text import (
     STOPWORDS_SQL_ARRAY,
     sentences_expr,
@@ -410,17 +411,18 @@ def nlp_dup_routed_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. The planted pairs sit at 0.966667 and 0.933333 (found
     with their EXACT sims), the 0.866667 control must be excluded by
     the verify regardless of banding, and a loud guard on the
-    per-call route_info record fails if the probe ever picks 'exact'.
+    captured route record fails if the probe ever picks 'exact'.
     Reference semantics preserved: duplicate_detector.py:127-167
     (threshold contract). sf_dir unused (fixed corpus)."""
     docs = spark.createDataFrame(_routed_cos_rows(), "doc_id long, text string")
-    info: dict = {}
-    pairs = S.duplicate_pairs(
-        docs, threshold=0.9, route="auto", route_budget=0, route_info=info
-    )
-    if info.get("route") != "simhash":  # pragma: no cover - loud guard
+    with capture() as recs:
+        pairs = S.duplicate_pairs(
+            docs, threshold=0.9, route="auto", route_budget=0
+        )
+    route = [r for r in recs if r["gate"] == "duplicate_pairs"]
+    if [r["choice"] for r in route] != ["simhash"]:  # pragma: no cover - loud guard
         raise RuntimeError(
-            f"cosine routing certificate ran on route_info={info!r}; "
+            f"cosine routing certificate ran on {route!r}; "
             "the budget-0 probe must pick 'simhash'"
         )
     return pairs.select("id1", "id2", F.round("sim", 6).alias("sim"))
@@ -611,20 +613,23 @@ def simhash_walkback_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows, pairs = _srf_corpus(80)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    info: dict = {}
-    out = S.duplicate_pairs(
-        docs, threshold=0.8, route="auto", route_budget=0,
-        cand_budget=0, route_info=info, collapse="never",
-    )
+    with capture() as recs:
+        out = S.duplicate_pairs(
+            docs, threshold=0.8, route="auto", route_budget=0,
+            cand_budget=0, collapse="never",
+        )
+    last = {r["gate"]: r for r in recs}
+    route = last.get("duplicate_pairs", {})
+    solve = last.get("tuned_simhash_pairs", {})
     recall_first = solve_simhash_bands(0.8)[:2]
-    solved = (info.get("r"), info.get("b"))
+    solved = (solve.get("choice"), solve.get("b"))
     if (  # pragma: no cover - loud guards
-        info.get("route") != "simhash"
+        route.get("choice") != "simhash"
         or solved == recall_first
         or solved != solve_simhash_bands(0.8, n_docs=500_000)[:2]
     ):
         raise RuntimeError(
-            f"walk-back certificate ran on route_info={info!r}; the "
+            f"walk-back certificate ran on {route!r} / {solve!r}; the "
             f"budget-0 solve must walk back from {recall_first} to the "
             "production large-n decision"
         )
@@ -635,9 +640,9 @@ def simhash_walkback_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(out.withColumn("hit", F.lit(1))), ["id1", "id2"], "left"
     )
     return j.agg(
-        F.lit(info["r"]).alias("r"),
-        F.lit(info["b"]).alias("b"),
-        F.lit(int(round(info["est_recall"] * 10000))).alias(
+        F.lit(solved[0]).alias("r"),
+        F.lit(solved[1]).alias("b"),
+        F.lit(int(round(solve["est_recall"] * 10000))).alias(
             "est_recall_x10000"
         ),
         F.sum(F.when(F.col("kind") == "planted", 1).otherwise(0))

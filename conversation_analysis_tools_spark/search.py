@@ -144,15 +144,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None, help="Spark master override")
     args = p.parse_args(argv)
 
-    from conversation_analysis_tools_spark.catalog import load_tables
+    from conversation_analysis_tools_spark.catalog import register_views
     from conversation_analysis_tools_spark.session import get_spark
     from conversation_analysis_tools_spark.sources import sinks
 
     spark = get_spark(app_name="cats-search", master=args.master)
-    tables = load_tables(spark, args.data)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    docs = tables["documents"]
+    docs = register_views(spark, args.data)["documents"]
 
     if args.sql:
         result = spark.sql(args.sql)

@@ -241,7 +241,7 @@ def _bfs_flatten(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     for p in parts
                     if p
                 )
-                times.append(msg.get("create_time") or None)
+                times.append(msg.get("create_time"))  # 0 is the epoch
                 meta = msg.get("metadata") or {}
                 out.append(
                     {

@@ -136,12 +136,6 @@ def model_usage(conversations: DataFrame, messages: DataFrame) -> DataFrame:
     )
 
 
-ALL_VIEWS = {
-    "message_pairs": message_pairs,
-    "message_length_stats": message_length_stats,
-}
-
-
 def register_conversation_views(
     spark: SparkSession, conversations: DataFrame, messages: DataFrame
 ) -> None:

@@ -13,6 +13,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import capture
+
 
 @pytest.fixture(scope="module")
 def empty_docs(spark):
@@ -43,11 +45,17 @@ def test_dedup_family_empty(spark, empty_docs):
     # NULL volume sum as 0 (not route or crash), and the tuned-LSH
     # plan must survive zero buckets
     for route in ("auto", "exact", "minhash"):
-        assert (
-            D.ngram_jaccard_pairs(empty_docs, threshold=0.15, route=route).count()
-            == 0
-        ), route
-    assert D.LAST_JACCARD_ROUTE == "minhash"  # explicit route sticks
+        with capture() as recs:
+            assert (
+                D.ngram_jaccard_pairs(
+                    empty_docs, threshold=0.15, route=route
+                ).count()
+                == 0
+            ), route
+    # explicit route sticks
+    assert [r["choice"] for r in recs if r["gate"] == "ngram_jaccard_pairs"] == [
+        "minhash"
+    ]
 
 
 def test_connected_components_empty(spark):
@@ -63,6 +71,21 @@ def test_similarity_empty(spark, empty_docs):
     from conversation_analysis_tools_spark.operators import similarity as S
 
     assert S.duplicate_pairs(empty_docs, 0.5).count() == 0
+
+
+def test_dense_doc_vectors_empty_vocab(spark):
+    """An empty vocabulary yields no vectors whatever tf holds."""
+    from conversation_analysis_tools_spark.operators.similarity import (
+        _dense_doc_vectors,
+    )
+
+    tf = spark.createDataFrame(
+        [(1, "alpha", 0.5), (1, "beta", 0.5), (2, "alpha", 1.0)],
+        "doc_id long, term string, tf double",
+    )
+    vecs = _dense_doc_vectors(tf, "doc_id", [])
+    assert vecs.columns == ["_id", "v"]
+    assert vecs.count() == 0
 
 
 def test_priority_empty(spark, empty_docs):

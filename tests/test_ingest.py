@@ -126,6 +126,27 @@ def test_chatgpt_bfs_flatten(spark, export_files):
     ]
 
 
+def test_bfs_flatten_zero_create_time_is_epoch():
+    """A message create_time of 0 is the epoch, as in the ChatGPT
+    conversation path and the ingest_fixed oracle; only a missing
+    time is NULL."""
+    import pandas as pd
+
+    from conversation_analysis_tools_spark.sources.conversations import (
+        _bfs_flatten,
+    )
+
+    mapping = {
+        "n0": {"parent": None, "children": [],
+               "message": {"id": "m0", "create_time": 0,
+                           "author": {"role": "user"},
+                           "content": {"parts": ["hi"]}}},
+    }
+    pdf = pd.DataFrame({"conv_id": ["c0"], "mapping_json": [json.dumps(mapping)]})
+    (batch,) = _bfs_flatten(iter([pdf]))
+    assert list(batch["created_at"]) == [pd.Timestamp("1970-01-01 00:00:00")]
+
+
 def test_upsert_keeps_latest(spark, tmp_path):
     path = str(tmp_path / "t.parquet")
     df1 = spark.createDataFrame([("a", 1), ("b", 1)], "id string, v int")

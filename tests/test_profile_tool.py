@@ -16,7 +16,7 @@ FIELDS = {
     "build_s", "build_jobs", "plan_s", "collect_s",
     "jobs", "stages", "tasks", "task_busy_s",
     "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes",
-    "rows", "trial_walls",
+    "rows", "trial_walls", "decisions",
 }
 
 
@@ -42,9 +42,16 @@ def test_profile_tool_layered_records(spark, tmp_path):
         assert rec["jobs"] >= 1, rec
         assert 0 <= rec["build_jobs"] <= rec["jobs"], rec
         assert len(rec["trial_walls"]) == 1, rec
+        assert isinstance(rec["decisions"], list), rec
         assert rec["rows"] == len(REGISTRY[name].fn(spark, SF_DIR).collect()), rec
         release_all()
         assert (plans / f"{name}.txt").read_text().strip(), name
+    # nlp_duplicate_pairs pins route="exact"; its cosine runs the
+    # pairwise_cosine strategy probe
+    gates = {d["gate"]: d for d in recs[1]["decisions"]}
+    assert gates["duplicate_pairs"]["choice"] == "exact", gates
+    assert gates["duplicate_pairs"]["requested"] == "exact", gates
+    assert gates["pairwise_cosine"]["choice"] in ("dense", "inverted"), gates
 
 
 def test_tools_scripts_keep_stdlib_profile():

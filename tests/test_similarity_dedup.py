@@ -3,12 +3,18 @@
 
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import capture
 from conversation_analysis_tools_spark.operators import dedup as D
 from conversation_analysis_tools_spark.operators import similarity as S
 from conversation_analysis_tools_spark.operators.components import (
     connected_components,
     unique_representatives,
 )
+
+
+def _gate(recs, gate):
+    """The captured decision records of one gate, in call order."""
+    return [r for r in recs if r["gate"] == gate]
 
 
 def test_duplicate_pair_found(spark, sample_docs):
@@ -175,12 +181,13 @@ def test_cc_star_high_diameter(spark):
     # cap at 40, finishing within 12 rounds can only mean the
     # fingerprint fixpoint fired early (an O(diameter) loop would
     # run ~199 rounds and raise at the cap)
-    star = connected_components(path, strategy="star", max_iter=40).collect()
+    with capture() as recs:
+        star = connected_components(path, strategy="star", max_iter=40).collect()
     assert {r["component"] for r in star} == {0}
     assert len(star) == 200
-    from conversation_analysis_tools_spark.operators import components as C
-
-    assert C.LAST_STAR_ROUNDS <= 12  # logarithmic, not O(diameter)
+    (cc,) = _gate(recs, "connected_components")
+    assert cc["choice"] == "star"
+    assert cc["star_rounds"] <= 12  # logarithmic, not O(diameter)
 
 
 def test_cc_star_raises_at_cap(spark):
@@ -1015,15 +1022,17 @@ def _pair_set(df):
 def test_jaccard_route_auto_budget_decision(spark, sample_docs):
     """budget 0 routes every corpus to the LSH path, an ample budget
     keeps the exact inverted index; outputs agree here either way."""
-    routed = D.ngram_jaccard_pairs(
-        sample_docs, threshold=0.15, route="auto", route_budget=0
-    )
-    assert D.LAST_JACCARD_ROUTE == "minhash"
+    with capture() as recs:
+        routed = D.ngram_jaccard_pairs(
+            sample_docs, threshold=0.15, route="auto", route_budget=0
+        )
+    assert [r["choice"] for r in _gate(recs, "ngram_jaccard_pairs")] == ["minhash"]
     routed_pairs = _pair_set(routed)
-    exact = D.ngram_jaccard_pairs(
-        sample_docs, threshold=0.15, route="auto", route_budget=10**9
-    )
-    assert D.LAST_JACCARD_ROUTE == "exact"
+    with capture() as recs:
+        exact = D.ngram_jaccard_pairs(
+            sample_docs, threshold=0.15, route="auto", route_budget=10**9
+        )
+    assert [r["choice"] for r in _gate(recs, "ngram_jaccard_pairs")] == ["exact"]
     assert routed_pairs == _pair_set(exact)
 
 
@@ -1077,8 +1086,10 @@ def test_tuned_lsh_band_solver_values(spark):
     )
     arrs = D.shingle_arrays(docs)
     for t, want_b in ((0.15, 172), (0.3, 42), (0.4, 23), (0.7, 6), (0.9, 4)):
-        D.tuned_lsh_pairs(arrs, t)
-        assert D.LAST_TUNED_BANDS == (want_b, 2 * want_b), t
+        with capture() as recs:
+            D.tuned_lsh_pairs(arrs, t)
+        (rec,) = _gate(recs, "tuned_lsh_pairs")
+        assert (rec["choice"], rec["hashes"]) == (want_b, 2 * want_b), t
     with pytest.raises(ValueError, match="threshold"):
         D.tuned_lsh_pairs(arrs, 1.0)
 
@@ -1146,25 +1157,25 @@ def test_tuned_lsh_overcap_bucket_star_degrades_not_drops(spark):
         assert got.get((1, other)) == want, got
 
 
-def test_jaccard_route_info_out_param(spark, sample_docs):
-    """route_info is the race-free per-call record (ADVICE r8: the
-    module record is now thread-local, but certificates read the
-    out-param): it carries the request, the decision, the probe's
-    measured volume, and the solved banding on the routed path."""
-    info: dict = {}
-    D.ngram_jaccard_pairs(
-        sample_docs, threshold=0.15, route="auto", route_budget=0,
-        route_info=info,
-    )
-    assert info["requested"] == "auto" and info["route"] == "minhash"
+def test_jaccard_route_record(spark, sample_docs):
+    """The captured route record carries the request, the decision
+    and the probe's measured volume; the routed path adds its band
+    solve as a tuned_lsh_pairs record."""
+    with capture() as recs:
+        D.ngram_jaccard_pairs(
+            sample_docs, threshold=0.15, route="auto", route_budget=0,
+        )
+    (info,) = _gate(recs, "ngram_jaccard_pairs")
+    assert info["requested"] == "auto" and info["choice"] == "minhash"
     assert info["probe_rows"] is not None and info["probe_rows"] > 0
-    assert info["route_budget"] == 0 and info["bands"] == (172, 344)
-    info2: dict = {}
-    D.ngram_jaccard_pairs(
-        sample_docs, threshold=0.15, route="exact", route_info=info2
-    )
-    assert info2["route"] == "exact" and info2["probe_rows"] is None
-    assert info2["bands"] is None
+    assert info["route_budget"] == 0
+    (bands,) = _gate(recs, "tuned_lsh_pairs")
+    assert (bands["choice"], bands["hashes"]) == (172, 344)
+    with capture() as recs:
+        D.ngram_jaccard_pairs(sample_docs, threshold=0.15, route="exact")
+    (info2,) = _gate(recs, "ngram_jaccard_pairs")
+    assert info2["choice"] == "exact" and info2["probe_rows"] is None
+    assert not _gate(recs, "tuned_lsh_pairs")
 
 
 def test_recall_grid_routed_matches_exact(spark):
@@ -1199,7 +1210,7 @@ def test_cosine_route_matches_exact_on_planted(spark):
     """duplicate_pairs' round-9 saturation route (tuned simhash-LSH +
     exact verify) must recover the exact pair set with exact sims on
     the certificate corpus, exclude the sub-threshold control, and
-    record its decision in route_info."""
+    record its decision."""
     from conversation_analysis_tools_spark.queries.nlp import _routed_cos_rows
 
     docs = spark.createDataFrame(_routed_cos_rows(), "doc_id long, text string")
@@ -1207,26 +1218,28 @@ def test_cosine_route_matches_exact_on_planted(spark):
         (r["id1"], r["id2"]): round(r["sim"], 9)
         for r in S.duplicate_pairs(docs, 0.9).collect()
     }
-    info: dict = {}
-    routed = {
-        (r["id1"], r["id2"]): round(r["sim"], 9)
-        for r in S.duplicate_pairs(
-            docs, 0.9, route="auto", route_budget=0, route_info=info
-        ).collect()
-    }
+    with capture() as recs:
+        routed = {
+            (r["id1"], r["id2"]): round(r["sim"], 9)
+            for r in S.duplicate_pairs(
+                docs, 0.9, route="auto", route_budget=0
+            ).collect()
+        }
     assert routed == exact and len(exact) == 2
-    assert info["route"] == "simhash" and info["probe_rows"] > 0
+    (info,) = _gate(recs, "duplicate_pairs")
+    assert info["choice"] == "simhash" and info["probe_rows"] > 0
     assert (5, 6) not in routed  # 26/30 control: verify excludes it
     # ample budget keeps the exact plan and says so
-    info2: dict = {}
-    S.duplicate_pairs(docs, 0.9, route="auto", route_budget=10**9,
-                      route_info=info2)
-    assert info2["route"] == "exact" and info2["requested"] == "auto"
-    # max_df pins the exact plan but route_info still reports the
+    with capture() as recs:
+        S.duplicate_pairs(docs, 0.9, route="auto", route_budget=10**9)
+    (info2,) = _gate(recs, "duplicate_pairs")
+    assert info2["choice"] == "exact" and info2["requested"] == "auto"
+    # max_df pins the exact plan but the record still reports the
     # caller's actual request (ADVICE r9)
-    info3: dict = {}
-    S.duplicate_pairs(docs, 0.9, max_df=5, route="auto", route_info=info3)
-    assert info3["route"] == "exact" and info3["requested"] == "auto"
+    with capture() as recs:
+        S.duplicate_pairs(docs, 0.9, max_df=5, route="auto")
+    (info3,) = _gate(recs, "duplicate_pairs")
+    assert info3["choice"] == "exact" and info3["requested"] == "auto"
     import pytest
 
     with pytest.raises(ValueError, match="route must be"):
@@ -1246,15 +1259,15 @@ def test_cosine_route_dense_escape(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     # inverted volume: 20 terms x C(30,2)-ish ~ 8.7k rows; dense pairs
     # C(60,2) = 1770. A budget between the two must stay EXACT now.
-    info: dict = {}
-    pairs = {
-        (r["id1"], r["id2"])
-        for r in S.duplicate_pairs(
-            docs, 0.9, route="auto", route_budget=3000,
-            route_info=info, collapse="never",
-        ).collect()
-    }
-    assert info["route"] == "exact" and info["dense_feasible"] is True
+    with capture() as recs:
+        pairs = {
+            (r["id1"], r["id2"])
+            for r in S.duplicate_pairs(
+                docs, 0.9, route="auto", route_budget=3000, collapse="never",
+            ).collect()
+        }
+    (info,) = _gate(recs, "duplicate_pairs")
+    assert info["choice"] == "exact" and info["dense_feasible"] is True
     # pair-count metric from the HLL doc count (~2% rsd): far below
     # the 8.7k inverted volume, in the right ballpark of C(60,2)
     assert 1500 <= info["probe_rows"] <= 2500
@@ -1268,12 +1281,12 @@ def test_cosine_route_dense_escape(spark):
     assert pairs == exact
     # a tiny explicit budget still forces the routed plan (the
     # certificates' budget-0/1 trick survives the 256x dense scaling)
-    info2: dict = {}
-    S.duplicate_pairs(
-        docs, 0.9, route="auto", route_budget=1,
-        route_info=info2, collapse="never",
-    )
-    assert info2["route"] == "simhash" and info2["dense_feasible"] is True
+    with capture() as recs:
+        S.duplicate_pairs(
+            docs, 0.9, route="auto", route_budget=1, collapse="never",
+        )
+    (info2,) = _gate(recs, "duplicate_pairs")
+    assert info2["choice"] == "simhash" and info2["dense_feasible"] is True
 
 
 def test_cosine_route_strategy_pins_metric(spark):
@@ -1290,12 +1303,13 @@ def test_cosine_route_strategy_pins_metric(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     # budget between dense pairs (~1.8k) and inverted volume (~8.7k):
     # auto strategy stays exact (dense metric), pinned inverted routes
-    info: dict = {}
-    S.duplicate_pairs(
-        docs, 0.9, route="auto", route_budget=3000,
-        route_info=info, collapse="never", strategy="inverted",
-    )
-    assert info["route"] == "simhash" and info["dense_feasible"] is False
+    with capture() as recs:
+        S.duplicate_pairs(
+            docs, 0.9, route="auto", route_budget=3000,
+            collapse="never", strategy="inverted",
+        )
+    (info,) = _gate(recs, "duplicate_pairs")
+    assert info["choice"] == "simhash" and info["dense_feasible"] is False
     assert info["probe_rows"] > 3000  # scored on the inverted volume
 
 
@@ -1356,18 +1370,18 @@ def test_solve_simhash_bands_ladder():
 def test_tuned_simhash_low_threshold_recall(spark):
     """t=0.8 -- the regime the r9 clamp degraded -- must recover the
     exact pair set on a planted near-threshold corpus, with the solve
-    recorded in tuning_info."""
+    recorded as a tuned_simhash_pairs decision."""
     from conversation_analysis_tools_spark.queries.nlp import _srf_corpus
 
     rows, pairs = _srf_corpus(80)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    info: dict = {}
-    routed = {
-        (r["id1"], r["id2"]): round(r["sim"], 9)
-        for r in S.duplicate_pairs(
-            docs, 0.8, route="simhash", collapse="never", route_info=info
-        ).collect()
-    }
+    with capture() as recs:
+        routed = {
+            (r["id1"], r["id2"]): round(r["sim"], 9)
+            for r in S.duplicate_pairs(
+                docs, 0.8, route="simhash", collapse="never"
+            ).collect()
+        }
     exact = {
         (r["id1"], r["id2"]): round(r["sim"], 9)
         for r in S.duplicate_pairs(
@@ -1378,7 +1392,9 @@ def test_tuned_simhash_low_threshold_recall(spark):
     planted = {(i1, i2) for i1, i2, kind in pairs if kind == "planted"}
     control = {(i1, i2) for i1, i2, kind in pairs if kind == "control"}
     assert planted <= set(routed) and not control & set(routed)
-    assert info["r"] == 16 and info["b"] == 152 and info["est_recall"] >= 0.98
+    (solve,) = _gate(recs, "tuned_simhash_pairs")
+    assert solve["choice"] == 16 and solve["b"] == 152
+    assert solve["est_recall"] >= 0.98
 
 
 def test_cosine_route_seeded_random_parity(spark):

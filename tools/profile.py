@@ -25,7 +25,11 @@ JSON line per query; the layered numbers come from the last trial:
   ``shuffle_write_bytes``, ``shuffle_read_bytes``, ``spill_bytes``,
   summed over all three spans;
 - ``rows``, the length of the collected result;
-- ``trial_walls``, the build-to-collect wall of every trial.
+- ``trial_walls``, the build-to-collect wall of every trial;
+- ``decisions``, the adaptive-gate records (``decisions.capture()``)
+  made during the last trial's build and collect, in call order. A
+  capture sees its own thread only, so gates run inside a streaming
+  ``foreachBatch`` callback are not listed.
 
 A query that raises prints ``{"query", "error"}`` instead, and the tool
 exits 1 after the others have run. ``--plans DIR`` writes each query's
@@ -86,32 +90,35 @@ def _explain(df) -> str:
 
 def _run(spark, fn, sf_dir, name, trials, tr, plans_dir):
     """Run ``trials`` traced trials of one query; returns the last
-    trial's span ids and row count, and every trial's wall."""
+    trial's span ids, row count and decision records, and every
+    trial's wall."""
+    from conversation_analysis_tools_spark.decisions import capture
     from conversation_analysis_tools_spark.operators.cache import release_all
 
     walls = []
     for t in range(trials):
         ids = {}
         try:
-            with tr.span("build", op=name, pass_=t) as s:
-                df = fn(spark, sf_dir)
-            ids["build"] = s["id"]
-            with tr.span("plan", op=name, pass_=t) as s:
-                df._jdf.queryExecution().executedPlan()
-            ids["plan"] = s["id"]
-            with tr.span("collect", op=name, pass_=t) as s:
-                rows = len(df.collect())
-            ids["collect"] = s["id"]
+            with capture() as recs:
+                with tr.span("build", op=name, pass_=t) as s:
+                    df = fn(spark, sf_dir)
+                ids["build"] = s["id"]
+                with tr.span("plan", op=name, pass_=t) as s:
+                    df._jdf.queryExecution().executedPlan()
+                ids["plan"] = s["id"]
+                with tr.span("collect", op=name, pass_=t) as s:
+                    rows = len(df.collect())
+                ids["collect"] = s["id"]
             walls.append(s["end"] - tr.spans[ids["build"]]["start"])
             if plans_dir and t == trials - 1:
                 with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
                     f.write(_explain(df))
         finally:
             release_all()
-    return ids, rows, walls
+    return ids, rows, recs, walls
 
 
-def _record(tr, name, ids, rows, walls) -> dict:
+def _record(tr, name, ids, rows, recs, walls) -> dict:
     span = {k: tr.spans[i] for k, i in ids.items()}
     wall = {k: round(s["end"] - s["start"], 4) for k, s in span.items()}
     rec = {"query": name, "build_s": wall["build"], "build_jobs": span["build"]["jobs"],
@@ -121,6 +128,7 @@ def _record(tr, name, ids, rows, walls) -> dict:
     rec["task_busy_s"] = round(sum(s["task_busy_ms"] for s in span.values()) / 1000, 3)
     rec["rows"] = rows
     rec["trial_walls"] = [round(w, 4) for w in walls]
+    rec["decisions"] = recs
     return rec
 
 

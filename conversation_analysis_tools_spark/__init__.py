@@ -5,10 +5,15 @@ Spark-first (DataFrame/SQL + Catalyst + Structured Streaming).
 Layout:
     session     -- SparkSession factory tuned for the target scale
     catalog     -- parquet table loader / temp-view registration
+    views       -- the reference's SQL views over ingested conversations
+    layout      -- bucketed-table and salted-join physical layout helpers
+    decisions   -- per-thread record of the adaptive gates' plan choices
+    fitcache    -- train-once cache for fitted indexes and models
+    search, pipeline, run_pipeline -- search and pipeline entry points
     functions/  -- shared column-expression library (text, time, vector)
     operators/  -- relational + NLP + dedup/similarity operators
+    queries/    -- the registered queries and their DuckDB oracles
     sources/    -- conversation-export ingest (Claude / ChatGPT JSON)
-    plans/      -- plan-audit helpers (pushdown / broadcast / codegen)
     streaming/  -- Structured Streaming extensions over event tables
 """
 

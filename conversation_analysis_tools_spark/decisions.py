@@ -11,7 +11,10 @@ block of code on the calling thread:
 
 With no capture open :func:`record` keeps nothing, so a long session
 accumulates no state. Captures nest; a record reaches every capture
-open on its thread and no other thread's.
+open on its thread and no other thread's. Work handed to another
+thread -- a streaming ``foreachBatch`` callback runs on Spark's
+callback thread -- reports to the captures of the thread that built
+it when wrapped with :func:`carried`.
 """
 
 from __future__ import annotations
@@ -42,3 +45,21 @@ def capture():
         yield recs
     finally:
         sinks.pop()  # captures on one thread close innermost first
+
+
+def carried(fn):
+    """``fn`` wrapped so that, on whatever thread it runs, its records
+    also reach the captures open on this thread now."""
+    outer = list(getattr(_OPEN, "sinks", ()))
+
+    def run(*args, **kwargs):
+        sinks = _OPEN.__dict__.setdefault("sinks", [])
+        base = len(sinks)
+        # on the building thread itself the open captures already listen
+        sinks.extend(s for s in outer if not any(s is t for t in sinks[:base]))
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            del sinks[base:]
+
+    return run

@@ -244,6 +244,35 @@ def _centroid_dist_array(vec_col, centroids: np.ndarray):
     )
 
 
+def _nearest_centroid(centroids):
+    """A function mapping a pandas Series of vectors to (centroid id,
+    squared L2 distance) to the nearest row of ``centroids``, as
+    nullable Int32 and float64 Series: the argmin of ||v||^2 + ||c||^2
+    - 2 v.c with the cross term as one BLAS product, tiny negative
+    residues clamped to 0. Ties take the FIRST centroid, like the
+    expression path, and NULL vectors get NULL for both, like its null
+    propagation. The function is a closure, so Python workers unpickle
+    it by value without importing this package."""
+    import pandas as pd
+
+    cents = np.asarray(centroids, dtype=np.float64)
+    cnorm2 = (cents**2).sum(axis=1)
+
+    def nearest(vecs):
+        cid = pd.Series([pd.NA] * len(vecs), dtype="Int32")
+        d2 = pd.Series([None] * len(vecs), dtype="float64")
+        mask = vecs.notna().to_numpy()
+        if mask.any():
+            V = np.stack(vecs[mask].to_numpy()).astype(np.float64)
+            d = (V**2).sum(axis=1)[:, None] + cnorm2[None, :] - 2.0 * (V @ cents.T)
+            c = d.argmin(axis=1)
+            cid[mask] = c.astype(np.int32)
+            d2[mask] = np.maximum(d[np.arange(len(V)), c], 0.0)
+        return cid, d2
+
+    return nearest
+
+
 def ivf_assign(
     emb: DataFrame,
     centroids: np.ndarray,
@@ -290,25 +319,11 @@ def ivf_assign(
         if vectorized:
             import pandas as pd
 
-            cents = np.asarray(centroids, dtype=np.float64)
-            cnorm2 = (cents**2).sum(axis=1)
+            nearest = _nearest_centroid(centroids)
 
             @F.pandas_udf("int")
             def _assign(col: pd.Series) -> pd.Series:
-                # NULL embeddings get a NULL centroid_id like the
-                # expression path (array ops propagate null); compute
-                # on the non-null subset only
-                out = pd.Series([pd.NA] * len(col), dtype="Int32")
-                mask = col.notna()
-                if mask.any():
-                    V = np.stack(col[mask].to_numpy()).astype(np.float64)
-                    d2 = (
-                        (V**2).sum(axis=1)[:, None]
-                        + cnorm2[None, :]
-                        - 2.0 * (V @ cents.T)
-                    )
-                    out[mask] = d2.argmin(axis=1).astype(np.int32)
-                return out
+                return nearest(col)[0]
 
             return emb.withColumn("centroid_id", _assign(F.col(vec_col)))
         dists = _centroid_dist_array(vec_col, centroids)

@@ -28,30 +28,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from conversation_analysis_tools_spark.decisions import record
+from conversation_analysis_tools_spark.functions.spread import spread_input
 from conversation_analysis_tools_spark.operators.cache import track
+from conversation_analysis_tools_spark.operators.density import (
+    collapse_engaged,
+    dup_density_decision,
+    expand_rep_pairs,
+    group_reps,
+    maybe_collapse,
+)
 
 _LOG = logging.getLogger(__name__)
 
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Repartition a narrow input up to full parallelism when the scan
-    would produce fewer splits than cores (small-file case: one parquet
-    row-group = one task would serialize the whole shingle/md5 chain).
-    The shuffle moves only the raw rows -- far cheaper than computing
-    the derived arrays single-threaded. At 100 TB the scan already has
-    thousands of splits and this is a no-op.
-
-    Round 12: delegates to the shared stats-probe helper -- the old
-    ``df.rdd.getNumPartitions()`` probe forced an RDD conversion of
-    the logical plan on EVERY build (measured 60-120 ms of py4j per
-    fresh DataFrame; ~4 ms for Catalyst's size estimate), a pure
-    driver-boundary tax on every dedup-family query build (guide §4).
-    Sub-512 KB inputs (fixed certificate corpora) now skip the
-    repartition entirely: value-identical, one exchange fewer.
-    """
-    from conversation_analysis_tools_spark.functions.spread import spread_input
-
-    return spread_input(df, key)
 
 # ---------------------------------------------------------------------------
 # shingling
@@ -77,9 +65,9 @@ def shingle_arrays(
     # Materialize the token array in its own projection FIRST: inlining
     # the regexp into the transform lambda makes Spark re-evaluate the
     # regexp per shingle (no CSE inside lambdas) -- measured 10x cost.
-    # _spread here (not at call sites) so every shingle consumer shares
+    # spread here (not at call sites) so every shingle consumer shares
     # one plan shape and CacheManager can substitute a persisted copy.
-    toks = _spread(df, id_col).select(
+    toks = spread_input(df, id_col).select(
         F.col(id_col), raw_tokens_expr(text_col).alias("_toks")
     )
     arr = F.col("_toks")
@@ -453,168 +441,6 @@ def capped_bucket_pairs(
     ).select("p.id1", "p.id2")
 
 
-# ---------------------------------------------------------------------------
-# identical-content representative-collapse (dup-cluster blowup guard)
-#
-# The scale regime dedup exists for is dup-DENSE corpora, where the
-# overwhelmingly common duplicate is byte- or set-identical replicas.
-# Without a guard, a replica cluster of size m lands in the same LSH
-# buckets and the candidate join goes O(m^2) INSIDE the candidate
-# stage (measured: 3.2x wall at 10x rows for MinHash, 9.1x for the
-# edit-distance consumer, SCALE.md). The guard collapses each
-# identical-content group to one representative (min id) before
-# signatures/banding, runs the candidate+verify plan on
-# representatives only, then re-expands member pairs afterward -- the
-# quadratic moves from the join into a linear expansion of the OUTPUT,
-# which is the lower bound anyway. Same proof shape as the SimHash
-# collapse above (simhash_pairs): members of one group pair among
-# themselves at the self-similarity (Jaccard/edit 1.0), and a
-# cross-group member pair is a candidate iff its representative pair
-# is (identical content => identical signatures => identical bands)
-# with the identical verified score (identical arrays/texts).
-# ---------------------------------------------------------------------------
-
-
-def _set_fp(arrs: DataFrame, id_col: str) -> DataFrame:
-    """(id, _fp): md5 fingerprint of each doc's shingle SET (sorted
-    newline-join of the per-doc distinct array; shingles are
-    ``[a-z ]``-only, so the separator is unambiguous). Shingle-less
-    docs are dropped -- they emit no signature rows in the direct plan
-    (explode of an empty array) and so can never be candidates."""
-    return arrs.where(F.size("sh_arr") > 0).select(
-        F.col(id_col),
-        F.md5(F.concat_ws("\n", F.array_sort("sh_arr")).cast("binary")).alias("_fp"),
-    )
-
-
-def _group_reps(members: DataFrame, id_col: str) -> DataFrame:
-    """One representative (min id) per fingerprint group. The groupBy
-    partial-aggregates map-side, so a replica cluster of any size is
-    skew-safe; rows are (32-hex, id) -- tiny."""
-    return members.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-
-
-def _maybe_collapse(
-    arrs: DataFrame,
-    id_col: str,
-    collapse: str,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Collapse-plan dispatch shared by the MinHash/Jaccard consumers:
-    returns (work_arrs, members). ``members`` is None when the direct
-    plan should run (candidates over every doc, no expansion);
-    otherwise work_arrs holds one representative per identical
-    shingle set and the caller re-expands its verified pairs with
-    ``_expand_rep_pairs(..., members, ...)``.
-
-    ``collapse``: 'auto' (default) runs the shared eager dup-density
-    probe (operators/density.py -- one map-side job per corpus plan
-    per process, memoized) and collapses only when dup clusters would
-    materially inflate the candidate join; 'never'/'always' pin the
-    plan and stay fully lazy, for plan-only consumers and tests.
-    Either plan is output-exact, so the probe can only trade wall
-    clock (~+30-70% fixed stage overhead at dup-light sf0.1 vs
-    quadratic candidate blowup on dup-dense corpora).
-
-    The probe runs over the SHINGLE-SET fingerprint -- the key this
-    collapse actually groups on -- because token-invisible text drift
-    (version markers, punctuation) makes byte-distinct docs
-    set-identical; a md5(text) proxy probe missed exactly those and
-    cost ngram_jaccard_pairs 17.5 s vs 1.5 s on the 10x
-    word-perturbed corpus. Probing ``_set_fp`` of the track()'d
-    ``arrs`` also warms the persisted shingle cache every downstream
-    stage reuses, so the probe's scan is not wasted work."""
-    if collapse not in ("auto", "never", "always"):
-        raise ValueError(f"collapse must be auto|never|always, got {collapse!r}")
-    if collapse == "never":
-        return arrs, None
-    members = _set_fp(arrs, id_col)
-    if collapse == "auto":
-        from conversation_analysis_tools_spark.operators.density import (
-            dup_density_decision,
-        )
-
-        if not dup_density_decision(member=members, sig_col="_fp"):
-            return arrs, None
-    members = track(members)
-    reps = _group_reps(members, id_col)
-    return track(arrs.join(reps.select(id_col), id_col, "left_semi")), members
-
-
-def _collapse_engaged(
-    df: DataFrame, id_col: str, text_col: str, collapse: str
-) -> bool:
-    """Validate the ``collapse`` mode and resolve 'auto' through the
-    shared density probe."""
-    from conversation_analysis_tools_spark.operators.density import (
-        dup_density_decision,
-    )
-
-    if collapse not in ("auto", "never", "always"):
-        raise ValueError(f"collapse must be auto|never|always, got {collapse!r}")
-    if collapse == "never":
-        return False
-    if collapse == "always":
-        return True
-    return dup_density_decision(df, text_col=text_col)
-
-
-def _expand_rep_pairs(
-    rep_pairs: DataFrame,
-    members: DataFrame,
-    id_col: str,
-    value_col: str | None = None,
-    self_value=None,
-) -> DataFrame:
-    """Representative pairs -> member pairs.
-
-    within-group: every member pair of one fingerprint group, scored
-    ``self_value`` (identical content => self-similarity, exactly what
-    the direct plan's verify computes for such a pair). cross-group:
-    each rep pair expands over member sets of its two groups,
-    inheriting the rep pair's verified value (identical arrays/texts
-    => identical score). A member belongs to exactly one group, so the
-    union is duplicate-free by construction. The joins are keyed on
-    the fingerprint; multiplicity only arises inside true dup
-    clusters, so join output tracks the final output size.
-
-    ``value_col=None`` expands CANDIDATE pairs instead -- no score
-    attached, because the downstream verify (e.g. the Levenshtein DP,
-    whose inputs differ per member even when shingle sets do not)
-    still runs per member pair. The set equivalence holds the same
-    way: a within-group pair is always a direct-plan candidate
-    (identical sets => identical signatures => it shares every band
-    with its peers), and a cross-group member pair shares a band
-    bucket iff its rep pair does."""
-    w1 = members.select(F.col(id_col).alias("id1"), "_fp")
-    w2 = members.select(F.col(id_col).alias("id2"), "_fp")
-    within = w1.join(w2, "_fp").where(F.col("id1") < F.col("id2"))
-    if value_col is None:
-        within = within.select("id1", "id2")
-        cross_cols = []
-    else:
-        within = within.select(
-            "id1", "id2", F.lit(self_value).cast("double").alias(value_col)
-        )
-        cross_cols = [value_col]
-    f1 = members.select(F.col(id_col).alias("id1"), F.col("_fp").alias("_fp1"))
-    f2 = members.select(F.col(id_col).alias("id2"), F.col("_fp").alias("_fp2"))
-    m1 = members.select(F.col(id_col).alias("_m1"), F.col("_fp").alias("_fp1"))
-    m2 = members.select(F.col(id_col).alias("_m2"), F.col("_fp").alias("_fp2"))
-    cross = (
-        rep_pairs.join(f1, "id1")
-        .join(f2, "id2")
-        .drop("id1", "id2")
-        .join(m1, "_fp1")
-        .join(m2, "_fp2")
-        .select(
-            F.least("_m1", "_m2").alias("id1"),
-            F.greatest("_m1", "_m2").alias("id2"),
-            *cross_cols,
-        )
-    )
-    return within.unionByName(cross)
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -627,7 +453,7 @@ def minhash_dedup_pairs(
 
     Identical-shingle-SET groups are collapsed to one representative
     before banding and re-expanded after verify (adaptively -- see
-    ``_maybe_collapse``) -- output-exact for any threshold <= 1, since
+    ``maybe_collapse``) -- output-exact for any threshold <= 1, since
     a within-group pair's exact Jaccard is 1.0 and a cross-group
     member pair has the same arrays (hence candidates and Jaccard) as
     its rep pair. ``max_bucket`` remains the residual recall-trading
@@ -645,7 +471,7 @@ def minhash_dedup_pairs(
     )
     if members is None:
         return rep_pairs
-    return _expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
+    return expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
 
 
 def minhash_rep_pairs(
@@ -660,14 +486,14 @@ def minhash_rep_pairs(
     expansion: (verified representative pairs, members). ``members``
     is None when the direct plan ran (the pairs ARE member-grain);
     otherwise consumers either expand to member pairs
-    (``_expand_rep_pairs`` -- what ``minhash_dedup_pairs`` returns) or
+    (``expand_rep_pairs`` -- what ``minhash_dedup_pairs`` returns) or
     keep working at rep grain when their downstream is grain-agnostic
     (``minhash_cluster_members``: connected components over rep pairs,
     members inheriting through the fingerprint group -- the m^2
     member-pair materialization never happens)."""
     # persist: the array table feeds fingerprints AND the verify joins
     arrs = track(shingle_arrays(df, id_col, text_col))
-    work, members = _maybe_collapse(
+    work, members = maybe_collapse(
         arrs, id_col, "never" if max_bucket is not None else collapse
     )
     cands = minhash_candidates(
@@ -693,7 +519,7 @@ def minhash_cluster_members(
     group) + (rep pairs expanded over their two groups' members), so a
     member-grain component is the union of the groups whose reps form
     a rep-grain component, plus isolated multi-member groups. Each rep
-    is its group's MIN id (``_group_reps``), hence min member id of a
+    is its group's MIN id (``group_reps``), hence min member id of a
     component == min rep id of its rep-grain component == the label
     both plans assign. Dup-dense cost: CC joins run over the collapsed
     edge list and the expansion is replaced by one fingerprint-keyed
@@ -753,7 +579,7 @@ def cross_corpus_minhash_pairs(
     """
     e_arrs = track(shingle_arrays(eval_df, id_col, text_col))
     t_arrs = track(shingle_arrays(train_df, id_col, text_col))
-    t_rep_arrs, t_members = _maybe_collapse(t_arrs, id_col, collapse)
+    t_rep_arrs, t_members = maybe_collapse(t_arrs, id_col, collapse)
     e_bands = lsh_bands(minhash_signatures_from_arrays(e_arrs, id_col), id_col).select(
         F.col(id_col).alias("eval_id"), "band", "key"
     )
@@ -783,7 +609,7 @@ def cross_corpus_minhash_pairs(
     if t_members is None:
         return rep_pairs
     # expand train representatives back to every member of their group
-    t_reps = _group_reps(t_members, id_col)
+    t_reps = group_reps(t_members, id_col)
     return (
         rep_pairs.join(
             t_reps.withColumnRenamed(id_col, "train_id"), "train_id"
@@ -897,13 +723,13 @@ def edit_distance_pairs(
     grouping -- they can never be candidates in the direct plan.
 
     Independently of the VERIFY grain, the CANDIDATE stage collapses
-    on the shingle-SET fingerprint (``_maybe_collapse``, the same
+    on the shingle-SET fingerprint (``maybe_collapse``, the same
     adaptive probe the Jaccard family uses): identical sets produce
     identical signatures and band keys, so a member pair is a direct-
     plan candidate iff its representative pair is, and a within-group
     pair always is (it shares every band). The rep-grain candidate
     pairs re-expand to member pairs BEFORE the Levenshtein verify
-    (``_expand_rep_pairs`` with ``value_col=None`` -- candidate-set-
+    (``expand_rep_pairs`` with ``value_col=None`` -- candidate-set-
     exact, carrying no score), so the DP still runs per true pair while the signature +
     band join stage runs once per distinct shingle set. On the 10x
     word-perturbed probe (token-invisible markers: byte-distinct,
@@ -919,26 +745,28 @@ def edit_distance_pairs(
     relation the set probe deliberately warms.
     """
     arrs = track(shingle_arrays(df, id_col, text_col))
-    if _collapse_engaged(df, id_col, text_col, collapse):
+    if collapse_engaged(
+        collapse, lambda: dup_density_decision(df, text_col=text_col)
+    ):
         nonempty = arrs.where(F.size("sh_arr") > 0).select(id_col)
         members = track(
             df.join(nonempty, id_col, "left_semi").select(
                 F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_fp")
             )
         )
-        reps = _group_reps(members, id_col)
+        reps = group_reps(members, id_col)
         work_arrs = arrs.join(reps.select(id_col), id_col, "left_semi")
         t_base = df.join(reps.select(id_col), id_col, "left_semi")
     else:
         members = None
         work_arrs = arrs
         t_base = df
-    cand_arrs, cand_members = _maybe_collapse(work_arrs, id_col, collapse)
+    cand_arrs, cand_members = maybe_collapse(work_arrs, id_col, collapse)
     cands = minhash_candidates(
         lsh_bands(minhash_signatures_from_arrays(cand_arrs, id_col), id_col), id_col
     )
     if cand_members is not None:
-        cands = _expand_rep_pairs(cands, cand_members, id_col)
+        cands = expand_rep_pairs(cands, cand_members, id_col)
     t = t_base.select(
         F.col(id_col), F.substring(F.col(text_col), 1, max_chars).alias("_t")
     )
@@ -999,7 +827,7 @@ def edit_distance_pairs(
     )
     if members is None:
         return rep_pairs
-    return _expand_rep_pairs(rep_pairs, members, id_col, "edit_sim", 1.0)
+    return expand_rep_pairs(rep_pairs, members, id_col, "edit_sim", 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -1049,10 +877,15 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     interpreted HOF did not. ``explode_outer`` keeps token-less docs:
     their sums are NULL, every CASE falls to 0, and the signature is
     0 -- exactly the HOF form's empty-array output.
+
+    Edge contracts: a doc whose text is NULL gets signature 0, like
+    empty text, so NULL-text and empty-text docs pair at hamming 0 in
+    :func:`simhash_pairs`. ``id_col`` must be unique: the signature
+    sums group by id, so docs sharing an id merge into one signature.
     """
     from conversation_analysis_tools_spark.functions.text import raw_tokens_expr
 
-    hv = _spread(df, id_col).select(
+    hv = spread_input(df, id_col).select(
         F.col(id_col),
         F.explode_outer(raw_tokens_expr(text_col)).alias("_t"),
     ).select(
@@ -1143,30 +976,15 @@ def simhash_pairs(
         .withColumn("hamming", F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))))
         .where(F.col("hamming") <= max_hamming)
     )
-    # --- expand: within-group pairs (hamming 0) ----------------------
-    # The self-join on the full 60-bit signature only multiplies inside
-    # identical-signature groups, so its row count IS the output count.
-    m1 = sig.select(F.col(id_col).alias("id1"), "simhash")
-    m2 = sig.select(F.col(id_col).alias("id2"), "simhash")
-    within = (
-        m1.join(m2, "simhash")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2", F.lit(0).cast("int").alias("hamming"))
-    )
-    # --- expand: cross-group pairs via each rep's member set ---------
-    g1 = sig.select(F.col(id_col).alias("_m1"), F.col("simhash").alias("sh1"))
-    g2 = sig.select(F.col(id_col).alias("_m2"), F.col("simhash").alias("sh2"))
-    cross = (
-        rep_pairs.join(g1, "sh1")
-        .join(g2, "sh2")
-        .select(
-            F.least("_m1", "_m2").alias("id1"),
-            F.greatest("_m1", "_m2").alias("id2"),
-            "hamming",
-        )
-    )
-    return within.unionByName(cross).withColumn(
-        "hamming", F.col("hamming").cast("int")
+    # --- expand: within-group pairs at hamming 0, cross-group pairs
+    # inherit the rep pair's hamming. The rep pairs already carry both
+    # signatures, so the expansion joins members on them directly.
+    members = sig.select(F.col(id_col), F.col("simhash").alias("_fp"))
+    return expand_rep_pairs(
+        rep_pairs.select(
+            F.col("sh1").alias("_fp1"), F.col("sh2").alias("_fp2"), "hamming"
+        ),
+        members, id_col, "hamming", 0,
     )
 
 
@@ -1191,7 +1009,7 @@ def ngram_jaccard_pairs(
 
     Identical-shingle-SET groups are collapsed to one representative
     before the index join and re-expanded after (adaptively -- see
-    ``_maybe_collapse``). The inverted index is EXACT, so the blowup
+    ``maybe_collapse``). The inverted index is EXACT, so the blowup
     here is worse than LSH's: a replica cluster of m docs with s
     shingles each costs m^2*s/2 rows out of the shingle self-join
     (measured 53.6 s / 5.7x wall on the 10x dup-heavy probe);
@@ -1254,7 +1072,7 @@ def ngram_jaccard_pairs(
         raise ValueError(f"route must be auto|exact|minhash, got {route!r}")
     requested = route
     arrs = track(shingle_arrays(df, id_col, text_col, n))
-    rep_arrs, members = _maybe_collapse(arrs, id_col, collapse)
+    rep_arrs, members = maybe_collapse(arrs, id_col, collapse)
     # postings carry the doc's set size inline (explode keeps sibling
     # columns) -- the length filter needs no corpus-grain broadcast
     sh = rep_arrs.select(
@@ -1322,7 +1140,7 @@ def ngram_jaccard_pairs(
         ).where(F.col("jaccard") >= threshold)
     if members is None:
         return rep_pairs
-    return _expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
+    return expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -1354,10 +1172,15 @@ def embedding_dup_pairs(
 
     if block_col is None:
         from conversation_analysis_tools_spark.operators.similarity import (
-            blocked_cosine_pairs,
+            grid_blocked_pairs,
+            unit_vector,
         )
 
-        return blocked_cosine_pairs(emb, id_col, vec_col, threshold)
+        # persisted: counted for the grid size, then scanned by the cells
+        per_doc = track(
+            emb.select(F.col(id_col).alias("_id"), unit_vector(vec_col).alias("v"))
+        )
+        return grid_blocked_pairs(per_doc, threshold)
 
     # norms hoisted to per-ROW (Catalyst does no CSE inside lambda
     # bodies, so inline cosine_expr re-folds both norms per PAIR --
@@ -1531,8 +1354,6 @@ def substring_span_stats(
     # spread to scan parallelism (round 12, guide §2.5/§6): the
     # tokenize + per-position xxhash chain otherwise runs as one task
     # on single-row-group corpora
-    from conversation_analysis_tools_spark.functions.spread import spread_input
-
     toks = spread_input(df, id_col).select(
         F.col(id_col), raw_tokens_expr(text_col).alias("_toks")
     )
@@ -1638,8 +1459,6 @@ def remove_duplicate_spans(
     from pyspark.sql import Window
 
     from conversation_analysis_tools_spark.functions.text import raw_tokens_expr
-
-    from conversation_analysis_tools_spark.functions.spread import spread_input
 
     # spread to scan parallelism (round 12, guide §2.5/§6) before the
     # tokenize; the persisted token table then also caches spread
@@ -1815,7 +1634,10 @@ def semdedup_prune(
         dot_expr,
         norm_expr,
     )
-    from conversation_analysis_tools_spark.operators.ann import _centroid_dist_array
+    from conversation_analysis_tools_spark.operators.ann import (
+        _centroid_dist_array,
+        _nearest_centroid,
+    )
 
     n_vectors = None  # stays None when the caller pins the path
     if dense_path is None:
@@ -1836,10 +1658,7 @@ def semdedup_prune(
         # the C-wide interpreted HOF distance fold (the fold's
         # n*C*dim interpreted ops dominate wall once C scales --
         # measured ~30 s of a 37 s run at 20k vectors / C=157).
-        # ||v-c||^2 = ||v||^2 + ||c||^2 - 2 v.c with the cross term
-        # as a BLAS product; tiny negative residues clamp to 0.
-        cents = np.asarray(centroids, dtype=np.float64)
-        cnorm2 = (cents**2).sum(axis=1)
+        nearest = _nearest_centroid(centroids)
         out_schema = (
             f"{id_col} long, {vec_col} array<double>, "
             "centroid_id int, centroid_dist double"
@@ -1850,41 +1669,26 @@ def semdedup_prune(
                 if not len(pdf):
                     continue
                 # NULL embeddings keep their row with NULL
-                # centroid_id/dist (the expression path's null
-                # propagation); they join no cluster and surface as
+                # centroid_id/dist; they join no cluster and surface as
                 # kept singletons downstream
-                mask = pdf[vec_col].notna().to_numpy()
-                cid = pd.Series([pd.NA] * len(pdf), dtype="Int32")
-                dist = pd.Series([None] * len(pdf), dtype="float64")
-                if mask.any():
-                    V = np.stack(pdf[vec_col][mask].to_numpy()).astype(np.float64)
-                    d2 = (
-                        (V**2).sum(axis=1)[:, None]
-                        + cnorm2[None, :]
-                        - 2.0 * (V @ cents.T)
-                    )
-                    c = d2.argmin(axis=1)
-                    cid[mask] = c.astype(np.int32)
-                    dist[mask] = np.sqrt(
-                        np.maximum(d2[np.arange(len(V)), c], 0.0)
-                    )
+                cid, d2 = nearest(pdf[vec_col])
                 yield pd.DataFrame(
                     {
                         id_col: pdf[id_col].to_numpy(),
                         vec_col: pdf[vec_col].to_numpy(),
                         "centroid_id": cid,
-                        "centroid_dist": dist,
+                        "centroid_dist": np.sqrt(d2),
                     }
                 )
 
-        # _spread first (round 9, sf10 probe): a 500k-vector corpus
+        # spread first (round 9, sf10 probe): a 500k-vector corpus
         # arrives as 1-2 parquet splits, so the per-batch matmul ran
         # single-core -- measured 35 s of the sf10 wall; spread to
         # full parallelism it is ~32 tasks of ~1e9 flops each. Small
         # corpora never take the dense path, so driver-sf plans are
         # untouched.
         assigned = track(
-            _spread(
+            spread_input(
                 emb.select(
                     F.col(id_col),
                     F.col(vec_col).cast("array<double>").alias(vec_col),

@@ -17,11 +17,18 @@ entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from conversation_analysis_tools_spark.decisions import record
 from conversation_analysis_tools_spark.operators import tfidf as T
+from conversation_analysis_tools_spark.operators.cache import track
+from conversation_analysis_tools_spark.operators.density import (
+    collapse_engaged,
+    dup_density_decision,
+    expand_rep_pairs,
+    group_reps,
+)
 
 
 def tf_vectors(
@@ -64,18 +71,6 @@ DENSE_MAX_N = 100_000
 #: volume is n * B vector rows.
 DENSE_BLOCK_ROWS = 2_000
 
-#: Collapse decision + threshold live in operators/density.py now,
-#: shared with the dedup-family collapse consumers; re-exported here
-#: for call-site and test continuity.
-from conversation_analysis_tools_spark.operators.density import (  # noqa: E402
-    DUP_COLLAPSE_MIN_FRAC,
-    dup_density_decision as _dup_density_decision_shared,
-)
-
-
-def _dup_density_decision(docs: DataFrame, member: DataFrame) -> bool:
-    return _dup_density_decision_shared(docs, member=member)
-
 
 def pairwise_cosine(
     tf: DataFrame,
@@ -89,11 +84,15 @@ def pairwise_cosine(
 
     * ``inverted``: self-join on term -- optimal for large sparse
       vocabularies (real text), where few pairs share terms.
-    * ``dense``: vocab-aligned normalized dense vectors, broadcast
-      nested-loop pair scan with an unrolled dot product -- optimal
-      when the vocabulary is tiny and shared (every pair overlaps, so
-      the inverted index degenerates to O(vocab * n^2) join rows).
-    * ``auto``: count distinct terms, pick accordingly.
+    * ``dense``: vocab-aligned L2-normalized dense vectors, all pairs
+      by the grid-blocked BLAS scan (:func:`grid_blocked_pairs`) --
+      optimal when the vocabulary is tiny and shared (every pair
+      overlaps, so the inverted index degenerates to O(vocab * n^2)
+      join rows).
+    * ``auto``: the dense plan when the vocabulary has at most
+      SMALL_VOCAB_LIMIT terms and the corpus at most DENSE_MAX_N
+      docs, else the inverted index. A forced ``dense`` takes the same
+      path without either fence.
 
     ``max_df`` (drop terms appearing in more than max_df docs) is
     applied HERE, before the strategy probe, so every physical
@@ -106,24 +105,25 @@ def pairwise_cosine(
         tf = tf.join(
             F.broadcast(doc_freq.where(F.col("df") <= max_df)), "term", "left_semi"
         )
-    requested, vocab, n_docs, per_doc = strategy, None, None, None
+    requested, n_docs, per_doc = strategy, None, None
     terms = None  # distinct terms the probe saw, capped at the limit + 1
-    if strategy == "auto":
-        from conversation_analysis_tools_spark.operators.cache import track
-
-        # The strategy probe and the main plan both consume ``tf``;
-        # persist it so tokenize + term-count shuffle run once (the
-        # reference's precomputed-vector optimization,
-        # pipeline/duplicate_detector.py:147-151 -- SURVEY §4). The
-        # inverted path reads it twice more (both sides of the term
-        # self-join), so the persist pays for itself three times.
-        tf = track(tf)
-        # one tiny job decides the strategy AND yields the vocabulary
-        probe = (
-            tf.select("term").distinct().limit(SMALL_VOCAB_LIMIT + 1).collect()
-        )
+    if strategy in ("auto", "dense"):
+        forced = strategy == "dense"
+        # one tiny job decides the strategy AND yields the vocabulary;
+        # a forced dense plan takes the whole vocabulary, unfenced
+        probe = tf.select("term").distinct()
+        if not forced:
+            # The strategy probe and the main plan both consume ``tf``;
+            # persist it so tokenize + term-count shuffle run once (the
+            # reference's precomputed-vector optimization,
+            # pipeline/duplicate_detector.py:147-151 -- SURVEY §4). The
+            # inverted path reads it twice more (both sides of the term
+            # self-join), so the persist pays for itself three times.
+            tf = track(tf)
+            probe = tf.select("term").distinct().limit(SMALL_VOCAB_LIMIT + 1)
+        probe = probe.collect()
         terms, strategy = len(probe), "inverted"
-        if terms <= SMALL_VOCAB_LIMIT:
+        if forced or terms <= SMALL_VOCAB_LIMIT:
             # Tentatively dense: build (and persist) the vectors, and
             # let their count -- needed for grid blocking anyway --
             # double as the DENSE_MAX_N fence (even a tiny vocabulary
@@ -135,7 +135,7 @@ def pairwise_cosine(
             vocab = sorted(r["term"] for r in probe)
             per_doc = track(_dense_doc_vectors(tf, id_col, vocab))
             n_docs = per_doc.count()
-            if n_docs <= DENSE_MAX_N:
+            if forced or n_docs <= DENSE_MAX_N:
                 strategy = "dense"
             else:
                 per_doc.unpersist()
@@ -144,8 +144,6 @@ def pairwise_cosine(
            n_docs=n_docs)
     if per_doc is not None:
         return grid_blocked_pairs(per_doc, threshold, n=n_docs)
-    if strategy == "dense":
-        return _pairwise_cosine_dense(tf, id_col, threshold, vocab)
     return _pairwise_cosine_inverted(tf, id_col)
 
 
@@ -204,71 +202,66 @@ def _dense_doc_vectors(
     )
 
 
-def _pairwise_cosine_dense(
-    tf: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.0,
-    vocab: list | None = None,
-) -> DataFrame:
-    """Dense plan: GRID-BLOCKED matrix product, no driver-side matrix.
-
-    Docs are hashed into B = ceil(n / DENSE_BLOCK_ROWS) row-blocks;
-    every row is replicated to the B grid cells its block belongs to
-    (cell (bi, bj), bi <= bj), and each cell independently computes a
-    block_i @ block_j^T BLAS product inside ``applyInPandas``,
-    emitting only pairs >= threshold. Exactness: an unordered pair
-    {x, y} lands in exactly one cell (min(bx,by), max(bx,by)); the
-    diagonal cell keeps the strict upper triangle.
-
-    Cost model (SURVEY §4): shuffle = n*B vector rows, FLOPs = n^2*v
-    spread over B(B+1)/2 independent tasks. n > DENSE_MAX_N never
-    reaches this function (auto-strategy forces inverted/LSH).
-    """
-    import numpy as np
-    import pandas as pd
-
-    if vocab is None:
-        vocab = sorted(r["term"] for r in tf.select("term").distinct().collect())
-
-    from conversation_analysis_tools_spark.operators.cache import track
-
-    # persisted: consumed by the count job here AND by the grid cells;
-    # registered with the cache tracker so harness loops can release it
-    per_doc = track(_dense_doc_vectors(tf, id_col, vocab))
-    return grid_blocked_pairs(per_doc, threshold)
-
-
 def grid_blocked_pairs(
-    per_doc: DataFrame, threshold: float, n: int | None = None
+    per_doc: DataFrame,
+    threshold: float,
+    n: int | None = None,
+    group_col: str | None = None,
 ) -> DataFrame:
-    """All-pairs cosine over L2-normalized vectors (_id, v) with the
-    grid-block plan: rows hash into B = ceil(n / DENSE_BLOCK_ROWS)
-    blocks, replicate to their B grid cells, and each cell (bi <= bj)
-    computes one block_i @ block_j^T BLAS product in
-    ``applyInPandas``, emitting pairs >= threshold. Shuffle n*B rows;
-    B(B+1)/2 independent tasks; no driver-side matrix. Pass ``n`` if
-    the caller already counted the (persisted) vectors."""
+    """All-pairs cosine >= threshold over L2-normalized vectors (_id,
+    v), within each ``group_col`` group (e.g. per k-means cluster) or,
+    without one, over all rows as a single group.
+
+    Grid-block plan: a group of s rows hashes into B = ceil(s /
+    DENSE_BLOCK_ROWS) blocks (at most 64), every row replicates to
+    the B grid cells its block belongs to (cell (bi, bj), bi <= bj),
+    and each cell computes one block_i @ block_j^T BLAS product in
+    Arrow-batched ``applyInPandas``, emitting pairs >= threshold. An
+    unordered pair {x, y} lands in exactly one cell (min(bx,by),
+    max(bx,by)); the diagonal cell keeps the strict upper triangle.
+    Shuffle s*B vector rows, B(B+1)/2 independent tasks per group, no
+    driver-side matrix: typical groups are single-block (one task per
+    group), and a skewed group degrades to bounded-size tasks instead
+    of one quadratic task. A 64x-128x win over the per-pair
+    interpreted HOF cosine fold when groups hold hundreds+ of vectors
+    (measured 34 s -> 4 s on semdedup at 20k vectors / 157 clusters).
+
+    The single group sizes B from ``n``, counted here unless the
+    caller already counted the (persisted) vectors; groups join their
+    sizes from one groupBy. Returns (id1, id2, sim) with id1 < id2,
+    led by ``group_col`` when given."""
     import numpy as np
     import pandas as pd
 
-    if n is None:
-        n = per_doc.count()
-    n_blocks = max(1, min(64, -(-n // DENSE_BLOCK_ROWS)))
-
-    blocked = per_doc.withColumn(
-        "blk", F.pmod(F.hash("_id"), F.lit(n_blocks)).cast("int")
+    keys = [] if group_col is None else [group_col]
+    schema = "id1 long, id2 long, sim double"
+    if group_col is None:
+        if n is None:
+            n = per_doc.count()
+        nb = F.lit(max(1, min(64, -(-n // DENSE_BLOCK_ROWS))))
+    else:
+        schema = f"g {per_doc.schema[group_col].dataType.simpleString()}, {schema}"
+        sizes = per_doc.groupBy(group_col).agg(F.count("*").alias("_gsz"))
+        per_doc = per_doc.join(F.broadcast(sizes), group_col)
+        nb = F.greatest(
+            F.lit(1),
+            F.least(F.lit(64), F.ceil(F.col("_gsz") / F.lit(DENSE_BLOCK_ROWS))),
+        ).cast("int")
+    blocked = per_doc.withColumn("_nb", nb).withColumn(
+        "blk", F.pmod(F.hash("_id"), F.col("_nb")).cast("int")
     )
     # replicate each row to every grid cell its block participates in
     cells = F.transform(
-        F.sequence(F.lit(0), F.lit(n_blocks - 1)),
+        F.sequence(F.lit(0), F.col("_nb") - 1),
         lambda o: F.struct(
             F.least(F.col("blk"), o).alias("bi"),
             F.greatest(F.col("blk"), o).alias("bj"),
         ),
     )
-    exploded = (
-        blocked.select("_id", "blk", "v", F.explode(F.array_distinct(cells)).alias("c"))
-        .select("_id", "blk", "v", F.col("c.bi").alias("bi"), F.col("c.bj").alias("bj"))
+    exploded = blocked.select(
+        *keys, "_id", "blk", "v", F.explode(F.array_distinct(cells)).alias("c")
+    ).select(
+        *keys, "_id", "blk", "v", F.col("c.bi").alias("bi"), F.col("c.bj").alias("bj")
     )
 
     thr = threshold
@@ -277,33 +270,43 @@ def grid_blocked_pairs(
     # infer the eval type, and a (key, pdf) pair with a partial hint
     # set makes that inference fail with a UserWarning on every run
     def cell_product(key, pdf):
-        bi, bj = key
+        bi, bj = key[-2:]
         if bi == bj:
             left = right = pdf
         else:
             left = pdf[pdf["blk"] == bi]
             right = pdf[pdf["blk"] == bj]
-        if not len(left) or not len(right):
-            return pd.DataFrame({"id1": [], "id2": [], "sim": []}).astype(
-                {"id1": "int64", "id2": "int64", "sim": "float64"}
-            )
-        L = np.stack(left["v"].to_numpy())
-        R = np.stack(right["v"].to_numpy())
-        sims = L @ R.T
         lid = left["_id"].to_numpy()
         rid = right["_id"].to_numpy()
-        mask = sims >= thr - THRESHOLD_EPS
-        if bi == bj:
-            mask &= rid[None, :] > lid[:, None]
-        ii, jj = np.nonzero(mask)
+        if len(lid) and len(rid):
+            sims = np.stack(left["v"].to_numpy()) @ np.stack(right["v"].to_numpy()).T
+            mask = sims >= thr - THRESHOLD_EPS
+            if bi == bj:
+                mask &= rid[None, :] > lid[:, None]
+            ii, jj = np.nonzero(mask)
+            sim = sims[ii, jj]
+        else:  # an off-diagonal cell whose other block is empty
+            ii = jj = np.zeros(0, dtype=np.int64)
+            sim = np.zeros(0)
         a, b = lid[ii], rid[jj]
-        return pd.DataFrame(
-            {"id1": np.minimum(a, b), "id2": np.maximum(a, b), "sim": sims[ii, jj]}
-        )
+        out = {"id1": np.minimum(a, b), "id2": np.maximum(a, b), "sim": sim}
+        if len(key) == 3:
+            g = pd.Series([key[0]] * len(a), dtype=None if len(a) else object)
+            out = {"g": g, **out}
+        return pd.DataFrame(out)
 
-    return exploded.groupBy("bi", "bj").applyInPandas(
-        cell_product, schema="id1 long, id2 long, sim double"
+    pairs = exploded.groupBy(*keys, "bi", "bj").applyInPandas(
+        cell_product, schema=schema
     )
+    return pairs if group_col is None else pairs.withColumnRenamed("g", group_col)
+
+
+def unit_vector(vec_col: str) -> Column:
+    """``vec_col`` divided by its L2 norm; a zero vector stays zero
+    (and so dots to 0 against anything)."""
+    nrm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, x: a + x * x))
+    safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
+    return F.transform(F.col(vec_col), lambda x: x / safe)
 
 
 def grouped_grid_pairs(
@@ -313,25 +316,9 @@ def grouped_grid_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """WITHIN-GROUP all-pairs cosine >= threshold over a dense-vector
-    column: the grid-block BLAS plan of :func:`grid_blocked_pairs`,
-    but gridded per group (e.g. per k-means cluster) instead of
-    globally. Each group of size s splits into B = ceil(s /
-    DENSE_BLOCK_ROWS) hash blocks and every (group, bi <= bj) cell
-    computes one block_i @ block_j^T numpy product in Arrow-batched
-    ``applyInPandas`` -- a 64x-128x win over the per-pair interpreted
-    HOF cosine fold when groups hold hundreds+ of vectors (measured
-    34 s -> 4 s on semdedup at 20k vectors / 157 clusters). Typical
-    groups are single-block (B=1, one task per group); a skewed
-    group degrades to B(B+1)/2 bounded-size tasks instead of one
-    quadratic task -- the same skew escape the global grid uses.
-
-    Returns (group_col, id1, id2, sim) with id1 < id2."""
-    import numpy as np
-    import pandas as pd
-
-    nrm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, x: a + x * x))
-    safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
+    """WITHIN-GROUP all-pairs cosine >= threshold over a raw
+    dense-vector column: :func:`grid_blocked_pairs` gridded per
+    ``group_col``. Returns (group_col, id1, id2, sim) with id1 < id2."""
     # null groups/vectors produce no pairs by contract (a null key
     # matches nothing in an equi-join anyway; dropping them here also
     # keeps np.stack off ragged input)
@@ -340,105 +327,9 @@ def grouped_grid_pairs(
     ).select(
         F.col(group_col),
         F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x / safe).alias("v"),
+        unit_vector(vec_col).alias("v"),
     )
-    grp_type = per.schema[group_col].dataType.simpleString()
-    sizes = per.groupBy(group_col).agg(F.count("*").alias("_gsz"))
-    nb = (
-        F.greatest(
-            F.lit(1),
-            F.least(F.lit(64), F.ceil(F.col("_gsz") / F.lit(DENSE_BLOCK_ROWS))),
-        )
-    ).cast("int")
-    blocked = (
-        per.join(F.broadcast(sizes), group_col)
-        .withColumn("_nb", nb)
-        .withColumn("blk", F.pmod(F.hash("_id"), F.col("_nb")).cast("int"))
-    )
-    cells = F.transform(
-        F.sequence(F.lit(0), F.col("_nb") - 1),
-        lambda o: F.struct(
-            F.least(F.col("blk"), o).alias("bi"),
-            F.greatest(F.col("blk"), o).alias("bj"),
-        ),
-    )
-    exploded = blocked.select(
-        group_col,
-        "_id",
-        "blk",
-        "v",
-        F.explode(F.array_distinct(cells)).alias("c"),
-    ).select(
-        group_col,
-        "_id",
-        "blk",
-        "v",
-        F.col("c.bi").alias("bi"),
-        F.col("c.bj").alias("bj"),
-    )
-
-    thr = threshold
-
-    def cell_product(key, pdf):
-        _, bi, bj = key
-        if bi == bj:
-            left = right = pdf
-        else:
-            left = pdf[pdf["blk"] == bi]
-            right = pdf[pdf["blk"] == bj]
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {"g": pd.Series([], dtype=object), "id1": [], "id2": [], "sim": []}
-            ).astype({"id1": "int64", "id2": "int64", "sim": "float64"})
-        L = np.stack(left["v"].to_numpy())
-        R = np.stack(right["v"].to_numpy())
-        sims = L @ R.T
-        lid = left["_id"].to_numpy()
-        rid = right["_id"].to_numpy()
-        mask = sims >= thr - THRESHOLD_EPS
-        if bi == bj:
-            mask &= rid[None, :] > lid[:, None]
-        ii, jj = np.nonzero(mask)
-        a, b = lid[ii], rid[jj]
-        return pd.DataFrame(
-            {
-                "g": [key[0]] * len(a),
-                "id1": np.minimum(a, b),
-                "id2": np.maximum(a, b),
-                "sim": sims[ii, jj],
-            }
-        )
-
-    return (
-        exploded.groupBy(group_col, "bi", "bj")
-        .applyInPandas(
-            cell_product,
-            schema=f"g {grp_type}, id1 long, id2 long, sim double",
-        )
-        .withColumnRenamed("g", group_col)
-    )
-
-
-def blocked_cosine_pairs(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.0,
-) -> DataFrame:
-    """All-pairs cosine >= threshold over a dense-vector column,
-    grid-blocked (see :func:`grid_blocked_pairs`) -- the scale-safe
-    replacement for an unblocked crossJoin pair scan."""
-    from conversation_analysis_tools_spark.operators.cache import track
-
-    nrm = F.sqrt(F.aggregate(F.col(vec_col), F.lit(0.0), lambda a, x: a + x * x))
-    safe = F.when(nrm == 0.0, F.lit(1.0)).otherwise(nrm)
-    per_doc = track(
-        vecs.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x / safe).alias("v"),
-        )
-    )
-    return grid_blocked_pairs(per_doc, threshold)
+    return grid_blocked_pairs(per, threshold, group_col=group_col)
 
 
 def _l2_normalize(tf: DataFrame, id_col: str) -> DataFrame:
@@ -455,11 +346,7 @@ def _l2_normalize(tf: DataFrame, id_col: str) -> DataFrame:
     return tf.withColumn("tf", F.col("tf") / safe)
 
 
-def _pairwise_cosine_inverted(
-    tf: DataFrame,
-    id_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
+def _pairwise_cosine_inverted(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Inverted-index plan: self-join on term -> groupBy pair.
 
     ``tf`` is (id, term, tf). Vectors are L2-normalized FIRST (window
@@ -470,15 +357,8 @@ def _pairwise_cosine_inverted(
     norm joins (previously O(n_docs) broadcasts -- an at-scale
     killer). Only pairs sharing a term appear (exact w.r.t. any
     threshold > 0). ``max_df`` is applied by :func:`pairwise_cosine`
-    before dispatch (strategy-independent); the parameter here is kept
-    for direct callers.
+    before dispatch (strategy-independent).
     """
-    if max_df is not None:
-        doc_freq = tf.groupBy("term").agg(F.count("*").alias("df"))
-        tf = tf.join(
-            F.broadcast(doc_freq.where(F.col("df") <= max_df)), "term", "left_semi"
-        )
-
     unit = _l2_normalize(tf, id_col)
     a = unit.select(
         F.col(id_col).alias("id1"), F.col("term"), F.col("tf").alias("tf1")
@@ -525,7 +405,7 @@ def duplicate_pairs(
     ``collapse`` selects the plan: ``'auto'`` (default) runs ONE
     EAGER map-side probe job AT PLAN-BUILD TIME -- an
     approx_count_distinct over md5(text) estimating the exact-dup
-    count; below DUP_COLLAPSE_MIN_FRAC the direct plan runs, since on
+    count; below density.DUP_COLLAPSE_MIN_FRAC the direct plan runs, since on
     a dup-light corpus the rep semi-joins and expansion joins are pure
     overhead (~+30% measured at sf0.1's 8 dups / 5k docs). Callers
     that only build or explain the plan (audits, dry runs) should pass
@@ -572,10 +452,6 @@ def duplicate_pairs(
     """
     import logging
 
-    from conversation_analysis_tools_spark.operators.cache import track
-
-    if collapse not in ("auto", "never", "always"):
-        raise ValueError(f"collapse must be auto|never|always, got {collapse!r}")
     if route not in ("exact", "auto", "simhash"):
         raise ValueError(f"route must be exact|auto|simhash, got {route!r}")
     requested = route
@@ -685,68 +561,38 @@ def duplicate_pairs(
         sims = pairwise_cosine(tf_df, id_col, max_df, strategy, threshold)
         return sims.where(F.col("sim") >= threshold - THRESHOLD_EPS)
     member = docs.select(
-        F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_tsig")
+        F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_fp")
     )
-    if max_df is not None or collapse == "never":
-        do_collapse = False
-    elif collapse == "always":
-        do_collapse = True
-    else:
-        do_collapse = _dup_density_decision(docs, member)
-    if not do_collapse:
+    engaged = collapse_engaged(
+        collapse,
+        lambda: max_df is None
+        and dup_density_decision(member=member, sig_col="_fp"),
+    )
+    if max_df is not None or not engaged:
         return _cos(tf_vectors(docs, id_col, text_col, counts))
     member = track(member)  # collapse path: 3 consumers below
-    groups = track(
-        member.groupBy("_tsig").agg(F.min(id_col).alias("_rep"))
-    )
-    rep_ids = groups.select(F.col("_rep").alias(id_col))
+    reps = track(group_reps(member, id_col))
+    rep_ids = reps.select(id_col)
     docs_r = docs.join(rep_ids, id_col, "left_semi")
     counts_r = (
         counts.join(rep_ids, id_col, "left_semi") if counts is not None else None
     )
     tf = track(tf_vectors(docs_r, id_col, text_col, counts_r))
-    rep_sims = _cos(tf)
-    # --- expand: within-group pairs score the rep's self-cosine ------
-    # (inner join on selfdot drops term-less docs, matching the direct
-    # plan where they never enter the index). The _tsig self-join only
-    # multiplies inside identical-text groups: its row count IS the
-    # number of output pairs.
-    unit = _l2_normalize(tf, id_col)
-    selfdot = unit.groupBy(id_col).agg(
-        F.sum(F.col("tf") * F.col("tf")).alias("sim")
+    # within-group pairs score their rep's self-cosine (the inner join
+    # on selfdot drops term-less docs, matching the direct plan where
+    # they never enter the index); cross-group pairs inherit the rep
+    # pair's cosine
+    selfdot = (
+        _l2_normalize(tf, id_col)
+        .groupBy(id_col)
+        .agg(F.sum(F.col("tf") * F.col("tf")).alias("sim"))
     )
-    m1 = member.select(F.col(id_col).alias("id1"), "_tsig")
-    m2 = member.select(F.col(id_col).alias("id2"), "_tsig")
     within = (
-        m1.join(m2, "_tsig")
-        .where(F.col("id1") < F.col("id2"))
-        .join(groups, "_tsig")
-        .join(selfdot.withColumnRenamed(id_col, "_rep"), "_rep")
+        reps.join(selfdot, id_col)
         .where(F.col("sim") >= threshold - THRESHOLD_EPS)
-        .select("id1", "id2", "sim")
+        .select("_fp", "sim")
     )
-    # --- expand: cross-group pairs inherit the rep pair's cosine -----
-    r2sig = groups.select("_rep", "_tsig")
-    g1 = member.select(F.col(id_col).alias("_m1"), F.col("_tsig").alias("_s1"))
-    g2 = member.select(F.col(id_col).alias("_m2"), F.col("_tsig").alias("_s2"))
-    cross = (
-        rep_sims.join(
-            r2sig.select(F.col("_rep").alias("id1"), F.col("_tsig").alias("_s1")),
-            "id1",
-        )
-        .join(
-            r2sig.select(F.col("_rep").alias("id2"), F.col("_tsig").alias("_s2")),
-            "id2",
-        )
-        .join(g1, "_s1")
-        .join(g2, "_s2")
-        .select(
-            F.least("_m1", "_m2").alias("id1"),
-            F.greatest("_m1", "_m2").alias("id2"),
-            "sim",
-        )
-    )
-    return within.unionByName(cross)
+    return expand_rep_pairs(_cos(tf), member, id_col, "sim", within)
 
 
 #: Band-length ladder for the adaptive banding solve, best-first.

@@ -1307,8 +1307,8 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engaged-collapse driver certificate (fixed dup-dense corpora)
 # ---------------------------------------------------------------------------
 #
-# The adaptive representative-collapse plan (operators/dedup.py
-# _maybe_collapse -> _expand_rep_pairs) never engages at sf0.01's
+# The adaptive representative-collapse plan (operators/density.py
+# maybe_collapse -> expand_rep_pairs) never engages at sf0.01's
 # dup-light density, so this query pins collapse="always" on FIXED
 # in-query corpora with planted identical-content clusters -- the
 # driver's oracle gate then proves the ENGAGED plan, not just the
@@ -1373,7 +1373,7 @@ def dedup_collapse_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
       representatives + two singletons; within-group pairs come back
       at the 1.0 self-value and the verified cross-group rep pair
       (1,6) expands over cluster members to (1,6),(2,6),(3,6) -- both
-      _expand_rep_pairs paths under the driver's oracle gate.
+      expand_rep_pairs paths under the driver's oracle gate.
     * ``minhash`` -- MinHash-grain collapse (minhash_dedup_pairs,
       collapse='always'): the banded signature stage runs on
       collapsed representatives only; identical shingle sets share
@@ -1388,7 +1388,7 @@ def dedup_collapse_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
       inherited: (1,5)=(2,6)=1.0); docs 2/3 are base + '.'/'..' --
       byte-distinct but trigram-set-identical to 1, so the CANDIDATE
       stage collapses {1,2,3} to one representative and re-expands
-      pairs BEFORE the banded Levenshtein (_expand_rep_pairs with
+      pairs BEFORE the banded Levenshtein (expand_rep_pairs with
       value_col=None). The t=0.98 threshold proves the DP runs per
       MEMBER pair, not at rep grain: rep pair (1,4) qualifies (1
       substitution over len 72, 0.986111) while its sibling member

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from conversation_analysis_tools_spark.decisions import carried
+
 
 def fold_curation_batch(
     batch_df: DataFrame,
@@ -147,7 +149,7 @@ def stream_curation_funnel(
         .parquet(src_dir)
     )
     q = (
-        stream.writeStream.foreachBatch(fold)
+        stream.writeStream.foreachBatch(carried(fold))
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
         .start()

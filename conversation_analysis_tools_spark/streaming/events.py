@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import carried
 from conversation_analysis_tools_spark.functions.numeric import avg4, cents
 
 EVENT_SCHEMA = (
@@ -528,7 +529,7 @@ def stream_maintain_rollup(
     stream_spark = scoped_session(spark, state_partitions)
     src = read_event_stream(stream_spark, path_dir)
     q = (
-        src.writeStream.foreachBatch(fold_batch)
+        src.writeStream.foreachBatch(carried(fold_batch))
         .trigger(availableNow=True)
         .option("checkpointLocation", rollup_path + "._ckpt")
         .start()

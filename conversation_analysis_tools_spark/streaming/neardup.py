@@ -55,7 +55,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import carried
 from conversation_analysis_tools_spark.operators import dedup as D
+from conversation_analysis_tools_spark.operators.density import group_reps, set_fp
 
 
 def _greedy_admit(
@@ -151,8 +153,8 @@ def fold_neardup_batch(
         # collecting m^2/2 pairs to the driver. Docs with no shingles
         # are absent from ``members`` and pass through untouched,
         # exactly as in the uncollapsed plan (they have no bands).
-        members = D._set_fp(survivors, id_col)
-        reps = D._group_reps(members, id_col)
+        members = set_fp(survivors, id_col)
+        reps = group_reps(members, id_col)
         non_reps = members.join(reps.select(id_col), id_col, "left_anti")
         rep_surv = survivors.join(
             non_reps.select(id_col), id_col, "left_anti"
@@ -239,7 +241,7 @@ def stream_neardup_dedup(
         .parquet(src_dir)
     )
     q = (
-        stream.writeStream.foreachBatch(fold)
+        stream.writeStream.foreachBatch(carried(fold))
         .trigger(availableNow=True)
         .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
         .start()

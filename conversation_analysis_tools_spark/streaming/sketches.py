@@ -33,6 +33,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.decisions import carried
+
 SKETCH_BATCH_MARKER = "_applied_batch.json"
 
 
@@ -122,7 +124,7 @@ def stream_maintain_sketches(
         fold_sketch_batch(batch_df, batch_id, state_path, key_col)
 
     q = (
-        stream.writeStream.foreachBatch(fold)
+        stream.writeStream.foreachBatch(carried(fold))
         .trigger(availableNow=True)
         .option("checkpointLocation", state_path + "._ckpt")
         .start()

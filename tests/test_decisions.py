@@ -94,3 +94,44 @@ def test_adaptive_gates_record_choice_and_inputs(spark, sample_docs):
     assert by_gate["semdedup_prune"] == {
         "gate": "semdedup_prune", "choice": "expression", "n_vectors": 12,
     }
+
+
+def test_carried_reports_to_building_thread_capture():
+    """A callable wrapped with carried() reports to the captures open
+    where it was wrapped, from another thread, and once on its own."""
+    with decisions.capture() as mine:
+        task = decisions.carried(lambda: decisions.record("gate_cb", "c"))
+        t = threading.Thread(target=task)
+        t.start()
+        t.join(timeout=30)
+        task()
+    assert not t.is_alive()
+    assert [r["gate"] for r in mine] == ["gate_cb", "gate_cb"]
+    assert not decisions._OPEN.sinks
+
+
+def test_streaming_fold_decisions_reach_capture(spark, tmp_path):
+    """A curation drain's foreachBatch folds run on Spark's callback
+    thread; their spread_input records reach the caller's capture."""
+    import pandas as pd
+
+    from conversation_analysis_tools_spark.queries.textstats import _v2_gop
+    from conversation_analysis_tools_spark.streaming.curation import (
+        stream_curation_funnel,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for b in range(2):
+        pd.DataFrame({
+            "doc_id": [10 * b + i for i in range(3)],
+            "source": ["src0"] * 3,
+            "text": ["the word " * 30 + f"with tail{b}{i}" for i in range(3)],
+        }).to_parquet(src / f"part{b}.parquet")
+    with decisions.capture() as recs:
+        funnel = stream_curation_funnel(
+            spark, str(src), str(tmp_path / "store"),
+            lambda batch: _v2_gop(batch, cache=False),
+        )
+    assert funnel.count() == 1
+    assert [r for r in recs if r["gate"] == "spread_input"]

@@ -84,6 +84,36 @@ def test_cosine_strategies_agree(spark, sample_docs):
         assert abs(inv[k] - den[k]) < 1e-9, k
 
 
+def test_dense_cosine_multiblock_matches_inverted(spark, monkeypatch):
+    """The dense plan split into B > 1 grid blocks (the global scan's
+    off-diagonal cells included) equals the inverted-index plan."""
+    import random
+
+    rng = random.Random(13)
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words) for _ in range(6))) for i in range(40)],
+        "doc_id long, text string",
+    )
+
+    def pairs(strategy):
+        return {
+            (r["id1"], r["id2"]): round(r["sim"], 9)
+            for r in S.duplicate_pairs(
+                docs, 0.5, strategy=strategy, collapse="never", route="exact"
+            ).collect()
+        }
+
+    inv = pairs("inverted")
+    monkeypatch.setattr(S, "DENSE_BLOCK_ROWS", 8)  # B = 5 blocks, 15 cells
+    with capture() as recs:
+        den = pairs("dense")
+    assert _gate(recs, "pairwise_cosine")[0]["n_docs"] == 40
+    assert inv and set(inv) == set(den)
+    for k in inv:
+        assert abs(inv[k] - den[k]) < 1e-9, k
+
+
 def test_exact_dup_collapse_matches_direct(spark, sample_docs):
     """A dup-heavy corpus (every sample doc replicated 5x byte-exact)
     must trip the adaptive representative-collapse AND produce the
@@ -354,6 +384,20 @@ def test_inverted_plan_has_no_per_doc_broadcast(spark, sample_docs):
     tf = S.tf_vectors(sample_docs)
     plan = S._pairwise_cosine_inverted(tf)._jdf.queryExecution().executedPlan().toString()
     assert "norm1" not in plan and "norm2" not in plan
+
+
+def test_simhash_null_and_empty_text_pair_at_zero(spark):
+    """NULL text gets signature 0 like empty text, so the two pair at
+    hamming 0 through simhash_pairs."""
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "gradient descent converges slowly here")],
+        "doc_id long, text string",
+    )
+    sig = D.simhash(docs)
+    sigs = {r["doc_id"]: r["simhash"] for r in sig.collect()}
+    assert sigs[1] == 0 and sigs[2] == 0 and sigs[3] != 0
+    pairs = [tuple(r) for r in D.simhash_pairs(sig, max_hamming=3).collect()]
+    assert (1, 2, 0) in pairs
 
 
 def test_simhash_banding_is_exact_pigeonhole(spark):
@@ -958,6 +1002,59 @@ def test_vectorized_assign_and_dense_semdedup_null_rows(spark):
     assert len(out) == 4
     assert out[3][0] is None and out[3][1] is True  # null row: kept singleton
     assert out[0][0] == 0 and out[2][0] == 1
+
+
+def test_ivf_assign_vectorized_matches_expression(spark):
+    """The vectorized (numpy) and expression assignments pick the same
+    centroid on a seeded corpus without near-ties, NULL rows included."""
+    import numpy as np
+
+    from conversation_analysis_tools_spark.operators.ann import ivf_assign
+
+    rng = np.random.default_rng(17)
+    cents = rng.normal(size=(7, 8))
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(300)]
+    rows.append((300, None))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    d = np.array([[np.sum((np.array(v) - c) ** 2) for c in cents] for _, v in rows[:-1]])
+    top2 = np.sort(d, axis=1)[:, :2]
+    assert (top2[:, 1] - top2[:, 0]).min() > 1e-6  # tie-free
+    expr = {r["vec_id"]: r["centroid_id"] for r in ivf_assign(emb, cents).collect()}
+    vec = {
+        r["vec_id"]: r["centroid_id"]
+        for r in ivf_assign(emb, cents, vectorized=True).collect()
+    }
+    assert expr == vec
+    assert vec[300] is None
+
+
+def test_embedding_dup_pairs_unblocked_matches_reference(spark, monkeypatch):
+    """Without a blocking key embedding_dup_pairs runs the global grid
+    scan; over several grid blocks it equals a numpy all-pairs cosine
+    (a zero vector pairs with nothing)."""
+    import numpy as np
+
+    rng = np.random.default_rng(19)
+    vecs = [rng.normal(size=5) for _ in range(30)] + [np.zeros(5)]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    monkeypatch.setattr(S, "DENSE_BLOCK_ROWS", 7)
+    got = {
+        (r["id1"], r["id2"]): r["sim"]
+        for r in D.embedding_dup_pairs(df, 0.4, block_col=None).collect()
+    }
+    want = {}
+    for i in range(len(vecs)):
+        for j in range(i + 1, len(vecs)):
+            na, nb = np.linalg.norm(vecs[i]), np.linalg.norm(vecs[j])
+            sim = 0.0 if na == 0 or nb == 0 else float(vecs[i] @ vecs[j] / (na * nb))
+            if sim >= 0.4 - 1e-9:
+                want[(i, j)] = sim
+    assert want and set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-9, k
 
 
 def test_grouped_grid_pairs_string_group_key(spark):

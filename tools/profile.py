@@ -27,9 +27,9 @@ JSON line per query; the layered numbers come from the last trial:
 - ``rows``, the length of the collected result;
 - ``trial_walls``, the build-to-collect wall of every trial;
 - ``decisions``, the adaptive-gate records (``decisions.capture()``)
-  made during the last trial's build and collect, in call order. A
-  capture sees its own thread only, so gates run inside a streaming
-  ``foreachBatch`` callback are not listed.
+  made during the last trial's build and collect, in call order,
+  including those of streaming ``foreachBatch`` folds (the streaming
+  drains wrap their folds with ``decisions.carried``).
 
 A query that raises prints ``{"query", "error"}`` instead, and the tool
 exits 1 after the others have run. ``--plans DIR`` writes each query's

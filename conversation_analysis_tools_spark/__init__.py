@@ -17,8 +17,17 @@ Layout:
     streaming/  -- Structured Streaming extensions over event tables
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from conversation_analysis_tools_spark.session import get_spark
 from conversation_analysis_tools_spark.catalog import load_tables, register_views
+
+# Functions of this package that a UDF reaches are pickled by value, so
+# Python workers run them without importing the package (an application
+# that puts the repo on its own sys.path alone still works).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "load_tables", "register_views"]
 __version__ = "0.1.0"

@@ -42,28 +42,36 @@ DIM_TABLES = ("region", "nation", "supplier")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Read the events table, normalizing ``ts`` to TIMESTAMP_LTZ.
+def raw_events(spark: SparkSession, path: str) -> DataFrame:
+    """The events parquet at ``path`` as stored, with a NANOS ``ts``
+    read as its long nanoseconds (vanilla Spark rejects the type);
+    :func:`events_ts` normalizes it."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
+
+
+def events_ts(events: DataFrame) -> DataFrame:
+    """``events`` (batch or stream, read as :func:`raw_events` reads
+    it) with ``ts`` as TIMESTAMP_LTZ.
 
     The synthetic ``events.ts`` physical type has varied across data
-    generations: INT64 TIMESTAMP(NANOS,false) (vanilla Spark rejects
-    it -- read nanos as long and rebuild micros, the same truncation
-    DuckDB applies narrowing ns -> us) or TIMESTAMP(MICROS,
-    isAdjustedToUTC=false) (Spark reads TIMESTAMP_NTZ, which
-    ``unix_micros``/watermarks refuse). The session timezone is pinned
-    to UTC, so the NTZ -> LTZ cast is wall-clock-identity and matches
-    DuckDB's naive-timestamp oracle reads either way.
+    generations: INT64 TIMESTAMP(NANOS,false) (read as long; rebuild
+    micros, the same truncation DuckDB applies narrowing ns -> us) or
+    TIMESTAMP(MICROS, isAdjustedToUTC=false) (Spark reads
+    TIMESTAMP_NTZ, which ``unix_micros``/watermarks refuse). The
+    session timezone is pinned to UTC, so the NTZ -> LTZ cast is
+    wall-clock-identity and matches DuckDB's naive-timestamp oracle
+    reads either way.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(df.schema["ts"].dataType, TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    ts = events.schema["ts"].dataType
+    if isinstance(ts, LongType):
+        return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts, TimestampNTZType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
@@ -100,7 +108,9 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
-    return _read_events(spark, path) if name == "events" else spark.read.parquet(path)
+    if name == "events":
+        return events_ts(raw_events(spark, path))
+    return spark.read.parquet(path)
 
 
 def staging_dir(kind: str, sf_dir: str) -> str:

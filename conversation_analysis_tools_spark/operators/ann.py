@@ -251,8 +251,8 @@ def _nearest_centroid(centroids):
     - 2 v.c with the cross term as one BLAS product, tiny negative
     residues clamped to 0. Ties take the FIRST centroid, like the
     expression path, and NULL vectors get NULL for both, like its null
-    propagation. The function is a closure, so Python workers unpickle
-    it by value without importing this package."""
+    propagation. The centroid matrix and its squared norms are bound
+    once, when the function is built."""
     import pandas as pd
 
     cents = np.asarray(centroids, dtype=np.float64)

@@ -172,7 +172,12 @@ _SIMHASH_VALUE_SQL = " + ".join(
         FROM tok GROUP BY doc_id, term
     ),
     sums AS (SELECT doc_id, {_SIMHASH_BITSUM_SQL} FROM counts GROUP BY doc_id),
-    sigs AS (SELECT doc_id, CAST({_SIMHASH_VALUE_SQL} AS BIGINT) AS simhash FROM sums),
+    -- every document: a token-less one has NULL sums, every CASE
+    -- falls to 0, and its signature is 0, as in operators/dedup.simhash
+    sigs AS (
+        SELECT doc_id, CAST({_SIMHASH_VALUE_SQL} AS BIGINT) AS simhash
+        FROM documents LEFT JOIN sums USING (doc_id)
+    ),
     blocks AS (
         SELECT doc_id, simhash, j AS blk,
                (simhash >> ({D.SIMHASH_BLOCK_BITS} * j)) & {D.SIMHASH_BLOCK_MASK} AS val

@@ -324,12 +324,11 @@ def streaming_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload bytes never enter the state store (only the KB-scale
     feature rows shuffle)."""
     import os
-    import uuid
 
     from conversation_analysis_tools_spark.catalog import staging_dir
     from conversation_analysis_tools_spark.operators import audio as A
     from conversation_analysis_tools_spark.streaming.events import (
-        run_to_memory_sink,
+        drain,
         scoped_session,
     )
 
@@ -350,9 +349,7 @@ def streaming_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("energy").alias("total_energy"),
         F.sum("zero_crossings").cast("bigint").alias("total_crossings"),
     )
-    name = f"audio_feat_sink_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(agg, name)
-    return s2.table(name)
+    return drain(agg)
 
 
 @register(
@@ -533,12 +530,11 @@ def streaming_audio_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     large to inline: checkpointed progress and state track manifest
     rows; packfiles are immutable blobs fetched on demand."""
     import os
-    import uuid
 
     from conversation_analysis_tools_spark.operators import audio as A
     from conversation_analysis_tools_spark.operators import manifest as MF
     from conversation_analysis_tools_spark.streaming.events import (
-        run_to_memory_sink,
+        drain,
         scoped_session,
     )
 
@@ -558,9 +554,7 @@ def streaming_audio_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("energy").alias("total_energy"),
         F.sum("zero_crossings").cast("bigint").alias("total_crossings"),
     )
-    name = f"audio_manifest_sink_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(agg, name)
-    return s2.table(name)
+    return drain(agg)
 
 
 #: Fixed raster corpus (media_id, width, height): two factor-4

@@ -17,8 +17,8 @@ from conversation_analysis_tools_spark.catalog import table as _catalog_table
 from conversation_analysis_tools_spark.functions.numeric import avg4
 from conversation_analysis_tools_spark.queries.registry import register
 from conversation_analysis_tools_spark.streaming import (
+    drain,
     read_event_stream,
-    run_to_memory_sink,
     session_aggregate,
     sliding_counts,
     tumbling_counts,
@@ -115,13 +115,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink. The finite stream drains completely under
     availableNow + complete mode, so every window emits and the result
     equals the batch tumbling agg -- strict oracle."""
-    import uuid
-
-    name = f"stream_sink_{uuid.uuid4().hex[:8]}"
-    src = _staged_stream(spark, sf_dir)
-    agg = tumbling_counts(src, "1 hour")
-    run_to_memory_sink(agg, name)
-    return src.sparkSession.table(name)
+    return drain(tumbling_counts(_staged_stream(spark, sf_dir), "1 hour"))
 
 
 @register(
@@ -210,8 +204,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     finite stream drains completely, the result equals the batch join
     -- so this real streaming execution still has a strict oracle.
     """
-    import uuid
-
     from conversation_analysis_tools_spark.streaming import enrich_with_dim
 
     src = _staged_stream(spark, sf_dir)
@@ -237,9 +229,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(agg, name)
-    return src.sparkSession.table(name)
+    return drain(agg)
 
 
 @register(
@@ -258,15 +248,13 @@ def streaming_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-occurrences past it pass through again -- see
     streaming.dedup_first).
     """
-    import uuid
-
     from conversation_analysis_tools_spark.streaming import dedup_first
 
     src = _staged_stream(spark, sf_dir)
-    deduped = dedup_first(src, ["user_id", "event_type"], watermark=None)
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    run_to_memory_sink(deduped, name, output_mode="append")
-    return src.sparkSession.table(name)
+    return drain(
+        dedup_first(src, ["user_id", "event_type"], watermark=None),
+        output_mode="append",
+    )
 
 
 @register(
@@ -299,13 +287,27 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the sink table (chaining a second stateful op onto a stream-
     stream join is the one shape to avoid).
     """
-    import uuid
+    from conversation_analysis_tools_spark.streaming.events import (
+        parquet_row_count,
+        scoped_session,
+        size_state_partitions,
+    )
 
-    from conversation_analysis_tools_spark.streaming.events import scoped_session
-
+    # State-volume-derived partition count (round 12; the committed
+    # constant 4 was the sf0.1 OUTCOME, not a scalable input): the
+    # 35-day watermark exceeds the corpus span, so both sides buffer
+    # every view and click -- 2 of the 5 near-uniform event types, so
+    # est_state ~ 2/5 of the events footer row count (parquet
+    # metadata, no job; sizing needs only the order of magnitude).
+    # At sf0.1 AND sf1 this derives the A/B-measured optimum 4 (40k /
+    # 400k state rows both sit under the 1M-rows-per-partition memory
+    # target, so the floor holds); a 100 TB backlog derives the
+    # thousands of partitions that keep each of the join's
+    # 4-stores-per-partition state bounded.
+    est_state = parquet_row_count(f"{sf_dir}/events.parquet") * 2 // 5
     # ONE scoped session for both streams: a stream-stream join must
     # not straddle two sessions
-    s2 = scoped_session(spark, 8)
+    s2 = scoped_session(spark, size_state_partitions(est_state))
     views = (
         _staged_stream(s2, sf_dir, scope=False)
         .where(F.col("event_type") == "view")
@@ -324,32 +326,8 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("v_ts"))
         & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 2 HOURS")),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    # State-volume-derived partition count (round 12; the committed
-    # constant 4 was the sf0.1 OUTCOME, not a scalable input): the
-    # 35-day watermark exceeds the corpus span, so both sides buffer
-    # every view and click -- 2 of the 5 near-uniform event types, so
-    # est_state ~ 2/5 of the events footer row count (driver-side
-    # metadata, no job; sizing needs only the order of magnitude).
-    # At sf0.1 AND sf1 this derives the A/B-measured optimum 4 (40k /
-    # 400k state rows both sit under the 1M-rows-per-partition memory
-    # target, so the floor holds); a 100 TB backlog derives the
-    # thousands of partitions that keep each of the join's
-    # 4-stores-per-partition state bounded.
-    from conversation_analysis_tools_spark.streaming.events import (
-        parquet_row_count,
-        size_state_partitions,
-    )
-
-    est_state = parquet_row_count(f"{sf_dir}/events.parquet") * 2 // 5
-    run_to_memory_sink(
-        joined,
-        name,
-        output_mode="append",
-        state_partitions=size_state_partitions(est_state),
-    )
     return (
-        s2.table(name)
+        drain(joined, output_mode="append")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count("*").alias("n_pairs"),

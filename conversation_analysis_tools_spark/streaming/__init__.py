@@ -6,7 +6,7 @@ from conversation_analysis_tools_spark.streaming.events import (
     tumbling_counts,
     sliding_counts,
     session_aggregate,
-    run_to_memory_sink,
+    drain,
     enrich_with_dim,
     dedup_first,
 )
@@ -16,7 +16,7 @@ __all__ = [
     "tumbling_counts",
     "sliding_counts",
     "session_aggregate",
-    "run_to_memory_sink",
+    "drain",
     "enrich_with_dim",
     "dedup_first",
 ]

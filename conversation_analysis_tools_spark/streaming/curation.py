@@ -42,7 +42,6 @@ co-located; nothing in the fold collects to the driver.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Callable
 
@@ -50,7 +49,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from conversation_analysis_tools_spark.decisions import carried
+from conversation_analysis_tools_spark.streaming.events import (
+    drain,
+    scoped_session,
+    skip_replays,
+)
 
 
 def fold_curation_batch(
@@ -113,54 +116,33 @@ def stream_curation_funnel(
     src_dir: str,
     store_dir: str,
     stage_fn: Callable[[DataFrame], DataFrame],
-    timeout_sec: int = 240,
 ) -> DataFrame:
     """Drain the staged document stream (one file per micro-batch, in
     file order) through the curation fold; return the per-source
     funnel -- column-identical to curation_pipeline_v2's output, which
     is what lets the two share an oracle.
 
-    Replay safety mirrors stream_neardup_dedup: an applied-batch
-    marker skips folds the store already absorbed, per-batch
-    partitions overwrite on replay, and an incomplete drain RAISES
+    Replay safety: the applied-batch marker skips folds the store
+    already absorbed (events.skip_replays), per-batch partitions
+    overwrite on replay, and an incomplete drain RAISES (events.drain)
     instead of returning a truncated funnel."""
-    from conversation_analysis_tools_spark.streaming.events import scoped_session
-
-    s2 = scoped_session(spark, 8)
-    marker = os.path.join(store_dir, "_applied_batch.json")
-
-    def applied() -> int:
-        if not os.path.exists(marker):
-            return -1
-        with open(marker) as f:
-            return json.load(f)["batch_id"]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= applied():
-            return
-        fold_curation_batch(batch_df, batch_id, store_dir, stage_fn)
-        with open(marker, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-
     stream = (
-        s2.readStream.schema("doc_id bigint, source string, text string")
+        scoped_session(spark, 8)
+        .readStream.schema("doc_id bigint, source string, text string")
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(src_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(carried(fold))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
-        .start()
+    drain(
+        stream,
+        skip_replays(
+            store_dir,
+            lambda batch_df, batch_id: fold_curation_batch(
+                batch_df, batch_id, store_dir, stage_fn
+            ),
+        ),
+        os.path.join(store_dir, "_ckpt"),
     )
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            f"curation drain did not finish within {timeout_sec}s; "
-            "store holds a PARTIAL funnel -- not returning it"
-        )
     funnel_path = os.path.join(store_dir, "funnel")
     if not os.path.exists(funnel_path):
         return spark.createDataFrame(

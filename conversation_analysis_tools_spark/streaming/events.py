@@ -15,46 +15,29 @@ sessions).
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from conversation_analysis_tools_spark.catalog import events_ts, raw_events
 from conversation_analysis_tools_spark.decisions import carried
 from conversation_analysis_tools_spark.functions.numeric import avg4, cents
 
-EVENT_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
-
-def read_event_stream(
-    spark: SparkSession, path_dir: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File-source stream over an events parquet directory.
-
-    The parquet ``ts`` physical type varies across generators --
-    TIMESTAMP(NANOS) (vanilla Spark reads it as long under
-    ``nanosAsLong``) vs TIMESTAMP(MICROS) (reads as timestamp).
-    ``readStream`` needs an explicit schema, so probe it with a batch
-    read of the same directory, exactly like catalog._read_events.
-    """
-    from pyspark.sql.types import LongType
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probed = spark.read.parquet(path_dir)
-    ts_is_nanos_long = isinstance(probed.schema["ts"].dataType, LongType)
-    ts_decl = "ts bigint" if ts_is_nanos_long else "ts timestamp"
-    df = (
-        spark.readStream.schema(
-            f"event_id bigint, {ts_decl}, user_id bigint, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+def read_event_stream(spark: SparkSession, path_dir: str) -> DataFrame:
+    """File-source stream over an events parquet directory, one file
+    per micro-batch. ``readStream`` needs an explicit schema: it takes
+    the batch read's, so the stream's ``ts`` goes through the batch
+    reader's rule (catalog.events_ts)."""
+    stream = (
+        spark.readStream.schema(raw_events(spark, path_dir).schema)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path_dir)
     )
-    if ts_is_nanos_long:
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return events_ts(stream)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -201,8 +184,6 @@ def parquet_row_count(path: str) -> int:
     metadata -- driver-side, no Spark job (the streaming state-sizing
     probe; at cluster scale this is one metadata read per file, the
     same cost as planning the scan)."""
-    import os
-
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
@@ -214,61 +195,65 @@ def parquet_row_count(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def run_to_memory_sink(
-    stream_df: DataFrame,
-    name: str,
-    timeout_sec: int = 120,
+#: Seconds a drain may run before it is stopped and raises.
+DRAIN_TIMEOUT_SEC = 240
+
+
+def drain(
+    stream: DataFrame,
+    fold: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
     output_mode: str = "complete",
-    state_partitions: int | None = 8,
-) -> None:
-    """Execute a streaming query to completion with availableNow (all
-    existing files, then stop) into an in-memory table ``name``
-    (session-scoped: read it back via ``stream_df.sparkSession``).
+) -> DataFrame | None:
+    """Run ``stream`` to completion with ``availableNow`` (every file
+    its source holds now, then stop) and wait for it.
 
-    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` for
-    the duration of the stream: a stateful query creates one state
-    store per shuffle partition per stateful operator, and store
-    open/commit overhead dominates small drains (stream-stream join at
-    sf0.1: 12.8 s with 32 stores/side vs 2.6 s with 4). The partition
-    count is baked into the checkpoint at first start, so this is a
-    per-query layout decision: size it to state volume (local test
-    corpus: 8; a 100 TB cluster: hundreds-to-thousands so each store's
-    state fits executor memory), not to the batch parallelism default.
+    With ``fold``, every micro-batch goes to ``fold(batch_df,
+    batch_id)`` through ``foreachBatch``, progress is kept in
+    ``checkpoint``, and the fold's decisions reach the captures open
+    here (decisions.carried); returns None. Without, the rows go to a
+    new in-memory table in ``output_mode`` with a temporary checkpoint,
+    and the table is returned (on the stream's session).
 
-    Build the stream on :func:`scoped_session` (as ``_staged_stream``
-    does) so the conf set/restore below touches a session DEDICATED to
-    this stream -- mutating the shared session would race any query
-    planned concurrently on it.
+    A stream that fails raises its error. One still running after
+    DRAIN_TIMEOUT_SEC is stopped and raises: its sink holds a partial
+    result, which is never returned. The stateful operators' partition
+    count is the stream session's (build it on :func:`scoped_session`).
     """
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+    import uuid
+
+    writer = stream.writeStream.trigger(availableNow=True)
+    if fold is None:
+        name = f"drain_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(name).outputMode(output_mode)
+    else:
+        writer = writer.foreachBatch(carried(fold)).option(
+            "checkpointLocation", checkpoint
         )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:
-            q.stop()
-    finally:
-        # restore only after the drain: the partition count is read at
-        # first micro-batch planning, which races .start() returning
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = writer.start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_SEC):
+        q.stop()
+        raise RuntimeError(
+            f"stream drain did not finish within {DRAIN_TIMEOUT_SEC}s; "
+            "its sink holds a PARTIAL result -- not returning it"
+        )
+    return None if fold is not None else stream.sparkSession.table(name)
 
 
 def scoped_session(spark: "SparkSession", shuffle_partitions: int | None) -> "SparkSession":
     """Clone the session for one streaming query: same SparkContext
-    and cached data, separate SQLConf -- so per-stream tuning
-    (state-store partition count) never leaks into queries planned
-    concurrently on the shared session. Carries over the confs the
-    engine depends on (``newSession()`` resets runtime-set confs to
-    builder defaults)."""
+    and cached data, separate SQLConf -- so per-stream tuning never
+    leaks into queries planned concurrently on the shared session.
+    Carries over the confs the engine depends on (``newSession()``
+    resets runtime-set confs to builder defaults).
+
+    ``shuffle_partitions`` is the stream's state layout: a stateful
+    query opens one state store per shuffle partition per stateful
+    operator, and store open/commit dominates small drains
+    (stream-stream join at sf0.1: 12.8 s with 32 stores/side vs 2.6 s
+    with 4). The count is baked into the checkpoint at first start, so
+    size it to state volume (:func:`size_state_partitions`), not to the
+    batch parallelism default."""
     s2 = spark.newSession()
     for k in (
         "spark.sql.session.timeZone",
@@ -417,28 +402,48 @@ def sessionize_with_state(
     )
 
 
-#: Marker filename recording the last folded batch id; the leading
+#: The last batch id folded into a state directory; the leading
 #: underscore keeps parquet scans from reading it as data.
-ROLLUP_BATCH_MARKER = "_applied_batch.json"
+BATCH_MARKER = "_applied_batch.json"
 
 
-def rollup_applied_batch(rollup_path: str) -> int:
-    """Last batch id folded into the rollup at ``rollup_path``
-    (-1 before the first fold)."""
-    import json
-    import os
-
-    p = os.path.join(rollup_path, ROLLUP_BATCH_MARKER)
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)["batch_id"]
-    return -1
+def rollup_applied_batch(state_dir: str) -> int:
+    """Last batch id folded into the state at ``state_dir`` (-1 before
+    the first fold)."""
+    p = os.path.join(state_dir, BATCH_MARKER)
+    if not os.path.exists(p):
+        return -1
+    with open(p) as f:
+        return json.load(f)["batch_id"]
 
 
-def fold_rollup_batch(
-    batch_df: "DataFrame", batch_id: int, rollup_path: str, keys: tuple
+def _mark_applied(state_dir: str, batch_id: int) -> None:
+    with open(os.path.join(state_dir, BATCH_MARKER), "w") as f:
+        json.dump({"batch_id": batch_id}, f)
+
+
+def skip_replays(store_dir: str, fold):
+    """``fold`` as a foreachBatch function that skips batches the
+    marker in ``store_dir`` records and marks each batch it folds. For
+    folds whose outputs land in per-batch partitions that a replay
+    overwrites: the marker written after the fold is a skip, not the
+    commit."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= rollup_applied_batch(store_dir):
+            return
+        fold(batch_df, batch_id)
+        _mark_applied(store_dir, batch_id)
+
+    return run
+
+
+def swap_fold(
+    batch_df: DataFrame, batch_id: int, state_path: str, build, merge
 ) -> bool:
-    """Fold ONE micro-batch into the persistent rollup, exactly once.
+    """Fold ONE micro-batch into the parquet state at ``state_path``,
+    exactly once: the next state is ``build(batch_df)``, merged into
+    the current one with ``merge(state, delta)`` after the first fold.
 
     ``foreachBatch`` is at-least-once: a failure between the sink
     write and the checkpoint commit (or a restart with a lagging
@@ -446,54 +451,54 @@ def fold_rollup_batch(
     ATOMICALLY with the state it describes -- marker file written into
     the staged directory, then directory-rename swap -- and a replay
     (batch_id <= recorded) is skipped. Returns False for skips.
-    """
-    import json
-    import os
-    import shutil
+    Parquet has no in-place MERGE (a table format -- Delta/Iceberg --
+    makes this a transactional MERGE INTO at scale), so the
+    transaction is the directory swap."""
+    # crash-window recovery: a failure between the two swap renames
+    # below leaves the only state copy stranded in ._old -- restore
+    # it before the marker read / exists-probe treat state as empty
+    old = state_path + "._old"
+    if not os.path.exists(state_path) and os.path.exists(old):
+        os.rename(old, state_path)
+    if batch_id <= rollup_applied_batch(state_path):
+        return False
+    nxt = build(batch_df)
+    if os.path.exists(state_path):
+        nxt = merge(batch_df.sparkSession.read.parquet(state_path), nxt)
+    staged = state_path + "._staged"
+    shutil.rmtree(staged, ignore_errors=True)
+    nxt.write.mode("overwrite").parquet(staged)
+    _mark_applied(staged, batch_id)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(state_path):
+        os.rename(state_path, old)
+    os.rename(staged, state_path)
+    shutil.rmtree(old, ignore_errors=True)
+    return True
 
+
+def fold_rollup_batch(
+    batch_df: "DataFrame", batch_id: int, rollup_path: str, keys: tuple
+) -> bool:
+    """Fold ONE micro-batch into the persistent rollup, exactly once
+    (:func:`swap_fold`: addition would double-count a replay). Returns
+    False for skipped replays."""
     from conversation_analysis_tools_spark.operators.rollup import (
         build_rollup,
         merge_rollup,
     )
 
-    # crash-window recovery: a failure between the two swap renames
-    # below leaves the only state copy stranded in ._old -- restore
-    # it before the marker read / exists-probe treat state as empty
-    old = rollup_path + "._old"
-    if not os.path.exists(rollup_path) and os.path.exists(old):
-        os.rename(old, rollup_path)
-    if batch_id <= rollup_applied_batch(rollup_path):
-        return False
-    sess = batch_df.sparkSession  # the scoped stream session
-    delta = build_rollup(batch_df, *keys)
-    if os.path.exists(rollup_path):
-        merged = merge_rollup(sess.read.parquet(rollup_path), delta)
-    else:
-        merged = delta
-    # stage next state + its batch marker, then swap via renames:
-    # parquet has no in-place MERGE (a table format -- Delta/Iceberg
-    # -- would make this a transactional MERGE INTO at scale), so the
-    # poor-man's transaction is a directory swap
-    staged = rollup_path + "._staged"
-    shutil.rmtree(staged, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staged)
-    with open(os.path.join(staged, ROLLUP_BATCH_MARKER), "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(rollup_path):
-        os.rename(rollup_path, old)
-    os.rename(staged, rollup_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return True
+    return swap_fold(
+        batch_df,
+        batch_id,
+        rollup_path,
+        lambda batch: build_rollup(batch, *keys),
+        merge_rollup,
+    )
 
 
 def stream_maintain_rollup(
-    spark: SparkSession,
-    path_dir: str,
-    rollup_path: str,
-    *keys: str,
-    state_partitions: int | None = 8,
-    timeout_sec: int = 120,
+    spark: SparkSession, path_dir: str, rollup_path: str, *keys: str
 ) -> DataFrame:
     """Continuous incremental-rollup maintenance via ``foreachBatch``:
     each micro-batch of the event stream is folded into the persistent
@@ -513,30 +518,19 @@ def stream_maintain_rollup(
     all events regardless of how the stream was micro-batched --
     pinned by tests/test_ann_streaming.py. Returns the final state.
 
-    Exactly-once fold: ``foreachBatch`` is at-least-once, so each
-    applied batch_id is recorded in a ``_applied_batch.json`` marker
-    INSIDE the rollup directory and the new state is swapped in with
-    directory renames -- the marker and the data it describes commit
-    together, and a replayed micro-batch (failure between sink write
-    and checkpoint commit, or a restart with a lagging checkpoint) is
-    detected and skipped instead of double-counted.
+    Exactly-once fold: each batch commits with its batch id through
+    :func:`swap_fold`, so a replayed micro-batch is skipped instead of
+    double-counted.
     """
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_rollup_batch(batch_df, batch_id, rollup_path, keys)
-
     # dedicated cloned session: state-store partition count is scoped
     # to this stream instead of mutating the shared session's conf
-    stream_spark = scoped_session(spark, state_partitions)
-    src = read_event_stream(stream_spark, path_dir)
-    q = (
-        src.writeStream.foreachBatch(carried(fold_batch))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", rollup_path + "._ckpt")
-        .start()
+    drain(
+        read_event_stream(scoped_session(spark, 8), path_dir),
+        lambda batch_df, batch_id: fold_rollup_batch(
+            batch_df, batch_id, rollup_path, keys
+        ),
+        rollup_path + "._ckpt",
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
     return spark.read.parquet(rollup_path)
 
 

@@ -55,9 +55,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversation_analysis_tools_spark.decisions import carried
 from conversation_analysis_tools_spark.operators import dedup as D
 from conversation_analysis_tools_spark.operators.density import group_reps, set_fp
+from conversation_analysis_tools_spark.streaming.events import (
+    drain,
+    scoped_session,
+    skip_replays,
+)
 
 
 def _greedy_admit(
@@ -202,57 +206,34 @@ def stream_neardup_dedup(
     src_dir: str,
     store_dir: str,
     threshold: float = 0.2,
-    timeout_sec: int = 240,
 ) -> DataFrame:
     """Drain the staged document stream (one file per micro-batch, in
     file order) through the near-dup admission fold; returns the
     admitted doc ids.
 
     Replay safety: the applied batch_id marker skips folds the store
-    has already absorbed, and the per-batch store partitions make a
-    replayed (or crashed-midway) fold overwrite its own output --
-    either way the store converges. An incomplete drain RAISES
-    instead of returning a truncated admission set."""
-    import json
-
-    from conversation_analysis_tools_spark.streaming.events import scoped_session
-
-    s2 = scoped_session(spark, 8)
-    marker = os.path.join(store_dir, "_applied_batch.json")
-
-    def applied() -> int:
-        if not os.path.exists(marker):
-            return -1
-        with open(marker) as f:
-            return json.load(f)["batch_id"]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= applied():
-            return
-        fold_neardup_batch(batch_df, batch_id, store_dir, threshold)
-        with open(marker, "w") as f:
-            json.dump({"batch_id": batch_id}, f)
-
-    schema = "doc_id bigint, text string"
+    has already absorbed (events.skip_replays), and the per-batch
+    store partitions make a replayed (or crashed-midway) fold
+    overwrite its own output -- either way the store converges. An
+    incomplete drain RAISES (events.drain) instead of returning a
+    truncated admission set."""
     stream = (
-        s2.readStream.schema(schema)
+        scoped_session(spark, 8)
+        .readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(src_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(carried(fold))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
-        .start()
+    drain(
+        stream,
+        skip_replays(
+            store_dir,
+            lambda batch_df, batch_id: fold_neardup_batch(
+                batch_df, batch_id, store_dir, threshold
+            ),
+        ),
+        os.path.join(store_dir, "_ckpt"),
     )
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise RuntimeError(
-            f"near-dup drain did not finish within {timeout_sec}s; "
-            "store holds a PARTIAL admission set -- not returning it"
-        )
     arrs_path = os.path.join(store_dir, "arrs")
     if not os.path.exists(arrs_path):
         # zero source files -> no fold ever ran -> empty admission set

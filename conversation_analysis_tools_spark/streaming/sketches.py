@@ -14,36 +14,27 @@ state. Two algebraic properties carry the correctness story:
 * union is IDEMPOTENT (HLL registers are per-bucket maxima), so an
   at-least-once replay of a batch re-unions the same items into a
   state that already contains them -- a no-op by algebra, not by
-  bookkeeping. The batch marker below is therefore only a skip
+  bookkeeping. The batch marker is therefore only a skip
   optimization, not a correctness requirement (contrast
   fold_rollup_batch, where addition would double-count).
 
-State layout is plain parquet with the same staged-directory rename
-swap as the rollup fold (at 100 TB a table format -- Delta/Iceberg --
-makes this a transactional MERGE INTO); the state is one ~4 KB sketch
-row per day, KB-scale regardless of event volume.
+State layout is plain parquet, committed with its batch marker by the
+staged-directory rename swap the rollup fold also uses
+(events.swap_fold); the state is one ~4 KB sketch row per day,
+KB-scale regardless of event volume.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversation_analysis_tools_spark.decisions import carried
-
-SKETCH_BATCH_MARKER = "_applied_batch.json"
-
-
-def _applied(state_path: str) -> int:
-    p = os.path.join(state_path, SKETCH_BATCH_MARKER)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return json.load(f)["batch_id"]
+from conversation_analysis_tools_spark.streaming.events import (
+    drain,
+    read_event_stream,
+    scoped_session,
+    swap_fold,
+)
 
 
 def build_day_sketches(events: DataFrame, key_col: str = "user_id") -> DataFrame:
@@ -72,65 +63,28 @@ def merge_day_sketches(state: DataFrame, delta: DataFrame) -> DataFrame:
 def fold_sketch_batch(
     batch_df: DataFrame, batch_id: int, state_path: str, key_col: str = "user_id"
 ) -> bool:
-    """Fold one micro-batch into the persistent day-sketch table.
-    Returns False for marker-skipped replays (which would also be
-    harmless to apply -- union is idempotent)."""
-    # crash-window recovery: a failure between the two swap renames
-    # leaves the only state copy stranded in ._old -- restore it
-    # before the exists-probe below would treat the store as empty
-    old = state_path + "._old"
-    if not os.path.exists(state_path) and os.path.exists(old):
-        os.rename(old, state_path)
-    if batch_id <= _applied(state_path):
-        return False
-    sess = batch_df.sparkSession
-    delta = build_day_sketches(batch_df, key_col)
-    if os.path.exists(state_path):
-        merged = merge_day_sketches(sess.read.parquet(state_path), delta)
-    else:
-        merged = delta
-    staged = state_path + "._staged"
-    shutil.rmtree(staged, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(staged)
-    with open(os.path.join(staged, SKETCH_BATCH_MARKER), "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(state_path):
-        os.rename(state_path, old)
-    os.rename(staged, state_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return True
+    """Fold one micro-batch into the persistent day-sketch table
+    (events.swap_fold). Returns False for marker-skipped replays
+    (which would also be harmless to apply -- union is idempotent)."""
+    return swap_fold(
+        batch_df,
+        batch_id,
+        state_path,
+        lambda batch: build_day_sketches(batch, key_col),
+        merge_day_sketches,
+    )
 
 
 def stream_maintain_sketches(
-    spark: SparkSession,
-    path_dir: str,
-    state_path: str,
-    key_col: str = "user_id",
-    state_partitions: int | None = 8,
-    timeout_sec: int = 120,
+    spark: SparkSession, path_dir: str, state_path: str, key_col: str = "user_id"
 ) -> DataFrame:
     """Drain the staged event stream through the sketch fold; returns
     the maintained day-sketch table."""
-    from conversation_analysis_tools_spark.streaming.events import (
-        read_event_stream,
-        scoped_session,
+    drain(
+        read_event_stream(scoped_session(spark, 8), path_dir),
+        lambda batch_df, batch_id: fold_sketch_batch(
+            batch_df, batch_id, state_path, key_col
+        ),
+        state_path + "._ckpt",
     )
-
-    s2 = scoped_session(spark, state_partitions)
-    stream = read_event_stream(s2, path_dir)
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_sketch_batch(batch_df, batch_id, state_path, key_col)
-
-    q = (
-        stream.writeStream.foreachBatch(carried(fold))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + "._ckpt")
-        .start()
-    )
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise RuntimeError(f"sketch drain did not finish within {timeout_sec}s")
     return spark.read.parquet(state_path)

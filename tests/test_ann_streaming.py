@@ -68,10 +68,11 @@ def test_ivf_assignment_covers_all(spark):
 
 def test_streaming_tumbling_matches_batch(spark):
     from conversation_analysis_tools_spark.streaming import (
+        drain,
         read_event_stream,
-        run_to_memory_sink,
         tumbling_counts,
     )
+    from conversation_analysis_tools_spark.streaming.events import scoped_session
 
     import os
     import tempfile
@@ -79,10 +80,8 @@ def test_streaming_tumbling_matches_batch(spark):
     d = tempfile.mkdtemp(prefix="stream_events_test_")
     os.symlink(os.path.abspath(f"{SF_DIR}/events.parquet"), f"{d}/events.parquet")
     batch = tumbling_counts(table(spark, "events", SF_DIR), "1 hour")
-    stream = read_event_stream(spark, d)
-    agg = tumbling_counts(stream, "1 hour")
-    run_to_memory_sink(agg, "t_stream_test")
-    streamed = spark.table("t_stream_test")
+    stream = read_event_stream(scoped_session(spark, 8), d)
+    streamed = drain(tumbling_counts(stream, "1 hour"))
     b = sorted(map(tuple, batch.collect()))
     s = sorted(map(tuple, streamed.collect()))
     assert b == s

@@ -49,6 +49,42 @@ def test_metadata_drops_unparseable_rows(spark):
     assert rows[1]["n_samples"] == 800 and rows[1]["duration_ms"] == 100
 
 
+def test_udf_runs_when_workers_cannot_import_package(tmp_path):
+    """An application that puts the repo on its own sys.path and runs
+    from another directory, with no PYTHONPATH: the Python workers cannot
+    import the package, so the pandas UDF's helpers (audio_metadata's
+    parse_wav) must reach them by value."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from conversation_analysis_tools_spark.operators import audio as A
+from conversation_analysis_tools_spark.session import get_spark
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+media = spark.createDataFrame(
+    [(1, A.wav_bytes(A.synth_pcm16(1, 800)), "audio/wav")],
+    "media_id bigint, content binary, mime string",
+)
+print(tuple(A.audio_metadata(media).first()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-6:] == "(1, 1, 8000, 16, 800, 100)".split()
+
+
 def test_energy_windows_stereo_downmix_and_ragged_tail(spark):
     # stereo: channel pair (s, s+2) -> floor mono (2s+2)//2 = s+1
     mono = A.synth_pcm16(3, 400)

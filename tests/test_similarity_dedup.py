@@ -400,6 +400,40 @@ def test_simhash_null_and_empty_text_pair_at_zero(spark):
     assert (1, 2, 0) in pairs
 
 
+def test_dedup_simhash_oracle_keeps_tokenless_docs(spark, tmp_path):
+    """dedup_simhash's DuckDB oracle keeps every document: a NULL-text
+    and an empty-text doc get signature 0 there as in Spark, so both
+    engines pair them at hamming 0."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from conversation_analysis_tools_spark.queries.dedup import dedup_simhash
+    from tests.conftest import SF_DIR
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").slice(0, 30)
+    tokenless = pa.table(
+        {
+            "doc_id": pa.array([10_001, 10_002], pa.int64()),
+            "text": pa.array([None, ""], pa.string()),
+        }
+    )
+    pq.write_table(
+        pa.concat_tables([docs, tokenless], promote_options="default"),
+        tmp_path / "documents.parquet",
+    )
+    got = sorted(map(tuple, dedup_simhash(spark, str(tmp_path)).collect()))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = sorted(con.execute(entry.oracle_sql()["dedup_simhash"]).fetchall())
+    assert (10_001, 10_002, 0) in got
+    assert got == want
+
+
 def test_simhash_banding_is_exact_pigeonhole(spark):
     """The 15-bit-block candidate stage must be EXACT for hamming<=3:
     4 blocks, <=3 differing bits => at least one block identical, so

@@ -10,10 +10,10 @@ interactive use) pay the full training cost again.
 
 This cache keeps the inline-training convenience while restoring the
 train-once semantics: artifacts are memoized per (operator, params,
-corpus fingerprint), where the fingerprint covers every file's
-relative path, size, and mtime under the data directory -- regenerated
-testdata therefore misses and retrains, so a cached artifact can never
-be served for different data.
+corpus fingerprint, code digest): every file's path, size and mtime
+under the data directory, and every ``.py`` source of this package --
+regenerated testdata or an edited trainer misses and retrains, so a
+cached artifact is never served for different data or code.
 
 Two tiers:
 
@@ -32,6 +32,7 @@ Two tiers:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -60,6 +61,18 @@ def dir_fingerprint(path: str) -> tuple:
                 continue
             out.append((os.path.relpath(p, ap), st.st_size, st.st_mtime_ns))
     return tuple(sorted(out))
+
+
+@functools.cache
+def code_digest() -> str:
+    """sha256 over this package's ``.py`` sources (path and bytes),
+    computed once per process: a trainer's callees change with it."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for rel in sorted(r for r, _v, _s in dir_fingerprint(root) if r.endswith(".py")):
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(rel.encode() + b"\0" + f.read())
+    return h.hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -156,9 +169,9 @@ def _disk_store(key_repr: str, value) -> None:
 
 
 def cached_fit(op: str, params: tuple, data_dir: str, fit):
-    """Return ``fit()``, memoized per (op, params, corpus content) --
-    process tier first, then the disk store, then train + persist."""
-    key = (op, params, os.path.abspath(data_dir), dir_fingerprint(data_dir))
+    """Return ``fit()``, memoized per (op, params, corpus, code digest)
+    -- process tier first, then the disk store, then train + persist."""
+    key = (op, params, os.path.abspath(data_dir), dir_fingerprint(data_dir), code_digest())
     if key in _CACHE:
         return _CACHE[key]
     key_repr = repr(key)

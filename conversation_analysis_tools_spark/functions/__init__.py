@@ -2,9 +2,9 @@
 
 Everything here is a *native* Spark column expression (JVM-side,
 whole-stage-codegen friendly). No row-at-a-time Python UDFs: the hot
-path stays in Tungsten; the only Python crossings in the whole engine
-are the grouped-pandas iterative operators (TextRank) and the
-multimodal decode stubs.
+path stays in Tungsten; the engine's Python crossings are its pandas
+UDF operators (grouped-pandas TextRank, mapInPandas stages), never
+these expressions.
 """
 
 from conversation_analysis_tools_spark.functions.text import (

@@ -10,5 +10,4 @@ Modules:
     dedup       -- dedup family: exact / minhash / simhash / ngram / embedding
     ann         -- approximate nearest neighbor over embeddings
     textstats   -- language-ID, quality scoring, token counts, fingerprints
-    multimodal  -- binary-column decode/feature plumbing (stubbed codecs)
 """

@@ -28,7 +28,12 @@ metric expressions, different retrieval channel.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, Observation
+
+#: Seconds ``get`` waits for a point's values (they land just after its action).
+GET_TIMEOUT_SEC = 30
 
 
 class PipelineMetrics:
@@ -54,16 +59,20 @@ class PipelineMetrics:
         return df.observe(ob, *metrics)
 
     def get(self, name: str) -> dict:
-        """Metric values for a point.
+        """Metric values for a point, once an action has run it.
 
-        BLOCKS (indefinitely -- Observation.get has no timeout) until
-        some action executes the observed plan. Only call after the
-        action, and only for points that are part of the lineage that
-        action actually ran: a point on a pruned/unused branch never
-        produces a value."""
-        return self._obs[name].get
+        Raises ValueError after ``GET_TIMEOUT_SEC`` for a point no
+        action ran (a pruned/unused branch never produces a value),
+        where ``Observation.get`` would block forever."""
+        ob = self._obs[name]
+        deadline = time.monotonic() + GET_TIMEOUT_SEC
+        while not ob._jo.future().isCompleted():
+            if time.monotonic() > deadline:
+                raise ValueError(f"observation point {name!r}: no action ran it")
+            time.sleep(0.01)
+        return ob.get
 
     def funnel(self) -> dict[str, dict]:
         """All observation points -> their metric dicts (call after
         the action)."""
-        return {name: ob.get for name, ob in self._obs.items()}
+        return {name: self.get(name) for name in self._obs}

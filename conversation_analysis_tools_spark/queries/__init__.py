@@ -16,7 +16,6 @@ from conversation_analysis_tools_spark.queries import textstats  # noqa: F401
 from conversation_analysis_tools_spark.queries import similarity  # noqa: F401
 from conversation_analysis_tools_spark.queries import iterative  # noqa: F401
 from conversation_analysis_tools_spark.queries import streaming  # noqa: F401
-from conversation_analysis_tools_spark.queries import multimodal  # noqa: F401
 from conversation_analysis_tools_spark.queries import sampling  # noqa: F401
 from conversation_analysis_tools_spark.queries import behavior  # noqa: F401
 from conversation_analysis_tools_spark.queries import audit  # noqa: F401
@@ -47,18 +46,16 @@ from conversation_analysis_tools_spark.queries import ingest  # noqa: F401
 # ---------------------------------------------------------------------------
 
 VERIFY_PRIORITY: list[str] = [
-    "nlp_tfidf",
-    "nlp_relevance",
-    "dedup_span_removal",
-    "dedup_substring_spans",
-    "decontamination_bloom",
-    "curation_pipeline_v3",
-    "near_dup_canonicalize",
+    "streaming_static_enrich",
     "streaming_stream_join",
     "dedup_simhash",
-    "dedup_jaccard_routed_fixed",
-    "nlp_duplicate_pairs",
-    "pipeline_analysis_results",
+    "dedup_minhash_lsh",
+    "streaming_tumbling",
+    "streaming_dedup_first",
+    "streaming_rollup_maintenance",
+    "streaming_hll_maintenance",
+    "streaming_neardup_dedup",
+    "streaming_curation_funnel",
 ]
 
 

@@ -523,7 +523,7 @@ def _staged_ivf_lists(spark, emb, cents, sf_dir):
     centroid-matrix digest), so regenerated testdata or a refreshed
     fitcache re-stages instead of silently serving stale lists and
     turning the parity certificates red far from the cause -- the
-    pack_and_manifest memo lesson (ADVICE round 6). Shared by
+    staging-memo rule (ADVICE round 6). Shared by
     ann_ivf_partitioned_parity and ann_ivf_batch_dpp; both stay on
     the EXPRESSION assignment (never mix assignment paths across a
     staged/inline comparison -- see operators/ann.ivf_assign)."""

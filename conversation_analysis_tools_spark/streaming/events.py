@@ -545,9 +545,8 @@ def tws_available() -> bool:
     The TWS Python driver worker speaks protobuf to the JVM state
     server (pyspark/sql/streaming/proto/StateMessage_pb2); without the
     ``protobuf`` package the worker crashes during state-schema
-    discovery. Same optional-dep gating pattern as PIL image decode
-    (operators/multimodal.py) and matplotlib rendering
-    (sources/charts.py)."""
+    discovery. Same optional-dep gating pattern as matplotlib
+    rendering (sources/charts.py)."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

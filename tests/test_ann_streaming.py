@@ -1,5 +1,4 @@
-"""ANN recall against exact kNN; streaming-vs-batch window equality;
-multimodal plumbing."""
+"""ANN recall against exact kNN; streaming-vs-batch window equality."""
 
 import os
 
@@ -8,7 +7,6 @@ from pyspark.sql import functions as F
 
 from conversation_analysis_tools_spark.catalog import table
 from conversation_analysis_tools_spark.operators import ann as A
-from conversation_analysis_tools_spark.operators import multimodal as M
 from tests.conftest import SF_DIR
 
 
@@ -85,59 +83,6 @@ def test_streaming_tumbling_matches_batch(spark):
     b = sorted(map(tuple, batch.collect()))
     s = sorted(map(tuple, streamed.collect()))
     assert b == s
-
-
-def test_multimodal_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        M.decode_image(b"bytes", fake=False)
-
-
-def _minimal_png(w: int, h: int) -> bytes:
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + b"\x08\x02\x00\x00\x00"
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + len(ihdr).to_bytes(4, "big")
-        + b"IHDR"
-        + ihdr
-        + b"\x00\x00\x00\x00"  # crc placeholder: header parse only
-    )
-
-
-def _minimal_jpeg(w: int, h: int) -> bytes:
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + b"\x00" * 9
-    sof0_payload = b"\x08" + h.to_bytes(2, "big") + w.to_bytes(2, "big") + b"\x01\x11\x00"
-    sof0 = b"\xff\xc0" + (2 + len(sof0_payload)).to_bytes(2, "big") + sof0_payload
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def test_image_header_parsers_real_dimensions():
-    assert M.decode_image(_minimal_png(640, 480)) == (640, 480)
-    assert M.decode_image(_minimal_jpeg(1024, 768)) == (1024, 768)
-    gif = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "little")
-    assert M.decode_image(gif) == (320, 200)
-    assert M.png_dimensions(b"\x89PNG\r\n\x1a\n") is None  # truncated
-
-
-def test_metadata_extraction_with_real_headers(spark):
-    media = spark.createDataFrame(
-        [(1, bytearray(_minimal_png(12, 34)), "image/png"),
-         (2, bytearray(_minimal_jpeg(56, 78)), "image/jpeg")],
-        schema=M.MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in M.extract_metadata(media, fake=False).collect()}
-    assert (rows[1]["width"], rows[1]["height"]) == (12, 34)
-    assert (rows[2]["width"], rows[2]["height"]) == (56, 78)
-
-
-def test_multimodal_metadata_deterministic(spark, sample_docs):
-    media = M.docs_as_media(
-        sample_docs.select(F.col("doc_id"), "text")
-    )
-    meta1 = sorted(map(tuple, M.extract_metadata(media).collect()))
-    meta2 = sorted(map(tuple, M.extract_metadata(media).collect()))
-    assert meta1 == meta2
-    row = dict(zip(["media_id", "mime", "n_bytes", "width", "height", "content_digest"], meta1[0]))
-    assert row["n_bytes"] > 0 and 64 <= row["width"] <= 1087
 
 
 @pytest.mark.skipif(
@@ -301,34 +246,6 @@ def test_fold_rollup_batch_replay_is_idempotent(spark, tmp_path):
     assert got == want
 
 
-def test_pil_decode_path_when_available():
-    """Real-codec rung: when PIL is installed, formats the header
-    parsers don't know (e.g. BMP) decode through it; without PIL the
-    stub contract (NotImplementedError / fake) holds."""
-    # minimal 1x1 24-bit BMP (public format: BITMAPFILEHEADER +
-    # BITMAPINFOHEADER) -- not covered by the PNG/JPEG/GIF parsers
-    import struct
-
-    pixel = b"\x00\x00\xff\x00"  # BGR + row pad
-    info = struct.pack("<IiiHHIIiiII", 40, 3, 2, 1, 24, 0, len(pixel), 2835, 2835, 0, 0)
-    header = b"BM" + struct.pack("<IHHI", 14 + 40 + len(pixel), 0, 0, 14 + 40)
-    bmp = header + info + pixel
-
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-
-    if has_pil:
-        assert M.decode_image(bmp) == (3, 2)
-    else:
-        assert M._pil_dimensions(bmp) is None
-        with pytest.raises(NotImplementedError):
-            M.decode_image(bmp, fake=False)
-
-
 def test_ann_recall_frontier_certificate(spark):
     # the merged recall certificate must clear every pinned floor at
     # test grain too, and the provable anchors are exactly 100: IVF
@@ -379,5 +296,3 @@ def test_ivf_soft_assign_replica_dedup_exact(spark):
     assert {(r["query_id"], r["vec_id"], r["rnk"]) for r in approx} == {
         (r["query_id"], r["vec_id"], r["rnk"]) for r in exact
     }
-
-

@@ -117,15 +117,6 @@ def test_textrank_empty(spark, empty_docs):
     assert out.count() == 0
 
 
-def test_image_phash_empty(spark):
-    from conversation_analysis_tools_spark.operators import multimodal as M
-
-    media = spark.createDataFrame(
-        [], "media_id bigint, content binary, mime string"
-    )
-    assert M.image_neardup_pairs(media, fake=True).count() == 0
-
-
 def test_manifest_pack_and_read_empty(spark, tmp_path):
     """Packing zero media rows still publishes a readable (empty)
     manifest, and read_media over it yields zero rows -- the

@@ -126,3 +126,28 @@ def test_disk_store_evicts_beyond_cap(tmp_path, monkeypatch):
     assert fc._disk_load(repr(("k", 13))) == [13.0]
     # the oldest was evicted
     assert fc._disk_load(repr(("k", 0))) is None
+
+
+def test_trainer_code_change_refits(tmp_path, monkeypatch):
+    """An artifact stored by one version of the package's code is not
+    served once the code digest differs: an edited trainer refits."""
+    import conversation_analysis_tools_spark.fitcache as fc
+
+    monkeypatch.setenv("SPARK_GRAFT_FITCACHE_DIR", str(tmp_path / "store"))
+    d = tmp_path / "corpus"
+    d.mkdir()
+    calls = []
+
+    def fit():
+        calls.append(1)
+        return [float(len(calls))]
+
+    assert len(fc.code_digest()) == 64  # sha256 hex of the real sources
+    monkeypatch.setattr(fc, "code_digest", lambda: "old")
+    assert cached_fit("pq", (8,), str(d), fit) == [1.0]
+    fc._CACHE.clear()
+    monkeypatch.setattr(fc, "code_digest", lambda: "new")
+    assert cached_fit("pq", (8,), str(d), fit) == [2.0]  # refit, not the disk entry
+    fc._CACHE.clear()
+    monkeypatch.setattr(fc, "code_digest", lambda: "old")
+    assert cached_fit("pq", (8,), str(d), fit) == [1.0]  # old entry still on disk

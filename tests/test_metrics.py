@@ -53,6 +53,36 @@ def test_duplicate_point_rejected(spark):
         obs.observed(docs, "p", F.count(F.lit(1)))
 
 
+def test_get_raises_for_point_no_action_ran(spark, monkeypatch):
+    """A point on a branch no action ran raises within the bound
+    instead of blocking forever; funnel() goes through the same wait."""
+    import threading
+
+    import conversation_analysis_tools_spark.operators.metrics as M
+
+    monkeypatch.setattr(M, "GET_TIMEOUT_SEC", 1)
+    docs = table(spark, "documents", SF_DIR)
+    obs = PipelineMetrics()
+    ran = obs.observed(docs, "ran", F.count(F.lit(1)).alias("n"))
+    obs.observed(docs.where("doc_id < 0"), "unused", F.count(F.lit(1)).alias("n"))
+    ran.count()
+    assert obs.get("ran")["n"] == docs.count()
+    errors = []
+
+    def call(fn):
+        try:
+            fn()
+        except ValueError as e:
+            errors.append(str(e))
+
+    for fn in (lambda: obs.get("unused"), obs.funnel):
+        t = threading.Thread(target=call, args=(fn,), daemon=True)
+        t.start()
+        t.join(60)
+        assert not t.is_alive(), "get blocked past its bound"
+    assert len(errors) == 2 and all("'unused'" in e for e in errors)
+
+
 def test_observation_then_cached_ml_plan(spark):
     """Session-hygiene regression: a registered Observation makes the
     session's ObservationManager non-serializable; if a later plan

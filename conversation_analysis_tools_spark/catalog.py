@@ -13,13 +13,15 @@ Scale notes (100 TB posture):
   customer/part grow with sf but stay << lineitem/orders).
 * On a real deployment the fact tables would be written partitioned
   (events by ``date(ts)``, lineitem by ``l_shipdate`` month) and
-  bucketed by their join key (orders/lineitem by orderkey) -- see
-  ``write_partitioned_layout`` which produces that layout.
+  bucketed by their join key (orders/lineitem by orderkey) --
+  ``layout.write_bucketed`` and the ``partition_pruned_scan`` query
+  build those layouts.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -113,6 +115,39 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     return spark.read.parquet(path)
 
 
+def parquet_footers(spark: SparkSession, path: str) -> Iterator:
+    """(Hadoop path, parquet-mr ``ParquetMetadata``) of every data file
+    at ``path`` -- one file, or a directory tree with its partition
+    subdirectories -- read on the driver through the Hadoop file
+    system, with no Spark job. Names starting with ``_`` or ``.`` are
+    skipped, as Spark's file listing skips them; a missing path has no
+    footers. A footer that cannot be read raises."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return
+    parquet = jvm.org.apache.parquet.hadoop
+    pending = [root]
+    while pending:
+        for st in fs.listStatus(pending.pop()):
+            p = st.getPath()
+            if p.getName().startswith(("_", ".")):
+                continue
+            if st.isDirectory():
+                pending.append(p)
+                continue
+            reader = parquet.ParquetFileReader.open(
+                parquet.util.HadoopInputFile.fromPath(p, conf)
+            )
+            try:
+                footer = reader.getFooter()
+            finally:
+                reader.close()
+            yield p, footer
+
+
 def staging_dir(kind: str, sf_dir: str) -> str:
     """Deterministic per-(kind, sf_dir) scratch directory.
 
@@ -132,35 +167,3 @@ def staging_dir(kind: str, sf_dir: str) -> str:
     d = os.path.join(root, "cats_staging", f"{kind}_{key}")
     os.makedirs(d, exist_ok=True)
     return d
-
-
-def write_partitioned_layout(
-    spark: SparkSession, sf_dir: str, out_dir: str, buckets: int = 64
-) -> None:
-    """Produce the physical layout we would use at 100 TB.
-
-    * ``events`` partitioned by event date -> partition pruning for
-      every time-ranged query.
-    * ``lineitem``/``orders`` bucketed by orderkey -> the workhorse
-      equi-join (SURVEY J1) becomes shuffle-free.
-    * dimensions written plain (broadcast side).
-    """
-    from pyspark.sql import functions as F
-
-    dfs = load_tables(spark, sf_dir)
-    dfs["events"].withColumn("event_date", F.to_date("ts")).write.mode(
-        "overwrite"
-    ).partitionBy("event_date").parquet(f"{out_dir}/events")
-    for name in ("orders", "lineitem"):
-        key = "o_orderkey" if name == "orders" else "l_orderkey"
-        (
-            dfs[name]
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .option("path", f"{out_dir}/{name}")
-            .saveAsTable(f"bucketed_{name}")
-        )
-    for name in ("region", "nation", "customer", "supplier", "part", "documents", "embeddings"):
-        dfs[name].write.mode("overwrite").parquet(f"{out_dir}/{name}")

@@ -267,15 +267,6 @@ def _cc_star(
     ), rounds
 
 
-def clusters(components: DataFrame, min_size: int = 2) -> DataFrame:
-    """Keep components with >= min_size members (reference keeps
-    size>1, duplicate_detector.py:254-263)."""
-    sizes = components.groupBy("component").agg(F.count("*").alias("cluster_size"))
-    return components.join(
-        sizes.where(F.col("cluster_size") >= min_size), "component"
-    )
-
-
 def unique_representatives(all_ids: DataFrame, components: DataFrame) -> DataFrame:
     """N20 unique-doc selection: min(id) per cluster + every standalone
     id (duplicate_detector.py:266-299). ``all_ids`` must have column

@@ -282,7 +282,8 @@ def jaccard_verify(
     row; intersection is ``array_intersect`` inside the row -- no
     exploded inverted-index re-join, no groupBy. At scale the candidate
     set is tiny relative to the corpus, so shipping two arrays per
-    candidate beats re-shuffling the full shingle table twice.
+    candidate beats re-shuffling the full shingle table twice. Columns
+    of ``candidates`` beyond (id1, id2) ride through to the output.
     """
     a1 = sh_arr.select(F.col(id_col).alias("id1"), F.col("sh_arr").alias("a1"))
     a2 = sh_arr.select(F.col(id_col).alias("id2"), F.col("sh_arr").alias("a2"))
@@ -291,8 +292,7 @@ def jaccard_verify(
         candidates.join(a1, "id1")
         .join(a2, "id2")
         .select(
-            "id1",
-            "id2",
+            *candidates.columns,
             (
                 inter.cast("double")
                 / (F.size("a1") + F.size("a2") - inter)

@@ -62,9 +62,3 @@ def tfidf_embeddings(
         F.col(id_col), vec.alias("embedding")
     )
     return out
-
-
-def write_embedding_cache(emb: DataFrame, path: str) -> None:
-    """S11 embedding cache sink: parquet table (id, embedding) --
-    replaces the npz + JSON content map (sql_search.py:1229-1246)."""
-    emb.write.mode("overwrite").parquet(path)

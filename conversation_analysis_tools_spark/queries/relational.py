@@ -345,7 +345,7 @@ def join_workhorse(spark: SparkSession, sf_dir: str) -> DataFrame:
     Physical strategy: customer is a dimension -> broadcast (no shuffle
     of the fact table for that join); lineitem⋈orders shuffles on
     orderkey, which the 100 TB layout makes shuffle-free via bucketing
-    (catalog.write_partitioned_layout). Only the 3 needed columns are
+    both sides by orderkey (layout.write_bucketed). Only the 3 needed columns are
     scanned from lineitem.
     """
     li = _t(spark, sf_dir, "lineitem").select(
@@ -1883,8 +1883,8 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-partitioned physical layout, exercised end-to-end: write
-    events partitioned by event_date (catalog.write_partitioned_layout
-    shape), then answer a 3-day range query off the partitioned copy.
+    events partitioned by event_date (the 100 TB events layout), then
+    answer a 3-day range query off the partitioned copy.
     The filter prunes at the DIRECTORY level -- the scan touches 3
     partitions out of the month, which at 100 TB is the difference
     between reading ~300 GB and reading the full table (the plan from

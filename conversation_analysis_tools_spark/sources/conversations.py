@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from conversation_analysis_tools_spark.catalog import parquet_footers
+
 MAX_CONTENT_CHARS = 100_000
 
 CONVERSATIONS_SCHEMA = StructType(
@@ -312,36 +314,18 @@ def ingest_file(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def _store_columns(spark: SparkSession, fs, root) -> list[str] | None:
-    """Column names of the parquet store at Hadoop path ``root``, from
-    the footer of every data file, read on the driver (no Spark job);
-    None when it holds no data file. Names starting with ``_`` or ``.``
-    are skipped, as Spark's file listing skips them. Raises when a
-    footer cannot be read or two files disagree."""
-    if not fs.exists(root):
-        return None
-    parquet = spark.sparkContext._jvm.org.apache.parquet.hadoop
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    pending, names = [root], None
-    while pending:
-        for st in fs.listStatus(pending.pop()):
-            p = st.getPath()
-            if p.getName().startswith(("_", ".")):
-                continue
-            if st.isDirectory():
-                pending.append(p)
-                continue
-            reader = parquet.ParquetFileReader.open(
-                parquet.util.HadoopInputFile.fromPath(p, conf)
-            )
-            try:
-                fields = reader.getFileMetaData().getSchema().getFields()
-                cols = [fields.get(i).getName() for i in range(fields.size())]
-            finally:
-                reader.close()
-            if names is not None and cols != names:
-                raise ValueError(f"store {root}: {p} has columns {cols}, not {names}")
-            names = cols
+def _store_columns(spark: SparkSession, path: str) -> list[str] | None:
+    """Column names of the parquet store at ``path``, from the footer
+    of every data file (catalog.parquet_footers: driver-side, no Spark
+    job); None when it holds no data file. Raises when a footer cannot
+    be read or two files disagree."""
+    names = None
+    for p, footer in parquet_footers(spark, path):
+        fields = footer.getFileMetaData().getSchema().getFields()
+        cols = [fields.get(i).getName() for i in range(fields.size())]
+        if names is not None and cols != names:
+            raise ValueError(f"store {path}: {p} has columns {cols}, not {names}")
+        names = cols
     return names
 
 
@@ -373,7 +357,7 @@ def upsert_parquet(
     root = hadoop_path(path)
     fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     tagged = df.withColumn("_src", F.lit(1))
-    stored = _store_columns(spark, fs, root)
+    stored = _store_columns(spark, path)
     if stored is None:
         merged = tagged
     elif sorted(stored) != sorted(df.columns):

@@ -81,55 +81,12 @@ def write_training_shards(
 
 def shard_bucket(id_expr, n_shards: int = 16):
     """Deterministic md5-hex-digit shard assignment (the
-    write_training_shards / hash_split function, factored so the text
-    and media sides of a multimodal shard compute the SAME bucket)."""
+    write_training_shards / hash_split function)."""
     return (
         F.conv(
             F.substring(F.md5(id_expr.cast("string").cast("binary")), 1, 1), 16, 10
         ).cast("bigint")
         % n_shards
-    )
-
-
-def write_multimodal_shards(
-    docs: DataFrame,
-    media: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    n_shards: int = 16,
-) -> None:
-    """Multimodal training-shard writer: one call emits the three
-    artifacts a media-bearing training shard needs, all keyed by the
-    SAME md5-bucket shard of the OWNING doc id --
-
-    - ``path/text``: the doc rows, parquet, ``shard=K/`` directories
-      (exactly write_training_shards);
-    - ``path/media``: payload bytes packed into packfiles
-      (operators/manifest.pack_media -- bytes move executor-side
-      once, attempt-unique files, per-payload md5), placement keyed
-      by shard so a shard's payloads are co-located;
-    - ``path/media_manifest``: the pointer manifest, parquet,
-      partitioned by the same ``shard=K/`` directories.
-
-    A training job therefore reads shard K's text, manifest, and
-    payload spans without touching any other shard, and the md5
-    bucket keeps re-runs and incremental appends routing every doc --
-    and its media -- to the same shard. Media rows must carry
-    ``id_col`` (the owning doc); payload bytes live only in the
-    packfiles, never in a parquet column, which is the pointer
-    layout's whole point at 100 TB. The manifest re-write after the
-    pack touches manifest rows only (KB-scale pointers), so payload
-    bytes still move exactly once."""
-    from conversation_analysis_tools_spark.operators.manifest import pack_media
-
-    write_training_shards(docs, f"{path}/text", id_col=id_col, n_shards=n_shards)
-    m = media.withColumn("shard", shard_bucket(F.col(id_col), n_shards))
-    man = pack_media(m, f"{path}/media", id_col="shard", n_packs=n_shards)
-    (
-        man.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(f"{path}/media_manifest")
     )
 
 

@@ -23,7 +23,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from conversation_analysis_tools_spark.catalog import events_ts, raw_events
+from conversation_analysis_tools_spark.catalog import (
+    events_ts,
+    parquet_footers,
+    raw_events,
+)
 from conversation_analysis_tools_spark.decisions import carried
 from conversation_analysis_tools_spark.functions.numeric import avg4, cents
 
@@ -180,19 +184,15 @@ def size_state_partitions(
 
 
 def parquet_row_count(path: str) -> int:
-    """Exact row count of a parquet file/directory from its footer
-    metadata -- driver-side, no Spark job (the streaming state-sizing
-    probe; at cluster scale this is one metadata read per file, the
-    same cost as planning the scan)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        return sum(
-            parquet_row_count(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    """Exact row count of a parquet file or directory tree from its
+    footers (catalog.parquet_footers) -- driver-side, no Spark job (the
+    streaming state-sizing probe; at cluster scale this is one metadata
+    read per file, the same cost as planning the scan)."""
+    return sum(
+        block.getRowCount()
+        for _, footer in parquet_footers(SparkSession.active(), path)
+        for block in footer.getBlocks()
+    )
 
 
 #: Seconds a drain may run before it is stopped and raises.

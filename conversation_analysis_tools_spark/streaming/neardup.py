@@ -19,23 +19,26 @@ service computes; the batch variant is near_dup_canonicalize.)
 Mechanics per micro-batch (foreachBatch):
 
 1. shingle + MinHash-sign the batch (operators/dedup.py -- one md5
-   per shingle, map-side partial agg);
-2. LSH-band join batch vs the persistent store's band table -- a
-   distributed equi-join on (band, key), linear in both sides; any
-   batch doc with a store band collision that survives exact-Jaccard
-   verification (shingle arrays ride in the store) is dropped. Store
-   docs all precede the batch in arrival order, so this needs no
-   order bookkeeping;
-3. batch-INTERNAL candidates (band self-join within the batch) are
-   verified the same way, then resolved greedily by doc_id on the
-   driver -- the candidate pair list of one micro-batch is the only
-   thing ever collected, and it is candidate-sized (band collisions),
-   not batch-sized;
+   per shingle, map-side partial agg), after collapsing identical
+   shingle sets to their min-id representative: identical sets relate
+   identically to every store and batch doc, so greedy admission never
+   keeps a non-representative, and a replica burst stays linear;
+2. ONE candidate relation: the batch's bands joined on (band, key) to
+   the batch's own bands (id1 < id2) and to the store bands of earlier
+   batches (tagged ``_store``) -- a distributed equi-join, linear in
+   both sides; store docs all precede the batch in arrival order, so
+   this needs no order bookkeeping;
+3. ONE exact-Jaccard verify over store arrays + representative arrays
+   (shingle arrays ride in the store), and ONE collect of the verified
+   pairs -- candidate-sized (band collisions), never batch-sized. A
+   store hit drops its batch doc outright; batch pairs between docs
+   the store left are resolved greedily by doc_id on the driver;
 4. admitted docs write their (doc_id, sh_arr) and band rows into
-   PER-BATCH store subdirectories (``batch=<id>``) -- so a replayed
-   fold OVERWRITES its own output instead of double-appending, which
-   is what makes the at-least-once foreachBatch contract safe here.
-   At corpus scale the band table would additionally be bucketed by
+   PER-BATCH store subdirectories (``batch=<id>``), both writes
+   anti-joining the one broadcast drop set -- so a replayed fold
+   OVERWRITES its own output instead of double-appending, which is
+   what makes the at-least-once foreachBatch contract safe here. At
+   corpus scale the band table would additionally be bucketed by
    (band, key) so step 2 is a co-located join.
 
 State size is O(admitted corpus) -- that is inherent to exact-verify
@@ -54,9 +57,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from conversation_analysis_tools_spark.operators import dedup as D
-from conversation_analysis_tools_spark.operators.density import group_reps, set_fp
+from conversation_analysis_tools_spark.operators.density import set_fp
 from conversation_analysis_tools_spark.streaming.events import (
     drain,
     scoped_session,
@@ -105,100 +109,81 @@ def fold_neardup_batch(
     arrs = D.shingle_arrays(
         batch_df.select(id_col, text_col), id_col, text_col
     ).persist()
-    bands = D.lsh_bands(D.minhash_signatures_from_arrays(arrs, id_col), id_col)
-    survivors = None
-    rep_surv = None
+    id_type = arrs.schema[id_col].dataType.simpleString()
+    # Identical shingle sets relate identically to every store and
+    # batch doc, so greedy admission keeps at most their min-id
+    # representative: non-reps drop before any candidate join, which
+    # keeps a replica burst from going quadratic. Shingle-less docs
+    # have no fingerprint and no bands; they are always admitted.
+    non_reps = (
+        set_fp(arrs, id_col)
+        .withColumn("_rep", F.min(id_col).over(Window.partitionBy("_fp")))
+        .where(F.col(id_col) > F.col("_rep"))
+        .select(id_col)
+    )
+    reps = arrs.join(non_reps, id_col, "left_anti").persist()
+    bands = D.lsh_bands(
+        D.minhash_signatures_from_arrays(reps, id_col), id_col
+    ).persist()
     try:
-        # -- cross: batch vs admitted store --------------------------
-        # Only partitions from EARLIER batches: a replayed fold must
-        # not dedup the batch against its own previous output (every
-        # doc is a perfect near-dup of itself), and the batch column
-        # partition-prunes, so later/own partitions are never scanned.
-        # Existence gates on bands_path -- the SECOND write below --
-        # so a first-fold crash between the two writes replays as an
-        # empty store (and overwrites both partitions) instead of
-        # reading a bands dir that was never created.
-        if os.path.exists(bands_path):
-            store_bands = (
-                spark.read.parquet(bands_path)
-                .where(F.col("batch") < batch_id)
-                .select(F.col(id_col).alias("id1"), "band", "key")
+        # One candidate relation: batch bands against batch bands
+        # (id1 < id2) and against the store bands of EARLIER batches
+        # (``_store``; a replayed fold must not meet its own output).
+        # The gate is bands_path, the second write below, so a
+        # first-fold crash between the writes replays as an empty store.
+        def tagged(b: DataFrame, store: bool) -> DataFrame:
+            return b.select(
+                F.col(id_col).alias("id1"), "band", "key", F.lit(store).alias("_store")
             )
-            cand_cross = (
-                bands.select(F.col(id_col).alias("id2"), "band", "key")
-                .join(store_bands, ["band", "key"])
-                .select("id1", "id2")
-                .distinct()
-            )
-            store_arrs = (
-                spark.read.parquet(arrs_path)
-                .where(F.col("batch") < batch_id)
-                .select(id_col, "sh_arr")
-            )
-            both = store_arrs.unionByName(arrs)
-            dropped_cross = (
-                D.jaccard_verify(cand_cross, both, threshold, id_col)
-                .select(F.col("id2").alias(id_col))
-                .distinct()
-            )
-            survivors = arrs.join(dropped_cross, id_col, "left_anti").persist()
-        else:
-            survivors = arrs
 
-        # -- exact-dup collapse inside the batch ---------------------
-        # Identical shingle sets are mutual near-dups at Jaccard 1.0
-        # (threshold <= 1) with IDENTICAL pair relations, so greedy
-        # admission provably keeps exactly the min-id representative
-        # of every identical group: a non-rep is blocked by its rep if
-        # the rep is admitted, else by whatever admitted doc blocked
-        # the rep (same relations). Folding that outcome in directly
-        # keeps a replica BURST batch (the adversarial streaming case)
-        # from going quadratic in the internal candidate join AND from
-        # collecting m^2/2 pairs to the driver. Docs with no shingles
-        # are absent from ``members`` and pass through untouched,
-        # exactly as in the uncollapsed plan (they have no bands).
-        members = set_fp(survivors, id_col)
-        reps = group_reps(members, id_col)
-        non_reps = members.join(reps.select(id_col), id_col, "left_anti")
-        rep_surv = survivors.join(
-            non_reps.select(id_col), id_col, "left_anti"
-        ).persist()
-        # -- internal: representatives vs themselves, greedy by id ---
-        surv_bands = bands.join(rep_surv.select(id_col), id_col, "left_semi")
-        cand_int = D.minhash_candidates(surv_bands, id_col)
-        verified = D.jaccard_verify(cand_int, rep_surv, threshold, id_col)
-        # the ONLY collect: one micro-batch's verified candidate
-        # pairs at REPRESENTATIVE grain. Greedy admission only needs
-        # the pair-involved ids (a survivor in no pair is admitted and
-        # blocks nobody), so the local resolution is candidate-sized,
-        # never batch-sized.
+        pool, sh_arrs = tagged(bands, False), reps
+        if os.path.exists(bands_path):
+            prior = F.col("batch") < batch_id
+            store_bands = spark.read.schema(
+                f"{id_col} {id_type}, band int, key string, batch int"
+            ).parquet(bands_path)
+            store_arrs = spark.read.schema(
+                f"{id_col} {id_type}, sh_arr array<string>, batch int"
+            ).parquet(arrs_path)
+            pool = pool.unionByName(tagged(store_bands.where(prior), True))
+            sh_arrs = store_arrs.where(prior).select(id_col, "sh_arr").unionByName(reps)
+        cands = (
+            bands.select(F.col(id_col).alias("id2"), "band", "key")
+            .join(pool, ["band", "key"])
+            .where(F.col("_store") | (F.col("id1") < F.col("id2")))
+            .select("id1", "id2", "_store")
+            .distinct()
+        )
+        # The only collect: verified candidate pairs, candidate-sized.
+        # A store hit drops its batch doc outright; batch pairs between
+        # docs the store left go through greedy admission by id.
+        rows = D.jaccard_verify(cands, sh_arrs, threshold, id_col).select(
+            "id1", "id2", "_store"
+        ).collect()
+        dropped = {r["id2"] for r in rows if r["_store"]}
         pairs = [
-            (r["id1"], r["id2"]) for r in verified.select("id1", "id2").collect()
+            (r["id1"], r["id2"])
+            for r in rows
+            if not (r["_store"] or r["id1"] in dropped or r["id2"] in dropped)
         ]
         involved = sorted({i for p in pairs for i in p})
-        dropped_int = set(involved) - _greedy_admit(involved, pairs)
+        dropped |= set(involved) - _greedy_admit(involved, pairs)
 
-        if dropped_int:
-            id_type = rep_surv.schema[id_col].dataType.simpleString()
-            drop_df = spark.createDataFrame(
-                [(i,) for i in sorted(dropped_int)], f"{id_col} {id_type}"
+        drop_df = F.broadcast(
+            spark.createDataFrame(
+                [(i,) for i in sorted(dropped)], f"{id_col} {id_type}"
             )
-            kept = rep_surv.join(F.broadcast(drop_df), id_col, "left_anti")
-        else:
-            kept = rep_surv
-        kept_bands = surv_bands.join(kept.select(id_col), id_col, "left_semi")
-        kept.write.mode("overwrite").parquet(
+        )
+        reps.join(drop_df, id_col, "left_anti").write.mode("overwrite").parquet(
             os.path.join(arrs_path, f"batch={batch_id}")
         )
-        kept_bands.write.mode("overwrite").parquet(
+        bands.join(drop_df, id_col, "left_anti").write.mode("overwrite").parquet(
             os.path.join(bands_path, f"batch={batch_id}")
         )
     finally:
         arrs.unpersist()
-        if survivors is not None and survivors is not arrs:
-            survivors.unpersist()
-        if rep_surv is not None:
-            rep_surv.unpersist()
+        reps.unpersist()
+        bands.unpersist()
 
 
 def stream_neardup_dedup(

@@ -5,6 +5,8 @@ min-doc_id winner, making the two queries value-identical."""
 
 import os
 
+from pyspark.sql import functions as F
+
 
 def test_streaming_funnel_equals_batch_capstone(spark):
     from conversation_analysis_tools_spark.queries.streaming import (
@@ -111,3 +113,22 @@ def test_parquet_row_count_matches_spark(spark):
     assert parquet_row_count(f"{sf}/events.parquet") == table(
         spark, "events", sf
     ).count()
+
+
+def test_parquet_row_count_single_file_and_partitioned_dir(spark, tmp_path):
+    """The footer row count (catalog.parquet_footers) equals a Spark
+    count on one parquet file and on a Spark-written ``partitionBy``
+    directory, whose data files sit in ``key=value`` subdirectories."""
+    from conversation_analysis_tools_spark.streaming.events import (
+        parquet_row_count,
+    )
+
+    df = spark.range(0, 1000).withColumn("part", F.col("id") % 3)
+    one = str(tmp_path / "one")
+    df.coalesce(1).write.parquet(one)
+    f = next(x for x in os.listdir(one) if x.endswith(".parquet"))
+    single = os.path.join(one, f)
+    parted = str(tmp_path / "parted")
+    df.repartition(4).write.partitionBy("part").parquet(parted)
+    for p in (single, parted):
+        assert parquet_row_count(p) == spark.read.parquet(p).count() == 1000

@@ -117,24 +117,6 @@ def test_textrank_empty(spark, empty_docs):
     assert out.count() == 0
 
 
-def test_manifest_pack_and_read_empty(spark, tmp_path):
-    """Packing zero media rows still publishes a readable (empty)
-    manifest, and read_media over it yields zero rows -- the
-    per-partition-empty case every 100-TB filter pipeline hits."""
-    from conversation_analysis_tools_spark.operators import manifest as MF
-
-    media = spark.createDataFrame(
-        [], schema="media_id bigint, content binary, mime string"
-    )
-    man = MF.pack_media(media, str(tmp_path / "packs"), n_packs=2)
-    assert man.count() == 0
-    assert MF.read_media(man).count() == 0
-    # filtered partial read over the empty manifest is also empty
-    assert (
-        MF.read_media(man.where(F.col("media_id") > 5)).count() == 0
-    )
-
-
 def test_gapfill_and_cumsum_empty(spark):
     from conversation_analysis_tools_spark.operators.temporal import (
         distributed_cumsum,

@@ -1,5 +1,6 @@
 """Physical-layout tests: date-partitioned events enable partition
-pruning (the 100 TB posture of catalog.write_partitioned_layout)."""
+pruning, and same-bucketed tables join without an exchange
+(layout.write_bucketed) -- the 100 TB layout posture."""
 
 import io
 from contextlib import redirect_stdout

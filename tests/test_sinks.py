@@ -99,40 +99,3 @@ def test_compact_parquet(spark, tmp_path):
     n_after = len([f for f in os.listdir(p) if f.endswith(".parquet")])
     assert n_after <= 2  # tiny data -> ~1 file
     assert spark.read.parquet(p).count() == 1000
-
-
-def test_multimodal_shards_colocated_and_byte_exact(spark, tmp_path):
-    """write_multimodal_shards: text rows, manifest rows, and payload
-    bytes all keyed by the SAME md5 shard of the owning doc; every
-    payload byte survives the shard -> pointer -> partial-read round
-    trip (digest-verified); and no payload bytes appear in any
-    parquet column (pointer layout)."""
-    from conversation_analysis_tools_spark.operators import manifest as MF
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(12)], "doc_id bigint, text string"
-    )
-    media = spark.createDataFrame(
-        [(i, i, bytes([i % 256] * (10 + i)), "application/x-test") for i in range(12)],
-        "media_id bigint, doc_id bigint, content binary, mime string",
-    )
-    out = str(tmp_path / "mm")
-    SK.write_multimodal_shards(docs, media, out, n_shards=4)
-
-    text = spark.read.parquet(f"{out}/text")
-    man = spark.read.parquet(f"{out}/media_manifest")
-    assert "content" not in man.columns  # pointers only
-    # same shard function on both sides: join on doc_id, shards equal
-    joined = (
-        man.select("doc_id", F.col("shard").alias("ms"))
-        .join(text.select("doc_id", F.col("shard").alias("ts")), "doc_id")
-    )
-    assert joined.count() == 12
-    assert joined.where(F.col("ms") != F.col("ts")).count() == 0
-    # byte-exact round trip under digest verification
-    back = {
-        r["media_id"]: bytes(r["content"])
-        for r in MF.read_media(man, verify="digest").collect()
-    }
-    want = {r["media_id"]: bytes(r["content"]) for r in media.collect()}
-    assert back == want

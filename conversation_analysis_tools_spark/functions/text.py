@@ -55,12 +55,9 @@ def raw_tokens_expr(text: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
 
 
-def tokens_expr(text: Column | str, keep_stopwords: bool = False) -> Column:
+def tokens_expr(text: Column | str) -> Column:
     """Reference tokenizer as an array<string> column expression."""
-    raw = raw_tokens_expr(text)
-    if keep_stopwords:
-        return raw
-    return F.array_except(raw, array_lit(sorted(STOPWORDS)))
+    return F.array_except(raw_tokens_expr(text), array_lit(sorted(STOPWORDS)))
 
 
 def tokens_with_dupes_expr(text: Column | str) -> Column:
@@ -81,8 +78,8 @@ def ws_trim_expr(col: Column) -> Column:
     return F.regexp_replace(col, r"^\s+|\s+$", "")
 
 
-def sentences_expr(text: Column | str, min_words: int = 3) -> Column:
-    """Sentence split: ``[.!?]+`` delimiters, trimmed, >= min_words words.
+def sentences_expr(text: Column | str) -> Column:
+    """Sentence split: ``[.!?]+`` delimiters, trimmed, >= 3 words.
 
     Mirrors pipeline/summarizer.py:42-61 (trim == str.strip, all
     whitespace).
@@ -92,7 +89,7 @@ def sentences_expr(text: Column | str, min_words: int = 3) -> Column:
     trimmed = F.transform(parts, lambda s: ws_trim_expr(s))
     return F.filter(
         trimmed,
-        lambda s: (s != "") & (F.size(F.split(s, r"\s+")) >= min_words),
+        lambda s: (s != "") & (F.size(F.split(s, r"\s+")) >= 3),
     )
 
 

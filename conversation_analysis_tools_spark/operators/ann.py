@@ -95,9 +95,6 @@ def brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors for each query vector.
@@ -119,24 +116,24 @@ def brute_force_topk(
     # norms hoisted per ROW on each side (no CSE inside lambda bodies:
     # inline cosine_expr would re-fold both norms for every
     # corpus x query pair) -- same fold order, bit-identical sims
-    pairs = emb.withColumn("_nv", norm_expr(vec_col)).crossJoin(
+    pairs = emb.withColumn("_nv", norm_expr("embedding")).crossJoin(
         F.broadcast(
             queries.select(
-                F.col(query_id_col), F.col(vec_col).alias("_qv")
+                F.col("query_id"), F.col("embedding").alias("_qv")
             ).withColumn("_nq", norm_expr("_qv"))
         )
     )
     if exclude_self:
-        pairs = pairs.where(F.col(id_col) != F.col(query_id_col))
+        pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
     cos = F.when(
         (F.col("_nv") == 0) | (F.col("_nq") == 0), F.lit(0.0)
-    ).otherwise(dot_expr(vec_col, "_qv") / (F.col("_nv") * F.col("_nq")))
+    ).otherwise(dot_expr("embedding", "_qv") / (F.col("_nv") * F.col("_nq")))
     sims = pairs.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         F.round(cos, 6).alias("sim"),
     )
-    return _ranked_topk(sims, k, id_col, query_id_col)
+    return _ranked_topk(sims, k, "vec_id", "query_id")
 
 
 def lsh_topk(
@@ -145,16 +142,12 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = DEFAULT_N_PLANES,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    multiprobe: bool = True,
     exclude_self: bool = False,
     n_tables: int = 1,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: candidates from the query's
-    bucket (plus 1-bit-flip neighbor buckets when ``multiprobe``),
-    exact cosine re-rank within candidates.
+    bucket and its 1-bit-flip neighbor buckets (multiprobe), exact
+    cosine re-rank within candidates.
 
     ``n_tables`` independent plane sets (the classic recall lever: a
     true neighbor is missed only if it splits from the query in EVERY
@@ -165,45 +158,42 @@ def lsh_topk(
     """
     table_buckets = F.array(
         *[
-            hyperplane_bucket_expr(vec_col, dim, n_planes, t)
+            hyperplane_bucket_expr("embedding", dim, n_planes, t)
             for t in range(n_tables)
         ]
     )
     bucketed = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.posexplode(table_buckets).alias("_tab", "bucket"),
     )
     qb = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("_qv"),
+        F.col("query_id"),
+        F.col("embedding").alias("_qv"),
         F.posexplode(
             F.array(
                 *[
-                    hyperplane_bucket_expr(vec_col, dim, n_planes, t)
+                    hyperplane_bucket_expr("embedding", dim, n_planes, t)
                     for t in range(n_tables)
                 ]
             )
         ).alias("_tab", "qbucket"),
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << i))
-                for i in range(n_planes)
-            ],
-        )
-        qb = qb.withColumn("bucket", F.explode(probes))
-    else:
-        qb = qb.withColumn("bucket", F.col("qbucket"))
+    probes = F.array(
+        F.col("qbucket"),
+        *[
+            F.col("qbucket").bitwiseXOR(F.lit(1 << i))
+            for i in range(n_planes)
+        ],
+    )
+    qb = qb.withColumn("bucket", F.explode(probes))
     cands = bucketed.join(F.broadcast(qb.drop("qbucket")), ["_tab", "bucket"])
     if exclude_self:  # only valid for self-search (shared id space)
-        cands = cands.where(F.col(id_col) != F.col(query_id_col))
+        cands = cands.where(F.col("vec_id") != F.col("query_id"))
     sims = cands.select(
-        query_id_col, id_col, F.round(cosine_expr(vec_col, "_qv"), 6).alias("sim")
+        "query_id", "vec_id", F.round(cosine_expr("embedding", "_qv"), 6).alias("sim")
     )
-    return _ranked_topk(sims, k, id_col, query_id_col, dedup=True)
+    return _ranked_topk(sims, k, "vec_id", "query_id", dedup=True)
 
 
 # ---------------------------------------------------------------------------
@@ -211,16 +201,14 @@ def lsh_topk(
 # ---------------------------------------------------------------------------
 
 
-def kmeans_centroids(
-    emb: DataFrame, n_centroids: int = 16, vec_col: str = "embedding"
-) -> np.ndarray:
+def kmeans_centroids(emb: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Coarse quantizer: k-means centroids (fixed seed) as a small
     (C x dim) matrix -- the only driver-side artifact of the index."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     feats = emb.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
     model = KMeans(k=n_centroids, seed=_SEED, maxIter=20).fit(feats)
     return np.array(model.clusterCenters())
@@ -276,7 +264,6 @@ def _nearest_centroid(centroids):
 def ivf_assign(
     emb: DataFrame,
     centroids: np.ndarray,
-    vec_col: str = "embedding",
     n_assign: int = 1,
     vectorized: bool = False,
 ) -> DataFrame:
@@ -325,12 +312,12 @@ def ivf_assign(
             def _assign(col: pd.Series) -> pd.Series:
                 return nearest(col)[0]
 
-            return emb.withColumn("centroid_id", _assign(F.col(vec_col)))
-        dists = _centroid_dist_array(vec_col, centroids)
+            return emb.withColumn("centroid_id", _assign(F.col("embedding")))
+        dists = _centroid_dist_array("embedding", centroids)
         cid = F.array_position(dists, F.array_min(dists)) - 1
         return emb.withColumn("centroid_id", cid.cast("int"))
     pairs = F.transform(
-        _centroid_dist_array(vec_col, centroids),
+        _centroid_dist_array("embedding", centroids),
         lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
     )
     return emb.withColumn(
@@ -350,9 +337,6 @@ def ivf_topk(
     centroids: np.ndarray,
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """IVF search: each query probes its ``n_probe`` nearest centroid
@@ -366,27 +350,27 @@ def ivf_topk(
     from conversation_analysis_tools_spark.functions.vector import cosine_expr
 
     pairs = F.transform(
-        _centroid_dist_array(vec_col, centroids),
+        _centroid_dist_array("embedding", centroids),
         lambda d, i: F.struct(d.alias("d"), i.alias("cid")),
     )
     probes = (
         queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("_qv"),
+            F.col("query_id"),
+            F.col("embedding").alias("_qv"),
             F.explode(F.slice(F.array_sort(pairs), 1, n_probe)).alias("p"),
         )
-        .select(query_id_col, "_qv", F.col("p.cid").alias("centroid_id"))
+        .select("query_id", "_qv", F.col("p.cid").alias("centroid_id"))
     )
     cands = emb_assigned.join(F.broadcast(probes), "centroid_id")
     if exclude_self:  # only valid for self-search (shared id space)
-        cands = cands.where(F.col(id_col) != F.col(query_id_col))
+        cands = cands.where(F.col("vec_id") != F.col("query_id"))
     sims = cands.select(
-        query_id_col,
-        id_col,
-        F.round(cosine_expr(vec_col, "_qv"), 6).alias("sim"),
+        "query_id",
+        "vec_id",
+        F.round(cosine_expr("embedding", "_qv"), 6).alias("sim"),
     )
     # replica-dedup (soft assignment): see _ranked_topk
-    return _ranked_topk(sims, k, id_col, query_id_col, dedup=True)
+    return _ranked_topk(sims, k, "vec_id", "query_id", dedup=True)
 
 
 # ---------------------------------------------------------------------------
@@ -394,9 +378,7 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def quantize_vectors(
-    emb: DataFrame, vec_col: str = "embedding", q_col: str = "q", scale_col: str = "qscale"
-) -> DataFrame:
+def quantize_vectors(emb: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization: scale = max|x|/127,
     q_i = round(x_i/scale) in [-127, 127] stored as tinyint -- 4x
     smaller than float32 (16x vs float64), the standard first
@@ -404,12 +386,12 @@ def quantize_vectors(
     the shuffle/scan bytes; COSINE over quantized vectors needs no
     dequantization at all (the per-vector scales cancel in the
     ratio), so search is integer dot products."""
-    mx = F.array_max(F.transform(F.col(vec_col), lambda x: F.abs(x)))
-    out = emb.withColumn(scale_col, F.greatest(mx / F.lit(127.0), F.lit(1e-12)))
+    mx = F.array_max(F.transform(F.col("embedding"), lambda x: F.abs(x)))
+    out = emb.withColumn("qscale", F.greatest(mx / F.lit(127.0), F.lit(1e-12)))
     return out.withColumn(
-        q_col,
+        "q",
         F.transform(
-            F.col(vec_col), lambda x: F.round(x / F.col(scale_col)).cast("tinyint")
+            F.col("embedding"), lambda x: F.round(x / F.col("qscale")).cast("tinyint")
         ),
     )
 
@@ -435,9 +417,6 @@ def int8_brute_force_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """Brute-force top-k over int8-quantized vectors: quantize both
@@ -445,19 +424,19 @@ def int8_brute_force_topk(
     brute_force_topk (broadcast queries x one scan) at 1/4 the scan
     bytes; recall loss is the quantization error only (tests measure
     >= 0.8 vs exact on the synthetic corpus)."""
-    qemb = quantize_vectors(emb, vec_col).select(
-        F.col(id_col), F.col("q").alias("_cv")
+    qemb = quantize_vectors(emb).select(
+        F.col("vec_id"), F.col("q").alias("_cv")
     )
-    qq = quantize_vectors(queries, vec_col).select(
-        F.col(query_id_col), F.col("q").alias("_qv")
+    qq = quantize_vectors(queries).select(
+        F.col("query_id"), F.col("q").alias("_qv")
     )
     pairs = qemb.crossJoin(F.broadcast(qq))
     if exclude_self:
-        pairs = pairs.where(F.col(id_col) != F.col(query_id_col))
+        pairs = pairs.where(F.col("vec_id") != F.col("query_id"))
     sims = pairs.select(
-        query_id_col, id_col, F.round(_int_cosine(F.col("_cv"), F.col("_qv")), 6).alias("sim")
+        "query_id", "vec_id", F.round(_int_cosine(F.col("_cv"), F.col("_qv")), 6).alias("sim")
     )
-    return _ranked_topk(sims, k, id_col, query_id_col)
+    return _ranked_topk(sims, k, "vec_id", "query_id")
 
 
 # ---------------------------------------------------------------------------
@@ -470,14 +449,15 @@ PQ_K = 32       # codes per subspace -> 5 bits; ~5 bytes per 64-d vector (51x
                 # rerank=100) recall 0.96, rerank=200 -> 1.00; k=16 needs
                 # rerank=200 for 0.96.
 _PQ_SAMPLE = 2000
+_LLOYD_ITERS = 25
 
 
-def _lloyd(X: np.ndarray, k: int, iters: int = 25, seed: int = _SEED) -> np.ndarray:
+def _lloyd(X: np.ndarray, k: int, seed: int = _SEED) -> np.ndarray:
     """Tiny driver-side k-means (Lloyd) for codebook training on a
     bounded sample -- numpy only, deterministic."""
     rng = np.random.RandomState(seed)
     C = X[rng.choice(len(X), size=k, replace=len(X) < k)]
-    for _ in range(iters):
+    for _ in range(_LLOYD_ITERS):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
         assign = d.argmin(1)
         for c in range(k):
@@ -487,27 +467,23 @@ def _lloyd(X: np.ndarray, k: int, iters: int = 25, seed: int = _SEED) -> np.ndar
     return C
 
 
-def pq_train(
-    emb: DataFrame, dim: int, vec_col: str = "embedding", m: int = PQ_M, k: int = PQ_K
-) -> np.ndarray:
+def pq_train(emb: DataFrame, dim: int) -> np.ndarray:
     """Codebooks (m, k, dim/m) trained on a bounded L2-normalized
     sample -- the only driver-side artifact (m*k*dim floats, KB-scale
     broadcast). At 100 TB: train on a sample exactly like this; the
     encode pass is a map-only expression over the full corpus."""
-    sub = dim // m
+    sub = dim // PQ_M
     rows = (
-        emb.select(F.col(vec_col)).limit(_PQ_SAMPLE).collect()
+        emb.select(F.col("embedding")).limit(_PQ_SAMPLE).collect()
     )
     X = np.array([r[0] for r in rows], dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     return np.stack(
-        [_lloyd(X[:, s * sub : (s + 1) * sub], k, seed=_SEED + s) for s in range(m)]
+        [_lloyd(X[:, s * sub : (s + 1) * sub], PQ_K, seed=_SEED + s) for s in range(PQ_M)]
     )
 
 
-def pq_encode(
-    emb: DataFrame, codebooks: np.ndarray, vec_col: str = "embedding"
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """Attach ``pq_code`` (array of m subspace code ids) via an
     Arrow-batched pandas UDF: per batch, one (n x sub) @ (sub x k)
     BLAS product per subspace, argmin over the k columns.  A pure
@@ -533,7 +509,7 @@ def pq_encode(
             out[:, s] = (c_norms[s][None, :] - 2.0 * (Xs @ cb[s].T)).argmin(1)
         return pd.Series(list(out))
 
-    return emb.withColumn("pq_code", _codes(F.col(vec_col)))
+    return emb.withColumn("pq_code", _codes(F.col("embedding")))
 
 
 def pq_topk(
@@ -542,9 +518,6 @@ def pq_topk(
     codebooks: np.ndarray,
     k: int = 5,
     rerank: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """PQ search with asymmetric distance (ADC) + exact re-rank, as
@@ -560,19 +533,19 @@ def pq_topk(
     bytes/vector, one scan for any query-batch size, exactness
     restored where it matters."""
     m, kk, sub = codebooks.shape
-    qrows = queries.select(query_id_col, vec_col).collect()
+    qrows = queries.select("query_id", "embedding").collect()
     spark = encoded.sparkSession
     tab_rows = []
     for qr in qrows:
-        qv = np.array(qr[vec_col], dtype=np.float64)
+        qv = np.array(qr["embedding"], dtype=np.float64)
         qv = qv / max(np.linalg.norm(qv), 1e-12)
         flat = []
         for s in range(m):
             qs = qv[s * sub : (s + 1) * sub]
             flat.extend(float(((qs - codebooks[s, c]) ** 2).sum()) for c in range(kk))
-        tab_rows.append((int(qr[query_id_col]), flat, [float(x) for x in qv]))
+        tab_rows.append((int(qr["query_id"]), flat, [float(x) for x in qv]))
     qtab = spark.createDataFrame(
-        tab_rows, f"{query_id_col} bigint, _tbl array<double>, _qv array<double>"
+        tab_rows, "query_id bigint, _tbl array<double>, _qv array<double>"
     )
     # fold over subspaces: acc + tbl[s*kk + code_s]   (1-indexed element_at)
     adc = F.aggregate(
@@ -586,15 +559,15 @@ def pq_topk(
     )
     cand = encoded.crossJoin(F.broadcast(qtab)).withColumn("_adc", adc)
     if exclude_self:
-        cand = cand.where(F.col(id_col) != F.col(query_id_col))
-    wr = Window.partitionBy(query_id_col).orderBy(F.asc("_adc"), F.asc(id_col))
+        cand = cand.where(F.col("vec_id") != F.col("query_id"))
+    wr = Window.partitionBy("query_id").orderBy(F.asc("_adc"), F.asc("vec_id"))
     sims = (
         cand.withColumn("_pqr", F.row_number().over(wr))
         .where(F.col("_pqr") <= rerank)
         .select(
-            query_id_col,
-            id_col,
-            F.round(cosine_expr(vec_col, "_qv"), 6).alias("sim"),
+            "query_id",
+            "vec_id",
+            F.round(cosine_expr("embedding", "_qv"), 6).alias("sim"),
         )
     )
-    return _ranked_topk(sims, k, id_col, query_id_col)
+    return _ranked_topk(sims, k, "vec_id", "query_id")

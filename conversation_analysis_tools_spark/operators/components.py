@@ -41,8 +41,6 @@ SMALL_GRAPH_LIMIT = 500_000
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
     max_iter: int | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -72,11 +70,11 @@ def connected_components(
         # the diameter-robust star path runs. executeTake also scans
         # incrementally, so huge edge plans often probe FEWER
         # partitions than the old limit+count job did.
-        head = edges.select(src, dst).limit(SMALL_GRAPH_LIMIT + 1).collect()
+        head = edges.select("id1", "id2").limit(SMALL_GRAPH_LIMIT + 1).collect()
         strategy = "local" if len(head) <= SMALL_GRAPH_LIMIT else "star"
     if strategy == "local":
-        out = (_cc_local(edges, src, dst) if head is None
-               else _cc_local_rows(head, edges, src))
+        out = (_cc_local(edges, "id1", "id2") if head is None
+               else _cc_local_rows(head, edges, "id1"))
     else:
         # max_iter=None -> _cc_star self-sizes its round cap from the
         # node count (a fixed cap would be too tight past ~10^8
@@ -84,7 +82,7 @@ def connected_components(
         # round-bound certificates (cc_star_chain_fixed) keep their
         # teeth, and hitting it raises rather than returning
         # silently-split components
-        out, rounds = _cc_star(edges, src, dst, max_iter)
+        out, rounds = _cc_star(edges, max_iter)
     record("connected_components", strategy, requested=requested,
            probe_edges=None if head is None else len(head), star_rounds=rounds)
     return out
@@ -147,12 +145,7 @@ def _edge_fingerprint(cur: DataFrame) -> tuple:
     return (row["n"], row["h1"], row["h2"])
 
 
-def _cc_star(
-    edges: DataFrame,
-    src: str = "id1",
-    dst: str = "id2",
-    max_iter: int | None = None,
-) -> tuple[DataFrame, int]:
+def _cc_star(edges: DataFrame, max_iter: int | None = None) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star contraction (Kiveris et
     al., SoCC 2014) -- O(log n) rounds on any topology, so long
     chains don't stall it the way they stall min-label propagation.
@@ -174,16 +167,16 @@ def _cc_star(
     fixpoint-confirming one).
     """
     nodes = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
+        edges.select(F.col("id1").alias("id"))
+        .union(edges.select(F.col("id2").alias("id")))
         .distinct()
         .localCheckpoint()
     )
     cur = (
-        edges.where(F.col(src) != F.col(dst))
+        edges.where(F.col("id1") != F.col("id2"))
         .select(
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            F.least(F.col(src), F.col(dst)).alias("lo"),
+            F.greatest(F.col("id1"), F.col("id2")).alias("hi"),
+            F.least(F.col("id1"), F.col("id2")).alias("lo"),
         )
         .distinct()
         .localCheckpoint()

@@ -10,13 +10,13 @@ Design constraints:
   (MinHash), bit-blocks (SimHash), or inverted shingle index (Jaccard)
   bound the join.
 * At 100 TB: shingle explode is a flatMap; the per-band groupBy is the
-  only shuffle; bucket skew (a degenerate band key shared by everyone)
-  is capped with ``max_bucket`` -- over-cap buckets are dropped in the
-  fixed-band paths (almost always boilerplate collisions, mirroring
-  common practice: spark.mllib's MinHashLSH OR-amplification followed
-  by verification) and STAR-degraded (each id paired with the bucket
-  min; linear) in :func:`tuned_lsh_pairs`, the saturation router's
-  target, where popular buckets carry real near-threshold pairs.
+  only shuffle. The fixed-band paths keep every bucket, so their
+  candidates are exact and oracle-matched (on dup-dense corpora the
+  adaptive representative collapse keeps replica clusters out of the
+  buckets). :func:`tuned_lsh_pairs`, the saturation router's target,
+  STAR-degrades buckets over ``max_bucket`` (each id paired with the
+  bucket min; linear), where popular buckets carry real
+  near-threshold pairs.
 """
 
 from __future__ import annotations
@@ -46,13 +46,12 @@ _LOG = logging.getLogger(__name__)
 # ---------------------------------------------------------------------------
 
 
-def shingle_arrays(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """(id, sh_arr) distinct word n-grams per doc as a sorted array.
+#: Shingle width in words; SHINGLES_SQL mirrors it.
+SHINGLE_N = 3
+
+
+def shingle_arrays(df: DataFrame) -> DataFrame:
+    """(doc_id, sh_arr) distinct word SHINGLE_N-grams per doc as a sorted array.
 
     Narrow (map-only) stage: the per-doc distinct is ``array_distinct``
     inside the row, NOT a groupBy/distinct shuffle -- the distinct key
@@ -67,35 +66,32 @@ def shingle_arrays(
     # regexp per shingle (no CSE inside lambdas) -- measured 10x cost.
     # spread here (not at call sites) so every shingle consumer shares
     # one plan shape and CacheManager can substitute a persisted copy.
-    toks = spread_input(df, id_col).select(
-        F.col(id_col), raw_tokens_expr(text_col).alias("_toks")
+    toks = spread_input(df, "doc_id").select(
+        F.col("doc_id"), raw_tokens_expr("text").alias("_toks")
     )
     arr = F.col("_toks")
     # n direct element reads beat slice(): slice allocates a fresh
     # n-array per shingle before concat (measured -26% on the build)
     sh = F.when(
-        F.size(arr) >= n,
+        F.size(arr) >= SHINGLE_N,
         F.transform(
-            F.sequence(F.lit(0), F.size(arr) - F.lit(n)),
-            lambda i: F.concat_ws(" ", *[F.get(arr, i + j) for j in range(n)]),
+            F.sequence(F.lit(0), F.size(arr) - F.lit(SHINGLE_N)),
+            lambda i: F.concat_ws(
+                " ", *[F.get(arr, i + j) for j in range(SHINGLE_N)]
+            ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return toks.select(F.col(id_col), F.array_distinct(sh).alias("sh_arr"))
+    return toks.select(F.col("doc_id"), F.array_distinct(sh).alias("sh_arr"))
 
 
-def shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """(id, shingle) distinct word n-grams over raw lowercase tokens.
+def shingles(df: DataFrame) -> DataFrame:
+    """(doc_id, shingle) distinct word n-grams over raw lowercase tokens.
 
     Tokens are the reference tokenizer's raw form (stopwords kept --
     shingle dedup wants surface form). Zero-shuffle: explode of
     ``shingle_arrays`` (already per-doc distinct)."""
-    return shingle_arrays(df, id_col, text_col, n).select(
-        F.col(id_col), F.explode("sh_arr").alias("shingle")
+    return shingle_arrays(df).select(
+        F.col("doc_id"), F.explode("sh_arr").alias("shingle")
     )
 
 
@@ -121,13 +117,13 @@ shingles AS (
 # ---------------------------------------------------------------------------
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash (hash-groupBy; the
     always-first, always-cheap pass)."""
     return (
-        df.select(F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("content_hash"))
+        df.select(F.col("doc_id"), F.md5(F.col("text").cast("binary")).alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("representative"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("representative"))
         .where(F.col("n_docs") > 1)
     )
 
@@ -170,7 +166,7 @@ def km_u_step(digest_col):
     return u, step
 
 
-def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """k=16 MinHash signature per doc via ONE md5 per shingle +
     Kirsch-Mitzenmacher double hashing:
 
@@ -195,10 +191,10 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
     callers holding per-doc shingle arrays.
     """
     digested = sh.select(
-        F.col(id_col), F.md5(F.col("shingle").cast("binary")).alias("_d")
+        F.col("doc_id"), F.md5(F.col("shingle").cast("binary")).alias("_d")
     )
     u, step = km_u_step(F.col("_d"))
-    based = digested.select(F.col(id_col), u.alias("_u"), step.alias("_step"))
+    based = digested.select(F.col("doc_id"), u.alias("_u"), step.alias("_step"))
     # one F.expr per aggregate (not one per sub-Column): each PySpark
     # Column call is a py4j round trip, and this builder sits inside
     # every MinHash-family query's timed build (guide §4)
@@ -206,10 +202,10 @@ def minhash_signatures(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.expr(f"min(pmod(_u + {i}L * _step, {MINHASH_P}L)) AS h{i}")
         for i in range(N_HASHES)
     ]
-    return based.groupBy(id_col).agg(*aggs)
+    return based.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures_from_arrays(arrs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures_from_arrays(arrs: DataFrame) -> DataFrame:
     """k=16 MinHash signature per doc from the per-doc shingle array
     -- same single-digest double-hashing scheme as
     :func:`minhash_signatures` (one md5 per shingle, h_i derived by
@@ -227,11 +223,11 @@ def minhash_signatures_from_arrays(arrs: DataFrame, id_col: str = "doc_id") -> D
     way. Shingle-less docs are dropped (explode of an empty array),
     matching the previous contract.
     """
-    sh = arrs.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
-    return minhash_signatures(sh, id_col)
+    sh = arrs.select(F.col("doc_id"), F.explode("sh_arr").alias("shingle"))
+    return minhash_signatures(sh)
 
 
-def lsh_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_bands(sigs: DataFrame) -> DataFrame:
     """Signature -> (id, band, key): 4 bands x 4 rows, band key =
     md5 of the ':'-joined row hashes (ints render identically as
     decimal strings in both engines)."""
@@ -249,22 +245,14 @@ def lsh_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
         )
     return sigs.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.col("doc_id"), F.explode(F.array(*bands)).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
-def minhash_candidates(
-    bands: DataFrame, id_col: str = "doc_id", max_bucket: int | None = None
-) -> DataFrame:
-    """Pairs sharing >= 1 band bucket. ``max_bucket`` drops degenerate
-    buckets (skew cap at scale)."""
-    if max_bucket is not None:
-        sizes = bands.groupBy("band", "key").agg(F.count("*").alias("bsz"))
-        bands = bands.join(
-            sizes.where(F.col("bsz") <= max_bucket), ["band", "key"], "left_semi"
-        )
-    a = bands.select(F.col(id_col).alias("id1"), "band", "key")
-    b = bands.select(F.col(id_col).alias("id2"), "band", "key")
+def minhash_candidates(bands: DataFrame) -> DataFrame:
+    """Pairs sharing >= 1 band bucket."""
+    a = bands.select(F.col("doc_id").alias("id1"), "band", "key")
+    b = bands.select(F.col("doc_id").alias("id2"), "band", "key")
     return (
         a.join(b, ["band", "key"])
         .where(F.col("id1") < F.col("id2"))
@@ -273,9 +261,7 @@ def minhash_candidates(
     )
 
 
-def jaccard_verify(
-    candidates: DataFrame, sh_arr: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
+def jaccard_verify(candidates: DataFrame, sh_arr: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard for candidate pairs via per-doc shingle arrays.
 
     Two equi-joins bring each side's array onto the (rare) candidate
@@ -285,8 +271,8 @@ def jaccard_verify(
     candidate beats re-shuffling the full shingle table twice. Columns
     of ``candidates`` beyond (id1, id2) ride through to the output.
     """
-    a1 = sh_arr.select(F.col(id_col).alias("id1"), F.col("sh_arr").alias("a1"))
-    a2 = sh_arr.select(F.col(id_col).alias("id2"), F.col("sh_arr").alias("a2"))
+    a1 = sh_arr.select(F.col("doc_id").alias("id1"), F.col("sh_arr").alias("a1"))
+    a2 = sh_arr.select(F.col("doc_id").alias("id2"), F.col("sh_arr").alias("a2"))
     inter = F.size(F.array_intersect("a1", "a2"))
     return (
         candidates.join(a1, "id1")
@@ -302,11 +288,13 @@ def jaccard_verify(
     )
 
 
+#: Recall the tuned band solve targets at Jaccard = threshold.
+LSH_RECALL_TARGET = 0.98
+
+
 def tuned_lsh_pairs(
     sh_arr: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
-    recall_target: float = 0.98,
     max_bucket: int = 20,
 ) -> DataFrame:
     """Threshold-ADAPTIVE banded MinHash + exact-Jaccard verify: the
@@ -316,11 +304,11 @@ def tuned_lsh_pairs(
     The fixed 16-hash/4-band sibling (:func:`lsh_bands`) has its
     S-curve midpoint at (1/4)^(1/4) ~ 0.71 -- recall at a LOW
     threshold like 0.15 is ~zero (measured 0/27 true pairs at sf1).
-    Here the band count is SOLVED FROM the threshold and a recall
-    target: with r = 2 rows per band, a true pair at J = t shares a
-    band w.p. 1-(1-t^2)^b, so
+    Here the band count is SOLVED FROM the threshold and
+    LSH_RECALL_TARGET: with r = 2 rows per band, a true pair at J = t
+    shares a band w.p. 1-(1-t^2)^b, so
 
-        b = ceil(ln(1 - recall_target) / ln(1 - t^2)),  k = 2b hashes
+        b = ceil(ln(1 - LSH_RECALL_TARGET) / ln(1 - t^2)),  k = 2b hashes
 
     (clamped to [4, 256]; t = 0.15, R = 0.98 -> b = 172, k = 344 --
     cheap, because Kirsch-Mitzenmacher derives every h_i from ONE md5
@@ -358,19 +346,17 @@ def tuned_lsh_pairs(
     t = float(threshold)
     if not 0.0 < t < 1.0:
         raise ValueError(f"threshold must be in (0, 1), got {threshold!r}")
-    if not 0.0 < recall_target < 1.0:
-        raise ValueError(
-            f"recall_target must be in (0, 1), got {recall_target!r}"
-        )
-    b = min(256, max(4, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - t * t))))
+    b = min(256, max(4, math.ceil(
+        math.log(1.0 - LSH_RECALL_TARGET) / math.log(1.0 - t * t))))
     k = 2 * b
-    record("tuned_lsh_pairs", b, hashes=k, threshold=t, recall_target=recall_target)
-    sh = sh_arr.select(F.col(id_col), F.explode("sh_arr").alias("shingle"))
+    record("tuned_lsh_pairs", b, hashes=k, threshold=t,
+           recall_target=LSH_RECALL_TARGET)
+    sh = sh_arr.select(F.col("doc_id"), F.explode("sh_arr").alias("shingle"))
     digested = sh.select(
-        F.col(id_col), F.md5(F.col("shingle").cast("binary")).alias("_d")
+        F.col("doc_id"), F.md5(F.col("shingle").cast("binary")).alias("_d")
     )
     u, step = km_u_step(F.col("_d"))
-    based = digested.select(F.col(id_col), u.alias("_u"), step.alias("_step"))
+    based = digested.select(F.col("doc_id"), u.alias("_u"), step.alias("_step"))
     # The k min-aggregates and b band structs are built as TWO F.expr
     # SQL strings instead of 2(k + b) Column calls: each PySpark
     # Column/function call is a py4j round trip, and at the low-
@@ -379,7 +365,7 @@ def tuned_lsh_pairs(
     # (cProfile: 12.6k round trips, guide §4 -- the plan, aggregate
     # buffers, and every hash value are byte-identical; the only
     # change is how many strings cross the Python/JVM boundary).
-    sigs = based.groupBy(id_col).agg(
+    sigs = based.groupBy("doc_id").agg(
         F.expr(
             "array("
             + ",".join(
@@ -399,12 +385,12 @@ def tuned_lsh_pairs(
         )
         + "))"
     )
-    bx = sigs.select(F.col(id_col), F.expr(bands_sql).alias("bk")).select(
-        F.col(id_col), F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    bx = sigs.select(F.col("doc_id"), F.expr(bands_sql).alias("bk")).select(
+        F.col("doc_id"), F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    cands = capped_bucket_pairs(bx, id_col, max_bucket)
+    cands = capped_bucket_pairs(bx, "doc_id", max_bucket)
     return (
-        jaccard_verify(cands, sh_arr, t, id_col)
+        jaccard_verify(cands, sh_arr, t)
         .groupBy("id1", "id2")
         .agg(F.first("jaccard").alias("jaccard"))
     )
@@ -444,9 +430,6 @@ def capped_bucket_pairs(
 def minhash_dedup_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = None,
     collapse: str = "auto",
 ) -> DataFrame:
     """MinHash LSH candidates -> exact-Jaccard verified pairs.
@@ -456,30 +439,18 @@ def minhash_dedup_pairs(
     ``maybe_collapse``) -- output-exact for any threshold <= 1, since
     a within-group pair's exact Jaccard is 1.0 and a cross-group
     member pair has the same arrays (hence candidates and Jaccard) as
-    its rep pair. ``max_bucket`` remains the residual recall-trading
-    skew valve for buckets of NON-identical docs (boilerplate
-    collisions); default None keeps the operator exact /
-    oracle-matched. A non-None ``max_bucket`` FORCES the direct plan
-    (collapse disengaged): the cutoff counts bucket rows, so applying
-    it at representative grain would recall-drop a *different* pair
-    set than the direct plan, and the adaptive probe would then make
-    the output depend on dup density -- mirroring ``duplicate_pairs``'
-    max_df handling.
+    its rep pair. Every band bucket is kept, so the operator is exact
+    and oracle-matched.
     """
-    rep_pairs, members = minhash_rep_pairs(
-        df, threshold, id_col, text_col, max_bucket, collapse
-    )
+    rep_pairs, members = minhash_rep_pairs(df, threshold, collapse)
     if members is None:
         return rep_pairs
-    return expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
+    return expand_rep_pairs(rep_pairs, members, "doc_id", "jaccard", 1.0)
 
 
 def minhash_rep_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = None,
     collapse: str = "auto",
 ) -> tuple[DataFrame, DataFrame | None]:
     """The shared MinHash pipeline up to (but not including) member
@@ -492,23 +463,15 @@ def minhash_rep_pairs(
     members inheriting through the fingerprint group -- the m^2
     member-pair materialization never happens)."""
     # persist: the array table feeds fingerprints AND the verify joins
-    arrs = track(shingle_arrays(df, id_col, text_col))
-    work, members = maybe_collapse(
-        arrs, id_col, "never" if max_bucket is not None else collapse
-    )
-    cands = minhash_candidates(
-        lsh_bands(minhash_signatures_from_arrays(work, id_col), id_col),
-        id_col,
-        max_bucket,
-    )
-    return jaccard_verify(cands, work, threshold, id_col), members
+    arrs = track(shingle_arrays(df))
+    work, members = maybe_collapse(arrs, "doc_id", collapse)
+    cands = minhash_candidates(lsh_bands(minhash_signatures_from_arrays(work)))
+    return jaccard_verify(cands, work, threshold), members
 
 
 def minhash_cluster_members(
     df: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     collapse: str = "auto",
 ) -> DataFrame:
     """(id, component) for every doc in a near-dup cluster, component
@@ -528,14 +491,12 @@ def minhash_cluster_members(
         connected_components,
     )
 
-    rep_pairs, members = minhash_rep_pairs(
-        df, threshold, id_col, text_col, None, collapse
-    )
+    rep_pairs, members = minhash_rep_pairs(df, threshold, collapse)
     comp_rep = connected_components(rep_pairs.select("id1", "id2"))
     if members is None:
         return comp_rep
     groups = members.groupBy("_fp").agg(
-        F.min(id_col).alias("_rep"), F.count("*").alias("_gsz")
+        F.min("doc_id").alias("_rep"), F.count("*").alias("_gsz")
     )
     # no forced broadcast: groups is one row per DISTINCT fingerprint
     # (corpus-scale at 100 TB), comp_rep one per clustered rep -- both
@@ -544,7 +505,7 @@ def minhash_cluster_members(
         comp_rep.withColumnRenamed("id", "_rep"), "_rep", "left"
     )
     return m.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.coalesce(
             "component", F.when(F.col("_gsz") >= 2, F.col("_rep"))
         ).alias("component"),
@@ -555,8 +516,6 @@ def cross_corpus_minhash_pairs(
     eval_df: DataFrame,
     train_df: DataFrame,
     threshold: float = 0.2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     collapse: str = "auto",
 ) -> DataFrame:
     """Eval-vs-train contamination at MinHash grain: LSH band join
@@ -577,22 +536,22 @@ def cross_corpus_minhash_pairs(
     negligible next to the signature pass it already pays. Returns
     (eval_id, train_id, jaccard).
     """
-    e_arrs = track(shingle_arrays(eval_df, id_col, text_col))
-    t_arrs = track(shingle_arrays(train_df, id_col, text_col))
-    t_rep_arrs, t_members = maybe_collapse(t_arrs, id_col, collapse)
-    e_bands = lsh_bands(minhash_signatures_from_arrays(e_arrs, id_col), id_col).select(
-        F.col(id_col).alias("eval_id"), "band", "key"
+    e_arrs = track(shingle_arrays(eval_df))
+    t_arrs = track(shingle_arrays(train_df))
+    t_rep_arrs, t_members = maybe_collapse(t_arrs, "doc_id", collapse)
+    e_bands = lsh_bands(minhash_signatures_from_arrays(e_arrs)).select(
+        F.col("doc_id").alias("eval_id"), "band", "key"
     )
     t_bands = lsh_bands(
-        minhash_signatures_from_arrays(t_rep_arrs, id_col), id_col
-    ).select(F.col(id_col).alias("train_id"), "band", "key")
+        minhash_signatures_from_arrays(t_rep_arrs)
+    ).select(F.col("doc_id").alias("train_id"), "band", "key")
     cands = (
         t_bands.join(F.broadcast(e_bands), ["band", "key"])
         .select("eval_id", "train_id")
         .distinct()
     )
-    a1 = e_arrs.select(F.col(id_col).alias("eval_id"), F.col("sh_arr").alias("a1"))
-    a2 = t_rep_arrs.select(F.col(id_col).alias("train_id"), F.col("sh_arr").alias("a2"))
+    a1 = e_arrs.select(F.col("doc_id").alias("eval_id"), F.col("sh_arr").alias("a1"))
+    a2 = t_rep_arrs.select(F.col("doc_id").alias("train_id"), F.col("sh_arr").alias("a2"))
     inter = F.size(F.array_intersect("a1", "a2"))
     rep_pairs = (
         cands.join(F.broadcast(a1), "eval_id")
@@ -609,13 +568,13 @@ def cross_corpus_minhash_pairs(
     if t_members is None:
         return rep_pairs
     # expand train representatives back to every member of their group
-    t_reps = group_reps(t_members, id_col)
+    t_reps = group_reps(t_members, "doc_id")
     return (
         rep_pairs.join(
-            t_reps.withColumnRenamed(id_col, "train_id"), "train_id"
+            t_reps.withColumnRenamed("doc_id", "train_id"), "train_id"
         )
         .drop("train_id")
-        .join(t_members.withColumnRenamed(id_col, "train_id"), "_fp")
+        .join(t_members.withColumnRenamed("doc_id", "train_id"), "_fp")
         .select("eval_id", "train_id", "jaccard")
     )
 
@@ -684,8 +643,6 @@ def edit_distance_pairs(
     df: DataFrame,
     threshold: float = 0.8,
     max_chars: int = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     collapse: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs verified by exact Levenshtein similarity:
@@ -744,34 +701,30 @@ def edit_distance_pairs(
     one scan would re-derive the shingle arrays outside the track()'d
     relation the set probe deliberately warms.
     """
-    arrs = track(shingle_arrays(df, id_col, text_col))
-    if collapse_engaged(
-        collapse, lambda: dup_density_decision(df, text_col=text_col)
-    ):
-        nonempty = arrs.where(F.size("sh_arr") > 0).select(id_col)
+    arrs = track(shingle_arrays(df))
+    if collapse_engaged(collapse, lambda: dup_density_decision(df)):
+        nonempty = arrs.where(F.size("sh_arr") > 0).select("doc_id")
         members = track(
-            df.join(nonempty, id_col, "left_semi").select(
-                F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_fp")
+            df.join(nonempty, "doc_id", "left_semi").select(
+                F.col("doc_id"), F.md5(F.col("text").cast("binary")).alias("_fp")
             )
         )
-        reps = group_reps(members, id_col)
-        work_arrs = arrs.join(reps.select(id_col), id_col, "left_semi")
-        t_base = df.join(reps.select(id_col), id_col, "left_semi")
+        reps = group_reps(members, "doc_id")
+        work_arrs = arrs.join(reps.select("doc_id"), "doc_id", "left_semi")
+        t_base = df.join(reps.select("doc_id"), "doc_id", "left_semi")
     else:
         members = None
         work_arrs = arrs
         t_base = df
-    cand_arrs, cand_members = maybe_collapse(work_arrs, id_col, collapse)
-    cands = minhash_candidates(
-        lsh_bands(minhash_signatures_from_arrays(cand_arrs, id_col), id_col), id_col
-    )
+    cand_arrs, cand_members = maybe_collapse(work_arrs, "doc_id", collapse)
+    cands = minhash_candidates(lsh_bands(minhash_signatures_from_arrays(cand_arrs)))
     if cand_members is not None:
-        cands = expand_rep_pairs(cands, cand_members, id_col)
+        cands = expand_rep_pairs(cands, cand_members, "doc_id")
     t = t_base.select(
-        F.col(id_col), F.substring(F.col(text_col), 1, max_chars).alias("_t")
+        F.col("doc_id"), F.substring(F.col("text"), 1, max_chars).alias("_t")
     )
-    t1 = t.select(F.col(id_col).alias("id1"), F.col("_t").alias("t1"))
-    t2 = t.select(F.col(id_col).alias("id2"), F.col("_t").alias("t2"))
+    t1 = t.select(F.col("doc_id").alias("id1"), F.col("_t").alias("t1"))
+    t2 = t.select(F.col("doc_id").alias("id2"), F.col("_t").alias("t2"))
     # Two exact verify cuts (both derived from dist >= |len1 - len2|
     # and dist <= (1-threshold) * max(len) for any qualifying pair):
     #  1. length prefilter -- a pair whose lengths differ by more than
@@ -827,7 +780,7 @@ def edit_distance_pairs(
     )
     if members is None:
         return rep_pairs
-    return expand_rep_pairs(rep_pairs, members, id_col, "edit_sim", 1.0)
+    return expand_rep_pairs(rep_pairs, members, "doc_id", "edit_sim", 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -847,7 +800,7 @@ SIMHASH_BLOCK_BITS = SIMHASH_BITS // 4
 SIMHASH_BLOCK_MASK = (1 << SIMHASH_BLOCK_BITS) - 1
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """60-bit SimHash over token multiset, md5-derived bit projections.
 
     bit b of token = bit (3 - b%4) of hex digit b//4 of md5(token);
@@ -880,22 +833,22 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
 
     Edge contracts: a doc whose text is NULL gets signature 0, like
     empty text, so NULL-text and empty-text docs pair at hamming 0 in
-    :func:`simhash_pairs`. ``id_col`` must be unique: the signature
+    :func:`simhash_pairs`. ``doc_id`` must be unique: the signature
     sums group by id, so docs sharing an id merge into one signature.
     """
     from conversation_analysis_tools_spark.functions.text import raw_tokens_expr
 
-    hv = spread_input(df, id_col).select(
-        F.col(id_col),
-        F.explode_outer(raw_tokens_expr(text_col)).alias("_t"),
+    hv = spread_input(df, "doc_id").select(
+        F.col("doc_id"),
+        F.explode_outer(raw_tokens_expr("text")).alias("_t"),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.expr(
             f"cast(conv(substring(md5(cast(_t as binary)), 1,"
             f" {SIMHASH_BITS // 4}), 16, 10) as bigint)"
         ).alias("_h"),
     )
-    sums = hv.groupBy(id_col).agg(
+    sums = hv.groupBy("doc_id").agg(
         *[
             F.expr(f"sum(2 * bit_get(_h, {SIMHASH_BITS - 1 - b}) - 1) AS s{b}")
             for b in range(SIMHASH_BITS)
@@ -905,15 +858,10 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
         f"(CASE WHEN s{b} > 0 THEN {1 << b}L ELSE 0L END)"
         for b in range(SIMHASH_BITS)
     )
-    return sums.select(F.col(id_col), F.expr(sig).alias("simhash"))
+    return sums.select(F.col("doc_id"), F.expr(sig).alias("simhash"))
 
 
-def simhash_pairs(
-    sig: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    max_bucket: int | None = None,
-) -> DataFrame:
+def simhash_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pairs with hamming(simhash) <= k via 15-bit block candidates.
 
     Pigeonhole: hamming <= 3 over 4 blocks => >= 1 identical block.
@@ -930,18 +878,15 @@ def simhash_pairs(
     linear expansion of the *output* pairs. Output-exact for ANY
     ``max_hamming``: members of one signature group pair at hamming 0,
     and a cross-group member pair shares a block iff its representative
-    pair does (same signatures). ``max_bucket`` additionally drops
-    degenerate (blk, val) buckets bigger than the cap, mirroring
-    ``minhash_candidates`` -- a recall-trading skew valve for 100-TB
-    runs (default None keeps the operator exact / oracle-matched).
+    pair does (same signatures).
     """
     # --- collapse: one representative per distinct signature ---------
     # groupBy runs with map-side partial aggregation, so a dup cluster
     # of any size is skew-safe; the group table is 16 bytes/row.
-    groups = sig.groupBy("simhash").agg(F.min(id_col).alias("_rep"))
-    reps = groups.select(F.col("_rep").alias(id_col), "simhash")
+    groups = sig.groupBy("simhash").agg(F.min("doc_id").alias("_rep"))
+    reps = groups.select(F.col("_rep").alias("doc_id"), "simhash")
     blocks = reps.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("simhash"),
         F.explode(
             F.array(
@@ -956,17 +901,12 @@ def simhash_pairs(
                 ]
             )
         ).alias("bv"),
-    ).select(id_col, "simhash", F.col("bv.blk").alias("blk"), F.col("bv.val").alias("val"))
-    if max_bucket is not None:
-        sizes = blocks.groupBy("blk", "val").agg(F.count("*").alias("bsz"))
-        blocks = blocks.join(
-            sizes.where(F.col("bsz") <= max_bucket), ["blk", "val"], "left_semi"
-        )
+    ).select("doc_id", "simhash", F.col("bv.blk").alias("blk"), F.col("bv.val").alias("val"))
     a = blocks.select(
-        F.col(id_col).alias("id1"), F.col("simhash").alias("sh1"), "blk", "val"
+        F.col("doc_id").alias("id1"), F.col("simhash").alias("sh1"), "blk", "val"
     )
     b = blocks.select(
-        F.col(id_col).alias("id2"), F.col("simhash").alias("sh2"), "blk", "val"
+        F.col("doc_id").alias("id2"), F.col("simhash").alias("sh2"), "blk", "val"
     )
     rep_pairs = (
         a.join(b, ["blk", "val"])
@@ -979,12 +919,12 @@ def simhash_pairs(
     # --- expand: within-group pairs at hamming 0, cross-group pairs
     # inherit the rep pair's hamming. The rep pairs already carry both
     # signatures, so the expansion joins members on them directly.
-    members = sig.select(F.col(id_col), F.col("simhash").alias("_fp"))
+    members = sig.select(F.col("doc_id"), F.col("simhash").alias("_fp"))
     return expand_rep_pairs(
         rep_pairs.select(
             F.col("sh1").alias("_fp1"), F.col("sh2").alias("_fp2"), "hamming"
         ),
-        members, id_col, "hamming", 0,
+        members, "doc_id", "hamming", 0,
     )
 
 
@@ -996,9 +936,6 @@ def simhash_pairs(
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
     collapse: str = "auto",
     route: str = "auto",
     route_budget: int = 32_000_000,
@@ -1071,12 +1008,12 @@ def ngram_jaccard_pairs(
     if route not in ("auto", "exact", "minhash"):
         raise ValueError(f"route must be auto|exact|minhash, got {route!r}")
     requested = route
-    arrs = track(shingle_arrays(df, id_col, text_col, n))
-    rep_arrs, members = maybe_collapse(arrs, id_col, collapse)
+    arrs = track(shingle_arrays(df))
+    rep_arrs, members = maybe_collapse(arrs, "doc_id", collapse)
     # postings carry the doc's set size inline (explode keeps sibling
     # columns) -- the length filter needs no corpus-grain broadcast
     sh = rep_arrs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("sh_arr").alias("sz"),
         F.explode("sh_arr").alias("shingle"),
     )
@@ -1112,13 +1049,13 @@ def ngram_jaccard_pairs(
     record("ngram_jaccard_pairs", route, requested=requested,
            probe_rows=est, route_budget=route_budget)
     if route == "minhash":
-        rep_pairs = tuned_lsh_pairs(rep_arrs, threshold, id_col)
+        rep_pairs = tuned_lsh_pairs(rep_arrs, threshold)
     else:
         s1 = sh.select(
-            F.col(id_col).alias("id1"), F.col("sz").alias("sz1"), "shingle"
+            F.col("doc_id").alias("id1"), F.col("sz").alias("sz1"), "shingle"
         )
         s2 = sh.select(
-            F.col(id_col).alias("id2"), F.col("sz").alias("sz2"), "shingle"
+            F.col("doc_id").alias("id2"), F.col("sz").alias("sz2"), "shingle"
         )
         t = F.lit(float(threshold))
         inter = (
@@ -1140,7 +1077,7 @@ def ngram_jaccard_pairs(
         ).where(F.col("jaccard") >= threshold)
     if members is None:
         return rep_pairs
-    return expand_rep_pairs(rep_pairs, members, id_col, "jaccard", 1.0)
+    return expand_rep_pairs(rep_pairs, members, "doc_id", "jaccard", 1.0)
 
 
 # ---------------------------------------------------------------------------
@@ -1151,8 +1088,6 @@ def ngram_jaccard_pairs(
 def embedding_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = "label",
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine within blocking key.
@@ -1178,7 +1113,7 @@ def embedding_dup_pairs(
 
         # persisted: counted for the grid size, then scanned by the cells
         per_doc = track(
-            emb.select(F.col(id_col).alias("_id"), unit_vector(vec_col).alias("v"))
+            emb.select(F.col("vec_id").alias("_id"), unit_vector("embedding").alias("v"))
         )
         return grid_blocked_pairs(per_doc, threshold)
 
@@ -1188,15 +1123,15 @@ def embedding_dup_pairs(
     # same values, so sim is bit-identical to cosine_expr.
     a = emb.select(
         F.col(block_col),
-        F.col(id_col).alias("id1"),
-        F.col(vec_col).alias("v1"),
-        norm_expr(vec_col).alias("_n1"),
+        F.col("vec_id").alias("id1"),
+        F.col("embedding").alias("v1"),
+        norm_expr("embedding").alias("_n1"),
     )
     b = emb.select(
         F.col(block_col),
-        F.col(id_col).alias("id2"),
-        F.col(vec_col).alias("v2"),
-        norm_expr(vec_col).alias("_n2"),
+        F.col("vec_id").alias("id2"),
+        F.col("embedding").alias("v2"),
+        norm_expr("embedding").alias("_n2"),
     )
     sim = F.when(
         (F.col("_n1") == 0) | (F.col("_n2") == 0), F.lit(0.0)
@@ -1302,8 +1237,6 @@ def _salted_cross_flags(
 
 def substring_span_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 8,
     skew_safe: bool | None = None,
 ) -> DataFrame:
@@ -1354,8 +1287,8 @@ def substring_span_stats(
     # spread to scan parallelism (round 12, guide §2.5/§6): the
     # tokenize + per-position xxhash chain otherwise runs as one task
     # on single-row-group corpora
-    toks = spread_input(df, id_col).select(
-        F.col(id_col), raw_tokens_expr(text_col).alias("_toks")
+    toks = spread_input(df, "doc_id").select(
+        F.col("doc_id"), raw_tokens_expr("text").alias("_toks")
     )
     arr = F.col("_toks")
     # span identity is INTERNAL (grouping only, never emitted), so an
@@ -1370,7 +1303,7 @@ def substring_span_stats(
             lambda i: F.xxhash64(*[F.get(arr, i + j) for j in range(width)]),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
-    spans = toks.select(F.col(id_col), F.explode(span_hashes).alias("span_hash"))
+    spans = toks.select(F.col("doc_id"), F.explode(span_hashes).alias("span_hash"))
 
     if _skew_safe_engaged(df, skew_safe):
         # two-phase hot-key-safe twin: per-hash global min/max with
@@ -1380,20 +1313,20 @@ def substring_span_stats(
         # counts row-wise)
         cross = (
             spans.groupBy("span_hash")
-            .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
+            .agg(F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx"))
             .where(F.col("_mn") != F.col("_mx"))
             .select("span_hash")
         )
         dup_per_doc = (
-            _salted_cross_flags(spans, cross, "span_hash", id_col)
-            .groupBy(id_col)
+            _salted_cross_flags(spans, cross, "span_hash", "doc_id")
+            .groupBy("doc_id")
             .agg(F.count("*").alias("_n_dup"))
         )
         base = toks.where(F.size(arr) >= width).select(
-            F.col(id_col),
+            F.col("doc_id"),
             (F.size(arr) - F.lit(width - 1)).cast("long").alias("_n_spans"),
         )
-        per_doc = base.join(dup_per_doc, id_col, "left").withColumn(
+        per_doc = base.join(dup_per_doc, "doc_id", "left").withColumn(
             "_n_dup", F.coalesce(F.col("_n_dup"), F.lit(0))
         )
     else:
@@ -1404,17 +1337,17 @@ def substring_span_stats(
         # before)
         w = Window.partitionBy("span_hash")
         flagged = spans.select(
-            F.col(id_col),
-            (F.min(id_col).over(w) != F.max(id_col).over(w)).alias("_cross"),
+            F.col("doc_id"),
+            (F.min("doc_id").over(w) != F.max("doc_id").over(w)).alias("_cross"),
         )
-        per_doc = flagged.groupBy(id_col).agg(
+        per_doc = flagged.groupBy("doc_id").agg(
             F.count("*").alias("_n_spans"),
             F.sum(F.when(F.col("_cross"), 1).otherwise(0)).alias("_n_dup"),
         )
     n_spans = F.col("_n_spans").cast("bigint")
     n_dup = F.col("_n_dup").cast("bigint")
     return per_doc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_spans.alias("n_spans"),
         n_dup.alias("n_dup_spans"),
         F.round(n_dup * 1.0 / n_spans, 6).alias("dup_fraction"),
@@ -1423,8 +1356,6 @@ def substring_span_stats(
 
 def remove_duplicate_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 8,
     skew_safe: bool | None = None,
 ) -> DataFrame:
@@ -1463,8 +1394,8 @@ def remove_duplicate_spans(
     # spread to scan parallelism (round 12, guide §2.5/§6) before the
     # tokenize; the persisted token table then also caches spread
     toks_df = track(
-        spread_input(df, id_col).select(
-            F.col(id_col), raw_tokens_expr(text_col).alias("_toks")
+        spread_input(df, "doc_id").select(
+            F.col("doc_id"), raw_tokens_expr("text").alias("_toks")
         )
     )
     arr = F.col("_toks")
@@ -1481,7 +1412,7 @@ def remove_duplicate_spans(
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     spans = toks_df.select(
-        F.col(id_col), F.posexplode(span_hashes).alias("s", "span_hash")
+        F.col("doc_id"), F.posexplode(span_hashes).alias("s", "span_hash")
     )
 
     if _skew_safe_engaged(df, skew_safe):
@@ -1491,29 +1422,29 @@ def remove_duplicate_spans(
         # SKEW_SALT partitions
         cross = (
             spans.groupBy("span_hash")
-            .agg(F.min(id_col).alias("_mn"), F.max(id_col).alias("_mx"))
+            .agg(F.min("doc_id").alias("_mn"), F.max("doc_id").alias("_mx"))
             .where(F.col("_mn") != F.col("_mx"))
             .select("span_hash")
         )
         dup_starts = (
-            _salted_cross_flags(spans, cross, "span_hash", id_col)
-            .groupBy(id_col)
+            _salted_cross_flags(spans, cross, "span_hash", "doc_id")
+            .groupBy("doc_id")
             .agg(F.sort_array(F.collect_list("s")).alias("_starts"))
         )
     else:
         w = Window.partitionBy("span_hash")
         flagged = spans.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("s"),
-            (F.min(id_col).over(w) != F.max(id_col).over(w)).alias("_cross"),
+            (F.min("doc_id").over(w) != F.max("doc_id").over(w)).alias("_cross"),
         )
         dup_starts = (
             flagged.where(F.col("_cross"))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sort_array(F.collect_list("s")).alias("_starts"))
         )
 
-    out = toks_df.join(dup_starts, id_col, "left")
+    out = toks_df.join(dup_starts, "doc_id", "left")
     starts = F.coalesce(F.col("_starts"), F.array().cast("array<int>"))
     # Fold the SORTED starts into merged disjoint [lo, hi] intervals
     # before the per-token test: a start s covers [s, s+width-1], and
@@ -1560,7 +1491,7 @@ def remove_duplicate_spans(
         ),
     ).otherwise(F.array().cast("array<int>"))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(arr).cast("bigint").alias("n_tokens"),
         (F.size(arr) - F.size(kept)).cast("bigint").alias("n_removed"),
         F.concat_ws(
@@ -1578,8 +1509,6 @@ def semdedup_prune(
     emb: DataFrame,
     centroids,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dense_path: bool | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -1660,7 +1589,7 @@ def semdedup_prune(
         # measured ~30 s of a 37 s run at 20k vectors / C=157).
         nearest = _nearest_centroid(centroids)
         out_schema = (
-            f"{id_col} long, {vec_col} array<double>, "
+            "vec_id long, embedding array<double>, "
             "centroid_id int, centroid_dist double"
         )
 
@@ -1671,11 +1600,11 @@ def semdedup_prune(
                 # NULL embeddings keep their row with NULL
                 # centroid_id/dist; they join no cluster and surface as
                 # kept singletons downstream
-                cid, d2 = nearest(pdf[vec_col])
+                cid, d2 = nearest(pdf["embedding"])
                 yield pd.DataFrame(
                     {
-                        id_col: pdf[id_col].to_numpy(),
-                        vec_col: pdf[vec_col].to_numpy(),
+                        "vec_id": pdf["vec_id"].to_numpy(),
+                        "embedding": pdf["embedding"].to_numpy(),
                         "centroid_id": cid,
                         "centroid_dist": np.sqrt(d2),
                     }
@@ -1690,10 +1619,10 @@ def semdedup_prune(
         assigned = track(
             spread_input(
                 emb.select(
-                    F.col(id_col),
-                    F.col(vec_col).cast("array<double>").alias(vec_col),
+                    F.col("vec_id"),
+                    F.col("embedding").cast("array<double>").alias("embedding"),
                 ),
-                id_col,
+                "vec_id",
             ).mapInPandas(assign_batches, schema=out_schema)
         )
         # IDENTICAL-EMBEDDING collapse before the pair scan (round 7,
@@ -1714,31 +1643,31 @@ def semdedup_prune(
         # ranks members directly. t > 1.0 (nothing pairs, even
         # identicals) falls through to the plain scan.
         if threshold <= 1.0:
-            nonnull = assigned.where(F.col(vec_col).isNotNull())
-            groups = nonnull.groupBy("centroid_id", vec_col).agg(
-                F.min(id_col).alias("_rep")
+            nonnull = assigned.where(F.col("embedding").isNotNull())
+            groups = nonnull.groupBy("centroid_id", "embedding").agg(
+                F.min("vec_id").alias("_rep")
             )
-            member_map = nonnull.select("centroid_id", id_col, vec_col).join(
-                groups, ["centroid_id", vec_col]
+            member_map = nonnull.select("centroid_id", "vec_id", "embedding").join(
+                groups, ["centroid_id", "embedding"]
             )
-            reps = member_map.where(F.col(id_col) == F.col("_rep")).select(
-                "centroid_id", id_col, vec_col
+            reps = member_map.where(F.col("vec_id") == F.col("_rep")).select(
+                "centroid_id", "vec_id", "embedding"
             )
             rep_edges = grouped_grid_pairs(
-                reps, "centroid_id", threshold, id_col=id_col, vec_col=vec_col
+                reps, "centroid_id", threshold
             ).select("id1", "id2")
             rep_comps = connected_components(rep_edges)
             comps = (
-                member_map.select(id_col, "_rep")
+                member_map.select("vec_id", "_rep")
                 .join(
                     rep_comps.withColumnRenamed("id", "_rep"), "_rep", "left"
                 )
                 .select(
-                    F.col(id_col).alias("id"),
+                    F.col("vec_id").alias("id"),
                     F.coalesce("component", F.col("_rep")).alias("component"),
                 )
             )
-            return _semdedup_decisions(assigned, comps, id_col, vec_col)
+            return _semdedup_decisions(assigned, comps)
         # within-cluster pair scan through the per-cluster
         # grid-blocked BLAS stage (zero-norm vectors normalize to
         # themselves and dot to 0 against anything, matching the
@@ -1746,18 +1675,18 @@ def semdedup_prune(
         # skewed cluster degrades to bounded-size grid tasks instead
         # of one quadratic task
         edges = grouped_grid_pairs(
-            assigned, "centroid_id", threshold, id_col=id_col, vec_col=vec_col
+            assigned, "centroid_id", threshold
         ).select("id1", "id2")
     else:
         # one pass over the C distance expressions serves both the
         # argmin assignment and the distance-to-own-centroid (vs.
         # calling ivf_assign then recomputing the array: half the
         # codegen width)
-        dists = _centroid_dist_array(vec_col, centroids)
+        dists = _centroid_dist_array("embedding", centroids)
         assigned = track(
             emb.withColumn("_d", dists).select(
-                F.col(id_col),
-                F.col(vec_col),
+                F.col("vec_id"),
+                F.col("embedding"),
                 (F.array_position("_d", F.array_min("_d")) - 1)
                 .cast("int")
                 .alias("centroid_id"),
@@ -1770,15 +1699,15 @@ def semdedup_prune(
         # -> 1
         a = assigned.select(
             "centroid_id",
-            F.col(id_col).alias("id1"),
-            F.col(vec_col).alias("v1"),
-            norm_expr(vec_col).alias("_n1"),
+            F.col("vec_id").alias("id1"),
+            F.col("embedding").alias("v1"),
+            norm_expr("embedding").alias("_n1"),
         )
         b = assigned.select(
             "centroid_id",
-            F.col(id_col).alias("id2"),
-            F.col(vec_col).alias("v2"),
-            norm_expr(vec_col).alias("_n2"),
+            F.col("vec_id").alias("id2"),
+            F.col("embedding").alias("v2"),
+            norm_expr("embedding").alias("_n2"),
         )
         sim = F.when(
             (F.col("_n1") == 0) | (F.col("_n2") == 0), F.lit(0.0)
@@ -1790,30 +1719,28 @@ def semdedup_prune(
             .select("id1", "id2")
         )
     comps = connected_components(edges)
-    return _semdedup_decisions(assigned, comps, id_col, vec_col)
+    return _semdedup_decisions(assigned, comps)
 
 
-def _semdedup_decisions(
-    assigned: DataFrame, comps: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
+def _semdedup_decisions(assigned: DataFrame, comps: DataFrame) -> DataFrame:
     """Shared semdedup tail: attach (id -> component) decisions to the
     assigned table and rank keeps. ``comps`` is (id, component) at
     member grain (from member-grain CC, or the rep-grain expansion);
     rows absent from it (singletons / null vectors) become their own
     component. The keep window partitions by component, so its cost
     is one per-component sort at member grain -- linear."""
-    out = assigned.drop(vec_col).join(
-        comps.withColumnRenamed("id", id_col), id_col, "left"
+    out = assigned.drop("embedding").join(
+        comps.withColumnRenamed("id", "vec_id"), "vec_id", "left"
     )
     # singletons (no near-dup edge) form their own component and are kept
     out = out.withColumn(
-        "component", F.coalesce(F.col("component"), F.col(id_col)).cast("bigint")
+        "component", F.coalesce(F.col("component"), F.col("vec_id")).cast("bigint")
     )
     w = Window.partitionBy("component").orderBy(
-        F.desc("centroid_dist"), F.asc(id_col)
+        F.desc("centroid_dist"), F.asc("vec_id")
     )
     return out.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col("centroid_id").cast("int").alias("centroid_id"),
         F.round("centroid_dist", 6).alias("centroid_dist"),
         "component",
@@ -1826,17 +1753,18 @@ def _semdedup_decisions(
 # ---------------------------------------------------------------------------
 
 
+#: Distinct-document count at which a line is boilerplate.
+BOILERPLATE_MIN_DF = 5
+
+
 def remove_boilerplate_lines(
     pages: DataFrame,
-    max_df: int = 5,
-    id_col: str = "doc_id",
-    page_col: str = "page",
     skew_safe: bool | None = None,
 ) -> DataFrame:
     """Line-grain cross-document dedup (Wenzek et al. 2019 CCNet; the
     RefinedWeb/C4 "seen-before" rule): hash every normalized line,
     count how many DISTINCT documents each hash appears in, and drop
-    lines whose document frequency reaches ``max_df`` -- navbars,
+    lines whose document frequency reaches BOILERPLATE_MIN_DF -- navbars,
     cookie banners, newsletter prompts survive per-doc rules
     (c4_line_clean) but never a corpus-frequency cut.
 
@@ -1864,7 +1792,7 @@ def remove_boilerplate_lines(
       and the per-doc line totals computed map-only from the split
       array. Output-identical either way (pinned by tests); docs whose
       every line is boilerplate keep their row (n_kept 0, cleaned '').
-    - callers must feed non-null ``page_col`` (ADVICE r11: split(null)
+    - callers must feed a non-null ``page`` (ADVICE r11: split(null)
       drops the doc row entirely; both in-repo callers satisfy this).
     - one final groupBy(id) rebuilds the page with array_sort over
       (pos, line) structs, folding n_lines (count of all line rows),
@@ -1874,7 +1802,7 @@ def remove_boilerplate_lines(
       an empty array), so the separate per-doc-totals branch and its
       left join are unnecessary.
 
-    Returns (id, n_lines, n_kept, cleaned).
+    Returns (doc_id, n_lines, n_kept, cleaned).
     """
     from pyspark.sql import Window
 
@@ -1884,10 +1812,10 @@ def remove_boilerplate_lines(
     # explode + md5 otherwise runs as one task on single-row-group
     # corpora (the per-doc totals below re-derive from the same spread
     # relation, so the skew-safe twin's base branch shares it)
-    pages = spread_input(pages, id_col)
+    pages = spread_input(pages, "doc_id")
     lines = pages.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(page_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("page"), "\n")).alias("pos", "line"),
     ).withColumn("line_hash", F.md5(F.lower(F.trim(F.col("line")))))
 
     if _skew_safe_engaged(pages, skew_safe):
@@ -1898,16 +1826,16 @@ def remove_boilerplate_lines(
         # those deduped rows combines partial counts map-side, so no
         # task ever holds one key's full row set
         boiler = (
-            lines.groupBy("line_hash", id_col)
+            lines.groupBy("line_hash", "doc_id")
             .agg(F.lit(1).alias("_one"))
             .groupBy("line_hash")
             .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") >= F.lit(max_df))
+            .where(F.col("_df") >= F.lit(BOILERPLATE_MIN_DF))
             .select("line_hash")
         )
         salted = lines.withColumn(
             "_salt",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(SKEW_SALT)).cast("int"),
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(SKEW_SALT)).cast("int"),
         )
         boiler_exp = boiler.select(
             "line_hash",
@@ -1922,12 +1850,12 @@ def remove_boilerplate_lines(
         # yields an empty array, so every doc keeps its row even when
         # every line was boilerplate)
         base = pages.select(
-            F.col(id_col),
-            F.size(F.split(F.col(page_col), "\n")).cast("bigint").alias(
+            F.col("doc_id"),
+            F.size(F.split(F.col("page"), "\n")).cast("bigint").alias(
                 "n_lines"
             ),
         )
-        surv = kept_rows.groupBy(id_col).agg(
+        surv = kept_rows.groupBy("doc_id").agg(
             F.count("*").cast("bigint").alias("_n_kept"),
             F.array_join(
                 F.transform(
@@ -1937,8 +1865,8 @@ def remove_boilerplate_lines(
                 "\n",
             ).alias("_cleaned"),
         )
-        return base.join(surv, id_col, "left").select(
-            F.col(id_col),
+        return base.join(surv, "doc_id", "left").select(
+            F.col("doc_id"),
             "n_lines",
             F.coalesce(F.col("_n_kept"), F.lit(0)).cast("bigint").alias(
                 "n_kept"
@@ -1946,18 +1874,18 @@ def remove_boilerplate_lines(
             F.coalesce(F.col("_cleaned"), F.lit("")).alias("cleaned"),
         )
 
-    wo = Window.partitionBy("line_hash").orderBy(id_col)
+    wo = Window.partitionBy("line_hash").orderBy("doc_id")
     wp = Window.partitionBy("line_hash")
     flagged = lines.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "pos",
         "line",
         (
-            F.max(F.dense_rank().over(wo)).over(wp) >= F.lit(max_df)
+            F.max(F.dense_rank().over(wo)).over(wp) >= F.lit(BOILERPLATE_MIN_DF)
         ).alias("_boiler"),
     )
     keep = ~F.col("_boiler")
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_lines"),
         F.count(F.when(keep, 1)).cast("bigint").alias("n_kept"),
         F.array_join(

@@ -42,9 +42,7 @@ disk store: a COLD process (the driver's bench and correctness runs
 included) skips the probe job entirely. Plans with no file leaves
 (in-memory test frames) key on the plan hash alone and stay
 process-local. Even a stale hit can only pick the other
-output-identical plan, which is why parameterizations that break the
-plan equivalence (similarity's max_df) must force the direct plan
-BEFORE probing.
+output-identical plan.
 """
 
 from __future__ import annotations
@@ -103,7 +101,6 @@ def _memo_key(member: DataFrame) -> tuple[tuple | None, bool]:
 
 def dup_density_decision(
     docs: DataFrame | None = None,
-    text_col: str = "text",
     member: DataFrame | None = None,
     sig_col: str = "_tsig",
 ) -> bool:
@@ -121,7 +118,7 @@ def dup_density_decision(
     same corpus distinct."""
     if member is None:
         member = docs.select(
-            F.md5(F.col(text_col).cast("binary")).alias("_tsig")
+            F.md5(F.col("text").cast("binary")).alias("_tsig")
         )
         sig_col = "_tsig"
     key, file_backed = _memo_key(member)

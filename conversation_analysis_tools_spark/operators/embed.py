@@ -22,8 +22,6 @@ from conversation_analysis_tools_spark.operators import tfidf as T
 def tfidf_embeddings(
     docs: DataFrame,
     vocab_size: int = 5000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     dtype: str = "float",
 ) -> DataFrame:
     """(id, text) -> (id, embedding array<float>) dense TF-IDF vectors.
@@ -33,9 +31,9 @@ def tfidf_embeddings(
     determinism) is collected once and inlined -- it is bounded by
     vocab_size, never by corpus size.
     """
-    tokens = T.explode_tokens(docs, id_col, text_col)
+    tokens = T.explode_tokens(docs)
     n_docs = docs.count()
-    counts = T.term_counts(tokens, id_col)
+    counts = T.term_counts(tokens)
     df_tbl = counts.groupBy("term").agg(F.count("*").alias("df"))
     vocab = [
         r["term"]
@@ -43,12 +41,12 @@ def tfidf_embeddings(
     ]
     vocab = sorted(vocab)
 
-    tf = T.tf_max(counts, id_col)
-    idf_df = T.idf_from_counts(counts, n_docs, id_col)
-    w = T.tfidf(tf, idf_df, id_col).where(F.col("term").isin(vocab))
+    tf = T.tf_max(counts)
+    idf_df = T.idf_from_counts(counts, n_docs)
+    w = T.tfidf(tf, idf_df).where(F.col("term").isin(vocab))
 
     ent = F.map_from_entries(F.collect_list(F.struct("term", "tfidf")))
-    per_doc = w.groupBy(id_col).agg(ent.alias("m"))
+    per_doc = w.groupBy("doc_id").agg(ent.alias("m"))
     # float32 mimics the reference's npz cache; dtype="double" keeps
     # full precision for oracle-checked serializations
     vec = F.array(
@@ -58,7 +56,7 @@ def tfidf_embeddings(
         ]
     )
     # docs with zero tokens keep a zero vector (left join against corpus)
-    out = docs.select(id_col).join(per_doc, id_col, "left").select(
-        F.col(id_col), vec.alias("embedding")
+    out = docs.select("doc_id").join(per_doc, "doc_id", "left").select(
+        F.col("doc_id"), vec.alias("embedding")
     )
     return out

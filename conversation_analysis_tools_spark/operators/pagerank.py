@@ -20,24 +20,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+MAX_ITER = 20
+#: L1 rank change below which the iteration stops early.
+TOL = 1e-6
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float = 1e-6,
-    directed: bool = False,
-) -> DataFrame:
-    """Ranks for every node of ``edges``; undirected graphs (the
-    near-dup similarity graph) are symmetrized first. Returns
-    (id, rank) with ranks summing to ~1. Isolated nodes never appear
-    (edge-list input); dangling mass is redistributed uniformly.
+
+def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Ranks for every node of ``edges``, read as an undirected graph
+    (the near-dup similarity graph): edges are symmetrized first.
+    Returns (id, rank) with ranks summing to ~1. Isolated nodes never
+    appear (edge-list input).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not directed:
-        e = e.union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
+    e = e.union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
     e = e.distinct()
 
     nodes = (
@@ -54,33 +50,27 @@ def pagerank(
     e_deg = e.join(deg, "src").localCheckpoint(eager=True)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         contribs = (
             e_deg.join(ranks, e_deg["src"] == ranks["id"])
             .select(F.col("dst").alias("id"), (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("contrib"))
         )
-        # every node has out-degree >= 1 after symmetrization, so the
-        # dangling term is zero for undirected input; directed graphs
-        # redistribute the mass absorbed by sink nodes uniformly
+        # every node has out-degree >= 1 after symmetrization, so no
+        # mass dangles
         new_ranks = (
             nodes.join(contribs, "id", "left")
             .select(
                 "id",
                 (
                     F.lit(base)
-                    + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
+                    + F.lit(DAMPING) * F.coalesce("contrib", F.lit(0.0))
                 ).alias("rank"),
             )
         )
-        if directed:
-            mass = new_ranks.agg(F.sum("rank")).first()[0]
-            new_ranks = new_ranks.select(
-                "id", (F.col("rank") + F.lit((1.0 - mass) / n)).alias("rank")
-            )
         new_ranks = new_ranks.localCheckpoint(eager=True)
         delta = (
             new_ranks.alias("n")
@@ -89,6 +79,6 @@ def pagerank(
             .first()["d"]
         )
         ranks = new_ranks
-        if delta is not None and delta < tol:
+        if delta is not None and delta < TOL:
             break
     return ranks

@@ -20,27 +20,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_WEIGHTS = {"relevance": 0.4, "length": 0.2, "keyword_match": 0.3, "recency": 0.1}
-DEFAULT_LEVELS = {"critical": 0.85, "high": 0.65, "medium": 0.45, "low": 0.25}
-DEFAULT_LENGTHS = {"min_words": 50, "substantial": 200, "comprehensive": 500}
+LEVELS = {"critical": 0.85, "high": 0.65, "medium": 0.45, "low": 0.25}
+LENGTHS = {"min_words": 50, "substantial": 200, "comprehensive": 500}
+#: The reference's default recency score; no caller supplies one.
+RECENCY = 0.5
 
 
-def length_score_expr(text_col: str = "text", thresholds: dict | None = None) -> Column:
+def length_score_expr() -> Column:
     from conversation_analysis_tools_spark.functions.text import ws_trim_expr
 
-    th = thresholds or DEFAULT_LENGTHS
-    wc = F.size(F.split(ws_trim_expr(F.col(text_col)), r"\s+"))
+    wc = F.size(F.split(ws_trim_expr(F.col("text")), r"\s+"))
     return (
-        F.when(wc < th["min_words"], 0.1)
-        .when(wc < th["substantial"], 0.5)
-        .when(wc < th["comprehensive"], 0.8)
+        F.when(wc < LENGTHS["min_words"], 0.1)
+        .when(wc < LENGTHS["substantial"], 0.5)
+        .when(wc < LENGTHS["comprehensive"], 0.8)
         .otherwise(1.0)
     )
 
 
-def keyword_score_expr(
-    critical: list[str], high: list[str], text_col: str = "text"
-) -> Column:
-    t = F.lower(F.col(text_col))
+def keyword_score_expr(critical: list[str], high: list[str]) -> Column:
+    t = F.lower(F.col("text"))
     any_crit = None
     for kw in critical:
         c = t.contains(kw.lower())
@@ -61,7 +60,6 @@ def combined_score_expr(
     relevance: Column,
     length: Column,
     keyword: Column,
-    recency: Column | float = 0.5,
     weights: dict[str, float] | None = None,
 ) -> Column:
     w = dict(weights or DEFAULT_WEIGHTS)
@@ -71,22 +69,20 @@ def combined_score_expr(
     # ulp and make threshold comparisons engine-dependent.
     if abs(total - 1.0) > 1e-12:
         w = {k: v / total for k, v in w.items()}
-    rec = F.lit(recency) if isinstance(recency, float) else recency
     return (
         F.lit(w["relevance"]) * relevance
         + F.lit(w["length"]) * length
         + F.lit(w["keyword_match"]) * keyword
-        + F.lit(w["recency"]) * rec
+        + F.lit(w["recency"]) * F.lit(RECENCY)
     )
 
 
-def level_expr(score: Column, thresholds: dict | None = None) -> Column:
-    th = thresholds or DEFAULT_LEVELS
+def level_expr(score: Column) -> Column:
     return (
-        F.when(score >= th["critical"], "CRITICAL")
-        .when(score >= th["high"], "HIGH")
-        .when(score >= th["medium"], "MEDIUM")
-        .when(score >= th["low"], "LOW")
+        F.when(score >= LEVELS["critical"], "CRITICAL")
+        .when(score >= LEVELS["high"], "HIGH")
+        .when(score >= LEVELS["medium"], "MEDIUM")
+        .when(score >= LEVELS["low"], "LOW")
         .otherwise("NONE")
     )
 
@@ -96,13 +92,12 @@ def classify(
     relevance_col: str,
     critical: list[str],
     high: list[str],
-    text_col: str = "text",
     weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """N25 batch classify: adds length/keyword/priority score + level."""
-    length = length_score_expr(text_col)
-    keyword = keyword_score_expr(critical, high, text_col)
-    combined = combined_score_expr(F.col(relevance_col), length, keyword, 0.5, weights)
+    length = length_score_expr()
+    keyword = keyword_score_expr(critical, high)
+    combined = combined_score_expr(F.col(relevance_col), length, keyword, weights)
     return (
         docs.withColumn("length_score", length)
         .withColumn("keyword_score", keyword)

@@ -27,8 +27,6 @@ DEFAULT_WEIGHTS = {"density": 0.3, "coverage": 0.4, "tfidf": 0.3}
 def keyword_tfidf_scores(
     docs: DataFrame,
     keywords: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     counts: DataFrame | None = None,
 ) -> DataFrame:
     """Per-doc tfidf keyword score: sum of matched keyword tfidf / |kws|.
@@ -46,10 +44,10 @@ def keyword_tfidf_scores(
         # in ONE plan -- recomputing the cheap tokenize+count beats
         # persist materialization here (callers with genuinely shared
         # multi-job consumption pass a persisted ``counts``)
-        counts = T.term_counts(T.explode_tokens(docs, id_col, text_col), id_col)
-    tf = T.tf_max(counts, id_col)
-    idf_df = T.idf_from_counts(counts, n_docs, id_col)
-    tfidf_df = T.tfidf(tf, idf_df, id_col)
+        counts = T.term_counts(T.explode_tokens(docs))
+    tf = T.tf_max(counts)
+    idf_df = T.idf_from_counts(counts, n_docs)
+    tfidf_df = T.tfidf(tf, idf_df)
     kw = [k.lower() for k in keywords]
     # Keyword restriction as a broadcast join against a literal
     # relation, NOT ``term.isin(kw)``: term is a grouping key of every
@@ -71,7 +69,7 @@ def keyword_tfidf_scores(
     per_doc = (
         tfidf_df.join(F.broadcast(kw_df), "term")
         .where(F.col("tfidf") > 0)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg((F.sum("tfidf") / F.lit(len(keywords))).alias("tfidf_score"))
     )
     return per_doc
@@ -81,8 +79,6 @@ def score_documents(
     docs: DataFrame,
     keywords: list[str],
     weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     counts: DataFrame | None = None,
 ) -> DataFrame:
     """N9/N10: combined relevance score per document.
@@ -118,10 +114,10 @@ def score_documents(
         w = {k: v / total for k, v in w.items()}
 
     if counts is None:
-        counts = T.term_counts(T.explode_tokens(docs, id_col, text_col), id_col)
+        counts = T.term_counts(T.explode_tokens(docs))
     kw = [k.lower() for k in keywords]
     is_kw = F.col("term").isin(kw)
-    dens = counts.groupBy(id_col).agg(
+    dens = counts.groupBy("doc_id").agg(
         (
             F.sum(F.when(is_kw, F.col("cnt")).otherwise(0)) / F.sum("cnt")
         ).alias("density"),
@@ -129,10 +125,10 @@ def score_documents(
             "coverage"
         ),
     )
-    kw_tfidf = keyword_tfidf_scores(docs, keywords, id_col, text_col, counts)
+    kw_tfidf = keyword_tfidf_scores(docs, keywords, counts)
     return (
-        docs.join(dens, id_col, "left")
-        .join(kw_tfidf, id_col, "left")
+        docs.join(dens, "doc_id", "left")
+        .join(kw_tfidf, "doc_id", "left")
         .withColumn("density", F.coalesce(F.col("density"), F.lit(0.0)))
         .withColumn("coverage", F.coalesce(F.col("coverage"), F.lit(0.0)))
         .withColumn("tfidf_score", F.coalesce(F.col("tfidf_score"), F.lit(0.0)))

@@ -47,11 +47,11 @@ def merge_rollup(old: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def finalize_rollup(state: DataFrame, decimals: int = 4) -> DataFrame:
+def finalize_rollup(state: DataFrame) -> DataFrame:
     """Read-time projection of the state: descale the integer-cent
     sum, derive the average from (sum, count) instead of storing it."""
     return state.select(
         *[c for c in state.columns if c not in ("total",)],
-        F.round(F.col("total") / 100.0, decimals).alias("total"),
+        F.round(F.col("total") / 100.0, 4).alias("total"),
         avg4(F.col("total") * 100, F.col("n")).alias("avg_value"),
     )

@@ -8,11 +8,10 @@ an inverted-index self-join on ``term`` is *exact* (SURVEY §4 item 1):
 only pairs that share at least one term are ever materialized.
 
 Scale path: at 100 TB the frequent-term blowup (a term shared by k
-docs contributes k^2 candidate rows) is the wall; ``max_df`` drops
-terms present in more than a fraction of docs (stopword-like terms
-contribute almost nothing to cosine ordering but dominate the join),
-and the MinHash-LSH variant in dedup.py replaces the exact join
-entirely.
+docs contributes k^2 candidate rows) is the wall; ``duplicate_pairs``
+probes that volume and routes past a budget to the banded cosine-LSH
+:func:`tuned_simhash_pairs`, and the MinHash-LSH variant in dedup.py
+replaces the exact join entirely.
 """
 
 from __future__ import annotations
@@ -31,19 +30,14 @@ from conversation_analysis_tools_spark.operators.density import (
 )
 
 
-def tf_vectors(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    counts: DataFrame | None = None,
-) -> DataFrame:
+def tf_vectors(docs: DataFrame, counts: DataFrame | None = None) -> DataFrame:
     """(id, term, tf) sum-normalized -- the duplicate-detector vector.
 
     Pass a precomputed (persisted) ``counts`` table to share the
     tokenize+count shuffle with other branches of a pipeline."""
     if counts is None:
-        counts = T.term_counts(T.explode_tokens(docs, id_col, text_col), id_col)
-    return T.tf_sum(counts, id_col)
+        counts = T.term_counts(T.explode_tokens(docs))
+    return T.tf_sum(counts)
 
 
 #: Threshold comparisons subtract this epsilon on BOTH the engine and
@@ -74,8 +68,6 @@ DENSE_BLOCK_ROWS = 2_000
 
 def pairwise_cosine(
     tf: DataFrame,
-    id_col: str = "doc_id",
-    max_df: int | None = None,
     strategy: str = "auto",
     threshold: float = 0.0,
 ) -> DataFrame:
@@ -93,18 +85,7 @@ def pairwise_cosine(
       SMALL_VOCAB_LIMIT terms and the corpus at most DENSE_MAX_N
       docs, else the inverted index. A forced ``dense`` takes the same
       path without either fence.
-
-    ``max_df`` (drop terms appearing in more than max_df docs) is
-    applied HERE, before the strategy probe, so every physical
-    strategy sees the same filtered corpus -- previously only the
-    inverted plan honored it, and the auto probe could silently route
-    a max_df request onto the unfiltered dense plan.
     """
-    if max_df is not None:
-        doc_freq = tf.groupBy("term").agg(F.count("*").alias("df"))
-        tf = tf.join(
-            F.broadcast(doc_freq.where(F.col("df") <= max_df)), "term", "left_semi"
-        )
     requested, n_docs, per_doc = strategy, None, None
     terms = None  # distinct terms the probe saw, capped at the limit + 1
     if strategy in ("auto", "dense"):
@@ -133,7 +114,7 @@ def pairwise_cosine(
             # approx_count_distinct job into a count the dense path
             # paid regardless.
             vocab = sorted(r["term"] for r in probe)
-            per_doc = track(_dense_doc_vectors(tf, id_col, vocab))
+            per_doc = track(_dense_doc_vectors(tf, "doc_id", vocab))
             n_docs = per_doc.count()
             if forced or n_docs <= DENSE_MAX_N:
                 strategy = "dense"
@@ -144,7 +125,7 @@ def pairwise_cosine(
            n_docs=n_docs)
     if per_doc is not None:
         return grid_blocked_pairs(per_doc, threshold, n=n_docs)
-    return _pairwise_cosine_inverted(tf, id_col)
+    return _pairwise_cosine_inverted(tf)
 
 
 def _dense_doc_vectors(
@@ -168,7 +149,7 @@ def _dense_doc_vectors(
     bit-identical."""
     if not vocab:
         # empty vocabulary: no slots, so no vectors whatever tf holds
-        # (e.g. max_df dropped every term); same (_id, v) schema
+        # (e.g. a corpus with no terms); same (_id, v) schema
         return tf.select(
             F.col(id_col).alias("_id"),
             F.array(F.lit(0.0)).alias("v"),
@@ -309,25 +290,20 @@ def unit_vector(vec_col: str) -> Column:
     return F.transform(F.col(vec_col), lambda x: x / safe)
 
 
-def grouped_grid_pairs(
-    vecs: DataFrame,
-    group_col: str,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """WITHIN-GROUP all-pairs cosine >= threshold over a raw
-    dense-vector column: :func:`grid_blocked_pairs` gridded per
-    ``group_col``. Returns (group_col, id1, id2, sim) with id1 < id2."""
+def grouped_grid_pairs(vecs: DataFrame, group_col: str, threshold: float) -> DataFrame:
+    """WITHIN-GROUP all-pairs cosine >= threshold over the raw
+    ``embedding`` column, ids from ``vec_id``: :func:`grid_blocked_pairs`
+    gridded per ``group_col``. Returns (group_col, id1, id2, sim) with
+    id1 < id2."""
     # null groups/vectors produce no pairs by contract (a null key
     # matches nothing in an equi-join anyway; dropping them here also
     # keeps np.stack off ragged input)
     per = vecs.where(
-        F.col(group_col).isNotNull() & F.col(vec_col).isNotNull()
+        F.col(group_col).isNotNull() & F.col("embedding").isNotNull()
     ).select(
         F.col(group_col),
-        F.col(id_col).alias("_id"),
-        unit_vector(vec_col).alias("v"),
+        F.col("vec_id").alias("_id"),
+        unit_vector("embedding").alias("v"),
     )
     return grid_blocked_pairs(per, threshold, group_col=group_col)
 
@@ -346,7 +322,7 @@ def _l2_normalize(tf: DataFrame, id_col: str) -> DataFrame:
     return tf.withColumn("tf", F.col("tf") / safe)
 
 
-def _pairwise_cosine_inverted(tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _pairwise_cosine_inverted(tf: DataFrame) -> DataFrame:
     """Inverted-index plan: self-join on term -> groupBy pair.
 
     ``tf`` is (id, term, tf). Vectors are L2-normalized FIRST (window
@@ -356,15 +332,14 @@ def _pairwise_cosine_inverted(tf: DataFrame, id_col: str = "doc_id") -> DataFram
     (pipeline/duplicate_detector.py:74-107) and removes two per-doc
     norm joins (previously O(n_docs) broadcasts -- an at-scale
     killer). Only pairs sharing a term appear (exact w.r.t. any
-    threshold > 0). ``max_df`` is applied by :func:`pairwise_cosine`
-    before dispatch (strategy-independent).
+    threshold > 0).
     """
-    unit = _l2_normalize(tf, id_col)
+    unit = _l2_normalize(tf, "doc_id")
     a = unit.select(
-        F.col(id_col).alias("id1"), F.col("term"), F.col("tf").alias("tf1")
+        F.col("doc_id").alias("id1"), F.col("term"), F.col("tf").alias("tf1")
     )
     b = unit.select(
-        F.col(id_col).alias("id2"), F.col("term"), F.col("tf").alias("tf2")
+        F.col("doc_id").alias("id2"), F.col("term"), F.col("tf").alias("tf2")
     )
     return (
         a.join(b, "term")
@@ -377,9 +352,6 @@ def _pairwise_cosine_inverted(tf: DataFrame, id_col: str = "doc_id") -> DataFram
 def duplicate_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int | None = None,
     strategy: str = "auto",
     counts: DataFrame | None = None,
     collapse: str = "auto",
@@ -418,12 +390,6 @@ def duplicate_pairs(
     two OUTPUT-IDENTICAL plans, never change results. Either path
     yields the identical pair set.
 
-    ``max_df`` forces the direct plan: the collapse would compute
-    per-term document frequency over the collapsed representative
-    corpus (df drops by cluster_size-1 per dup cluster), surviving
-    terms the full-corpus filter drops, and its within-group selfdot
-    would ignore the filter entirely -- not output-identical.
-
     ``route`` (round 9, the dedup-family saturation-router discipline
     at tf-cosine grain): 'auto' (DEFAULT since round 10 -- the n-gram
     Jaccard twin's discipline) probes the volume of the exact plan
@@ -447,16 +413,13 @@ def duplicate_pairs(
     the engine default must not be the exact plan. The route is
     recorded via ``decisions.record`` (gate ``duplicate_pairs``, with
     ``requested`` the caller's own request), and 'auto' logs a
-    WARNING when it swaps in the routed path. ``max_df`` pins the
-    exact plan (the routed path has no df filter).
+    WARNING when it swaps in the routed path.
     """
     import logging
 
     if route not in ("exact", "auto", "simhash"):
         raise ValueError(f"route must be exact|auto|simhash, got {route!r}")
     requested = route
-    if max_df is not None:
-        route = "exact"
 
     def _cos(tf_df: DataFrame) -> DataFrame:
         est = None
@@ -489,7 +452,7 @@ def duplicate_pairs(
                 tf_df.groupBy("term")
                 .agg(
                     F.count(F.lit(1)).alias("df"),
-                    F.hll_sketch_agg(id_col).alias("_sk"),
+                    F.hll_sketch_agg("doc_id").alias("_sk"),
                 )
                 .agg(
                     F.sum(
@@ -554,45 +517,44 @@ def duplicate_pairs(
                n_docs=n_docs if dense_ok is not None else None)
         if rt == "simhash":
             return tuned_simhash_pairs(
-                tf_df, threshold, id_col,
+                tf_df, threshold,
                 n_docs=n_docs if requested == "auto" else None,
                 cand_budget=cand_budget,
             )
-        sims = pairwise_cosine(tf_df, id_col, max_df, strategy, threshold)
+        sims = pairwise_cosine(tf_df, strategy, threshold)
         return sims.where(F.col("sim") >= threshold - THRESHOLD_EPS)
     member = docs.select(
-        F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_fp")
+        F.col("doc_id"), F.md5(F.col("text").cast("binary")).alias("_fp")
     )
     engaged = collapse_engaged(
         collapse,
-        lambda: max_df is None
-        and dup_density_decision(member=member, sig_col="_fp"),
+        lambda: dup_density_decision(member=member, sig_col="_fp"),
     )
-    if max_df is not None or not engaged:
-        return _cos(tf_vectors(docs, id_col, text_col, counts))
+    if not engaged:
+        return _cos(tf_vectors(docs, counts))
     member = track(member)  # collapse path: 3 consumers below
-    reps = track(group_reps(member, id_col))
-    rep_ids = reps.select(id_col)
-    docs_r = docs.join(rep_ids, id_col, "left_semi")
+    reps = track(group_reps(member, "doc_id"))
+    rep_ids = reps.select("doc_id")
+    docs_r = docs.join(rep_ids, "doc_id", "left_semi")
     counts_r = (
-        counts.join(rep_ids, id_col, "left_semi") if counts is not None else None
+        counts.join(rep_ids, "doc_id", "left_semi") if counts is not None else None
     )
-    tf = track(tf_vectors(docs_r, id_col, text_col, counts_r))
+    tf = track(tf_vectors(docs_r, counts_r))
     # within-group pairs score their rep's self-cosine (the inner join
     # on selfdot drops term-less docs, matching the direct plan where
     # they never enter the index); cross-group pairs inherit the rep
     # pair's cosine
     selfdot = (
-        _l2_normalize(tf, id_col)
-        .groupBy(id_col)
+        _l2_normalize(tf, "doc_id")
+        .groupBy("doc_id")
         .agg(F.sum(F.col("tf") * F.col("tf")).alias("sim"))
     )
     within = (
-        reps.join(selfdot, id_col)
+        reps.join(selfdot, "doc_id")
         .where(F.col("sim") >= threshold - THRESHOLD_EPS)
         .select("_fp", "sim")
     )
-    return expand_rep_pairs(_cos(tf), member, id_col, "sim", within)
+    return expand_rep_pairs(_cos(tf), member, "doc_id", "sim", within)
 
 
 #: Band-length ladder for the adaptive banding solve, best-first.
@@ -617,22 +579,27 @@ SIMHASH_R_LADDER = (20, 16, 14, 12)
 #: actually afford.
 SIMHASH_CAND_BUDGET = 50_000_000
 
+#: Recall the banded solve targets at cosine = threshold.
+SIMHASH_RECALL_TARGET = 0.98
+#: Band-count clamp of the solve.
+SIMHASH_B_MAX = 256
+#: Bucket size past which candidate pairs star-degrade
+#: (:func:`dedup.capped_bucket_pairs`).
+SIMHASH_MAX_BUCKET = 20
+
 
 def solve_simhash_bands(
     threshold: float,
-    recall_target: float = 0.98,
-    r_ladder: tuple = SIMHASH_R_LADDER,
-    b_max: int = 256,
     n_docs: int | None = None,
     cand_budget: int = SIMHASH_CAND_BUDGET,
 ) -> tuple[int, int, float]:
     """(r, b, est_recall) for the banded cosine-LSH solve: the FIRST
-    ladder step whose solved band count fits ``b_max`` (longest bands
+    ladder step whose solved band count fits ``SIMHASH_B_MAX`` (longest bands
     = lowest random-collision floor wins; t = 0.9 solves at the
     r9-certified (20, 85), so high-threshold plans are unchanged by
     the round-10 ladder). If every step clamps, the last step runs at
-    b_max and ``est_recall`` = 1-(1-p^r)^b reports the degraded
-    expectation -- callers WARN on est_recall < recall_target.
+    SIMHASH_B_MAX and ``est_recall`` = 1-(1-p^r)^b reports the degraded
+    expectation -- callers WARN on est_recall < SIMHASH_RECALL_TARGET.
 
     With ``n_docs`` the solve is additionally VOLUME-aware: the
     random-collision floor costs ~b * 2^-r * n^2/2 exact-verify
@@ -656,20 +623,20 @@ def solve_simhash_bands(
         return max(
             4,
             min(
-                b_max,
+                SIMHASH_B_MAX,
                 math.ceil(
-                    math.log(1.0 - recall_target)
+                    math.log(1.0 - SIMHASH_RECALL_TARGET)
                     / math.log(1.0 - p**cand_r)
                 ),
             ),
         )
 
-    r, b = r_ladder[-1], solve_at(r_ladder[-1])
-    for cand_r in r_ladder:
+    r, b = SIMHASH_R_LADDER[-1], solve_at(SIMHASH_R_LADDER[-1])
+    for cand_r in SIMHASH_R_LADDER:
         cand_b = math.ceil(
-            math.log(1.0 - recall_target) / math.log(1.0 - p**cand_r)
+            math.log(1.0 - SIMHASH_RECALL_TARGET) / math.log(1.0 - p**cand_r)
         )
-        if cand_b <= b_max:
+        if cand_b <= SIMHASH_B_MAX:
             r, b = cand_r, max(4, cand_b)
             break
     if n_docs is not None and n_docs > 1:
@@ -679,13 +646,13 @@ def solve_simhash_bands(
         if floor_cands(r, b) > cand_budget:
             # longest bands first: smallest floor; accept the first
             # that fits, else the smallest-floor step regardless
-            for cand_r in sorted(r_ladder, reverse=True):
+            for cand_r in sorted(SIMHASH_R_LADDER, reverse=True):
                 cand_b = solve_at(cand_r)
                 if floor_cands(cand_r, cand_b) <= cand_budget:
                     r, b = cand_r, cand_b
                     break
             else:
-                r = max(r_ladder)
+                r = max(SIMHASH_R_LADDER)
                 b = solve_at(r)
     est = 1.0 - (1.0 - p**r) ** b
     return r, b, est
@@ -694,10 +661,6 @@ def solve_simhash_bands(
 def tuned_simhash_pairs(
     tf: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
-    recall_target: float = 0.98,
-    r: int | None = None,
-    max_bucket: int = 20,
     n_docs: int | None = None,
     cand_budget: int | None = None,
 ) -> DataFrame:
@@ -710,10 +673,11 @@ def tuned_simhash_pairs(
     arccos(t)/pi, so a band of ``r`` hyperplane signs collides w.p.
     p^r and b bands give recall 1-(1-p^r)^b; solving
 
-        b = ceil(ln(1 - recall_target) / ln(1 - p^r)),  clamped [4, 256]
+        b = ceil(ln(1 - SIMHASH_RECALL_TARGET) / ln(1 - p^r)),
+        clamped to [4, SIMHASH_B_MAX]
 
     Band length adapts to the threshold (round 10, closing the r9
-    t<=0.8 clamp gap): ``r=None`` walks :data:`SIMHASH_R_LADDER`
+    t<=0.8 clamp gap): the solve walks :data:`SIMHASH_R_LADDER`
     best-first and keeps the longest band length whose solve fits 256
     bands -- t = 0.9 stays at the r9-certified (r=20, b=85); t = 0.8,
     where r=20 clamped at 256 bands and measured recall sagged to
@@ -723,9 +687,7 @@ def tuned_simhash_pairs(
     ~0.6) does the last step run at 256 bands, and then the degraded
     expected recall is WARN-logged. The solve is recorded via
     ``decisions.record`` (gate ``tuned_simhash_pairs``: choice ``r``,
-    with ``b`` and ``est_recall``). An explicit ``r`` pins
-    the band length (the pre-r10 behavior, clamp included). The band
-    length sets the random-pair collision floor: near-orthogonal
+    with ``b`` and ``est_recall``). The band length sets the random-pair collision floor: near-orthogonal
     pairs (p ~ 0.5) collide w.p. b * 2^-r, so candidates stay
     ~linear in n even on corpora where every pair shares a term and
     the inverted index is ~n^2 by construction.
@@ -740,7 +702,7 @@ def tuned_simhash_pairs(
     vector, so the signs equal the count-vector simhash's.
 
     Candidates come from :func:`dedup.capped_bucket_pairs` (full pairs
-    <= max_bucket, star degrade above -- linear volume). Every
+    <= SIMHASH_MAX_BUCKET, star degrade above -- linear volume). Every
     candidate is verified EXACTLY: per-doc term->tf maps join by pair
     and an array_intersect/aggregate fold computes the true cosine
     JVM-side, so emitted pairs carry exact sims and false positives
@@ -760,33 +722,25 @@ def tuned_simhash_pairs(
     t = float(threshold)
     if not 0.0 < t < 1.0:
         raise ValueError(f"threshold must be in (0, 1), got {threshold!r}")
-    if r is None:
-        r, b, est_recall = solve_simhash_bands(
-            t, recall_target, n_docs=n_docs,
-            cand_budget=(
-                SIMHASH_CAND_BUDGET if cand_budget is None else cand_budget
-            ),
-        )
-    else:
-        p = 1.0 - math.acos(t) / math.pi
-        b = min(
-            256,
-            max(4, math.ceil(math.log(1.0 - recall_target) / math.log(1.0 - p**r))),
-        )
-        est_recall = 1.0 - (1.0 - p**r) ** b
+    r, b, est_recall = solve_simhash_bands(
+        t, n_docs=n_docs,
+        cand_budget=(
+            SIMHASH_CAND_BUDGET if cand_budget is None else cand_budget
+        ),
+    )
     record("tuned_simhash_pairs", r, b=b, est_recall=est_recall,
            n_docs=n_docs, cand_budget=cand_budget)
-    if est_recall < recall_target:
+    if est_recall < SIMHASH_RECALL_TARGET:
         logging.getLogger(__name__).warning(
             "tuned_simhash_pairs: the 256-band clamp binds at threshold "
             "%.3g even at the shortest band length (r=%d): expected recall "
             "~%.3f < target %.3f. The exact route is the contract in this "
             "regime (pass route='exact').",
-            t, r, est_recall, recall_target,
+            t, r, est_recall, SIMHASH_RECALL_TARGET,
         )
     k = r * b
     salts = math.ceil(k / 60)
-    id_type = tf.schema[id_col].dataType.simpleString()
+    id_type = tf.schema["doc_id"].dataType.simpleString()
     weights = (1 << np.arange(r, dtype=np.int64))
 
     memo: dict = {}  # per-task term-bits cache (closure survives the pickle)
@@ -817,26 +771,26 @@ def tuned_simhash_pairs(
         bits = (tfv @ M > 0).astype(np.int64).reshape(b, r)
         return pd.DataFrame(
             {
-                id_col: np.repeat(pdf[id_col].iloc[0], b),
+                "doc_id": np.repeat(pdf["doc_id"].iloc[0], b),
                 "band": np.arange(b, dtype=np.int32),
                 "key": bits @ weights,
             }
         )
 
-    bx = tf.groupBy(id_col).applyInPandas(
-        sign_one, schema=f"{id_col} {id_type}, band int, key long"
+    bx = tf.groupBy("doc_id").applyInPandas(
+        sign_one, schema=f"doc_id {id_type}, band int, key long"
     )
-    cands = capped_bucket_pairs(bx, id_col, max_bucket)
+    cands = capped_bucket_pairs(bx, "doc_id", SIMHASH_MAX_BUCKET)
     # exact verify: per-doc term->unit-tf maps, one fold over the
     # shared-term intersection per candidate -- JVM-side, no Python
-    unit = _l2_normalize(tf, id_col)
-    vec = unit.groupBy(id_col).agg(
+    unit = _l2_normalize(tf, "doc_id")
+    vec = unit.groupBy("doc_id").agg(
         F.map_from_arrays(
             F.collect_list("term"), F.collect_list("tf")
         ).alias("m")
     )
-    v1 = vec.select(F.col(id_col).alias("id1"), F.col("m").alias("m1"))
-    v2 = vec.select(F.col(id_col).alias("id2"), F.col("m").alias("m2"))
+    v1 = vec.select(F.col("doc_id").alias("id1"), F.col("m").alias("m1"))
+    v2 = vec.select(F.col("doc_id").alias("id2"), F.col("m").alias("m2"))
     dot = F.aggregate(
         F.array_intersect(F.map_keys("m1"), F.map_keys("m2")),
         F.lit(0.0),
@@ -852,13 +806,7 @@ def tuned_simhash_pairs(
     )
 
 
-def near_duplicates_of(
-    docs: DataFrame,
-    target_id,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def near_duplicates_of(docs: DataFrame, target_id, threshold: float = 0.5) -> DataFrame:
     """N18: one-vs-all cosine for a single target document.
 
     The target's TF vector is a handful of rows -> broadcast; the scan
@@ -867,15 +815,15 @@ def near_duplicates_of(
     over id -- no O(n_docs) norms broadcast), so the grouped dot IS
     the cosine.
     """
-    unit = _l2_normalize(tf_vectors(docs, id_col, text_col), id_col)
-    target = unit.where(F.col(id_col) == target_id).select(
+    unit = _l2_normalize(tf_vectors(docs), "doc_id")
+    target = unit.where(F.col("doc_id") == target_id).select(
         F.col("term"), F.col("tf").alias("tf_t")
     )
     return (
-        unit.where(F.col(id_col) != target_id)
+        unit.where(F.col("doc_id") != target_id)
         .join(F.broadcast(target), "term")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("tf") * F.col("tf_t")).alias("sim"))
-        .select(F.col(id_col).alias("dup_id"), "sim")
+        .select(F.col("doc_id").alias("dup_id"), "sim")
         .where(F.col("sim") >= threshold - THRESHOLD_EPS)
     )

@@ -41,10 +41,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dominated_mask(dom, cand, chunk: int = 128):
+def _dominated_mask(dom, cand):
     """Boolean mask over ``cand`` rows: dominated by any ``dom`` row
     (minimize every dimension; NaN never dominates or is dominated).
     Chunked broadcast keeps the (chunk, |dom|, d) temporaries small."""
+    chunk = 128
     import numpy as np
 
     out = np.zeros(len(cand), dtype=bool)

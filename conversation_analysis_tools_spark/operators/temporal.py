@@ -104,7 +104,7 @@ def range_join(
     ).drop("_lt", "_rt", "_bucket", "_rbucket", "_ron")
 
 
-def yearly_windowed(daily: DataFrame, tail_rows: int, aggs, day_col: str = "day") -> DataFrame:
+def yearly_windowed(daily: DataFrame, tail_rows: int, aggs) -> DataFrame:
     """Evaluate ordered-window expressions over a date-grain rollup
     WITHOUT the single-partition ``Window.orderBy(day)`` plan:
     partition by year, with the last ``tail_rows`` ROWS of each year
@@ -130,7 +130,7 @@ def yearly_windowed(daily: DataFrame, tail_rows: int, aggs, day_col: str = "day"
     rollup is bounded (<= 366 rows/year), but event HISTORY length is
     unbounded -- decades of days belong across executors, not in one
     WindowExec task."""
-    yr = F.year(day_col)
+    yr = F.year("day")
     counts = sorted(
         (r["y"], r["c"])
         for r in daily.groupBy(yr.alias("y")).agg(F.count("*").alias("c")).collect()
@@ -139,7 +139,7 @@ def yearly_windowed(daily: DataFrame, tail_rows: int, aggs, day_col: str = "day"
         b - a == 1 for (a, _), (b, _) in zip(counts, counts[1:])
     )
     if dense:
-        wtail = Window.partitionBy(yr).orderBy(F.col(day_col).desc())
+        wtail = Window.partitionBy(yr).orderBy(F.col("day").desc())
         served = daily.withColumn("_rn", F.row_number().over(wtail)).select(
             *daily.columns,
             F.explode(
@@ -148,11 +148,11 @@ def yearly_windowed(daily: DataFrame, tail_rows: int, aggs, day_col: str = "day"
                 ).otherwise(F.array(yr))
             ).alias("_serve_year"),
         )
-        base = Window.partitionBy("_serve_year").orderBy(day_col)
+        base = Window.partitionBy("_serve_year").orderBy("day")
         keep = F.col("_serve_year") == yr
     else:
         served = daily.withColumn("_serve_year", yr)
-        base = Window.orderBy(day_col)
+        base = Window.orderBy("day")
         keep = F.lit(True)
     return (
         served.select(
@@ -165,21 +165,16 @@ def yearly_windowed(daily: DataFrame, tail_rows: int, aggs, day_col: str = "day"
     )
 
 
-def gapfill_forward(
-    daily: DataFrame,
-    key: str = "event_type",
-    day: str = "day",
-    value: str = "n",
-) -> DataFrame:
+def gapfill_forward(daily: DataFrame) -> DataFrame:
     """Densify a per-key daily series over its min->max calendar and
     forward-fill the value column (the resample primitive; consumed by
     queries/behavior.timeseries_gapfill and its planted-gap tests, so
     query and test exercise ONE implementation).
 
-    Output: (key, day, filled, {value}_fill) -- ``filled`` marks days
-    absent from the input, ``{value}_fill`` carries the last observed
-    value forward (never null: each key's first calendar day is
-    observed by construction).
+    Input: (event_type, day, n). Output: (event_type, day, filled,
+    n_fill) -- ``filled`` marks days absent from the input, ``n_fill``
+    carries the last observed value forward (never null: each key's
+    first calendar day is observed by construction).
 
     Scale: everything runs at (key, day) grain -- rows = keys x span
     days regardless of the event volume that produced ``daily`` --
@@ -189,37 +184,32 @@ def gapfill_forward(
     # null-key/day rows are excluded EXPLICITLY: they have no calendar
     # position, and leaving them in would silently vanish in the fill
     # equi-join while still skewing the min/max bounds
-    daily = daily.where(F.col(key).isNotNull() & F.col(day).isNotNull())
+    daily = daily.where(F.col("event_type").isNotNull() & F.col("day").isNotNull())
     cal = (
-        daily.groupBy(key)
-        .agg(F.min(day).alias("mn"), F.max(day).alias("mx"))
-        .select(key, F.explode(F.sequence("mn", "mx")).alias(day))
+        daily.groupBy("event_type")
+        .agg(F.min("day").alias("mn"), F.max("day").alias("mx"))
+        .select("event_type", F.explode(F.sequence("mn", "mx")).alias("day"))
     )
-    j = cal.join(daily, [key, day], "left")
+    j = cal.join(daily, ["event_type", "day"], "left")
     w = (
-        Window.partitionBy(key)
-        .orderBy(day)
+        Window.partitionBy("event_type")
+        .orderBy("day")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return j.select(
-        key,
-        day,
-        F.col(value).isNull().alias("filled"),
-        F.last(value, ignorenulls=True)
+        "event_type",
+        "day",
+        F.col("n").isNull().alias("filled"),
+        F.last("n", ignorenulls=True)
         .over(w)
         .cast("bigint")
-        .alias(f"{value}_fill"),
+        .alias("n_fill"),
     )
 
 
-def distributed_cumsum(
-    daily: DataFrame,
-    day: str = "day",
-    value: str = "new_users",
-    out: str = "cumulative",
-) -> DataFrame:
-    """Running (unbounded-preceding) sum over a date-grain series
-    WITHOUT a global single-partition window at the day grain: cumsum
+def distributed_cumsum(daily: DataFrame, out: str = "cumulative") -> DataFrame:
+    """Running (unbounded-preceding) sum of ``new_users`` over a
+    date-grain (``day``) series WITHOUT a global single-partition window at the day grain: cumsum
     within each year partition, then add the broadcast sum of all
     prior years' totals. The only global window runs on the YEAR-grain
     totals -- rows = distinct years, bounded by history length / 365,
@@ -231,19 +221,19 @@ def distributed_cumsum(
     # a date order; silently dropping them in the offsets equi-join
     # while counting them into year totals would inflate every
     # cumulative -- the contract is: no calendar position, no row)
-    daily = daily.where(F.col(day).isNotNull())
-    df = daily.withColumn("_yr", F.year(day))
+    daily = daily.where(F.col("day").isNotNull())
+    df = daily.withColumn("_yr", F.year("day"))
     # RANGE frame, not ROWS: if a day ever appears twice, all its rows
     # are peers and get the identical (all-ties-included) cumulative
     # instead of a partition-order-dependent split -- deterministic
     # under the date-grain contract AND under accidental duplicates
     w_in = (
         Window.partitionBy("_yr")
-        .orderBy(day)
+        .orderBy("day")
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    df = df.withColumn("_cum_in", F.sum(value).over(w_in))
-    totals = df.groupBy("_yr").agg(F.sum(value).alias("_tot"))
+    df = df.withColumn("_cum_in", F.sum("new_users").over(w_in))
+    totals = df.groupBy("_yr").agg(F.sum("new_users").alias("_tot"))
     w_yr = Window.orderBy("_yr").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.select(
         "_yr", F.coalesce(F.sum("_tot").over(w_yr), F.lit(0)).alias("_off")

@@ -34,8 +34,9 @@ from pyspark.sql.types import (
 )
 
 
-def _textrank_scores(sets: list[set], damping: float, max_iter: int = 100) -> np.ndarray:
-    """Power iteration identical to the reference (summarizer.py:122-159)."""
+def _textrank_scores(sets: list[set], damping: float) -> np.ndarray:
+    """Power iteration identical to the reference (summarizer.py:122-159),
+    at most 100 rounds."""
     n = len(sets)
     if n == 0:
         return np.array([])
@@ -53,7 +54,7 @@ def _textrank_scores(sets: list[set], damping: float, max_iter: int = 100) -> np
     row_sums[row_sums == 0] = 1
     norm = m / row_sums[:, np.newaxis]
     scores = np.ones(n) / n
-    for _ in range(max_iter):
+    for _ in range(100):
         prev = scores.copy()
         scores = (1 - damping) / n + damping * norm.T @ prev
         if np.allclose(scores, prev, atol=1e-6):
@@ -66,9 +67,8 @@ def textrank_rank(
     group_col: str,
     node_col: str,
     tokens_col: str,
-    damping: float = 0.85,
 ) -> DataFrame:
-    """Rank nodes within each group by TextRank score.
+    """Rank nodes within each group by TextRank score (damping 0.85).
 
     Input: (group, node_id, tokens array<string>). Output:
     (group, node_id, score, rank) -- rank 1 = highest score, ties
@@ -86,7 +86,7 @@ def textrank_rank(
     def rank_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(node_col).reset_index(drop=True)
         sets = [set(t) if t is not None else set() for t in pdf[tokens_col]]
-        scores = _textrank_scores(sets, damping)
+        scores = _textrank_scores(sets, 0.85)
         out = pd.DataFrame(
             {
                 group_col: pdf[group_col],
@@ -105,9 +105,7 @@ def textrank_rank(
     )
 
 
-def doc_sentences(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_sentences(docs: DataFrame) -> DataFrame:
     """(id, text) -> (id, sent_idx, sentence, tokens): the reference's
     sentence split (``[.!?]+``, strip, >= 3 words,
     summarizer.py:42-61) + its tokenizer, all JVM-side; sent_idx is
@@ -119,7 +117,7 @@ def doc_sentences(
     )
 
     return docs.select(
-        id_col, F.posexplode(sentences_expr(text_col)).alias("sent_idx", "sentence")
+        "doc_id", F.posexplode(sentences_expr("text")).alias("sent_idx", "sentence")
     ).withColumn("tokens", tokens_expr(F.col("sentence")))
 
 
@@ -171,31 +169,25 @@ def summary_column(text_col, k: int = 3, damping: float = 0.85):
     return summ(F.col(text_col) if isinstance(text_col, str) else text_col)
 
 
-def summarize_documents(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
+def summarize_documents(docs: DataFrame, k: int = 3) -> DataFrame:
     """Sentence-grain extractive summary per document -> (id,
     n_sentences, summary). Reference-exact semantics via
     :func:`summarize_text`; plan is the map-only
     :func:`summary_column`. At 100 TB this stage pipelines with the
     scan."""
-    s = summary_column(text_col, k, damping).alias("_s")
-    return docs.select(id_col, s).select(
-        id_col,
+    s = summary_column("text", k).alias("_s")
+    return docs.select("doc_id", s).select(
+        "doc_id",
         F.col("_s.n_sentences").alias("n_sentences"),
         F.col("_s.summary").alias("summary"),
     )
 
 
-def summarize_top_k(ranked: DataFrame, k: int = 3, node_col: str = "doc_id") -> DataFrame:
+def summarize_top_k(ranked: DataFrame, k: int = 3) -> DataFrame:
     """N14: keep top-k per group, re-sorted into document order
     (reference re-sorts selected sentences by position,
     summarizer.py:198)."""
-    return ranked.where(F.col("rank") <= k).orderBy(F.col(node_col))
+    return ranked.where(F.col("rank") <= k).orderBy(F.col("doc_id"))
 
 
 def key_nodes_by_threshold(

@@ -27,7 +27,7 @@ from pyspark.sql.window import Window
 from conversation_analysis_tools_spark.functions.text import tokens_with_dupes_expr
 
 
-def explode_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def explode_tokens(df: DataFrame) -> DataFrame:
     """(id, text) -> (id, term) multiset, reference tokenizer.
 
     The trailing ``isnotnull`` filters are no-ops on engine corpora
@@ -57,33 +57,33 @@ def explode_tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     """
     from conversation_analysis_tools_spark.functions.spread import spread_input
 
-    return spread_input(df, id_col).select(
-        F.col(id_col), F.explode(tokens_with_dupes_expr(text_col)).alias("term")
-    ).where(F.col(id_col).isNotNull() & F.col("term").isNotNull())
+    return spread_input(df, "doc_id").select(
+        F.col("doc_id"), F.explode(tokens_with_dupes_expr("text")).alias("term")
+    ).where(F.col("doc_id").isNotNull() & F.col("term").isNotNull())
 
 
-def term_counts(tokens: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def term_counts(tokens: DataFrame) -> DataFrame:
     """(id, term) multiset -> (id, term, cnt)."""
-    return tokens.groupBy(id_col, "term").agg(F.count("*").alias("cnt"))
+    return tokens.groupBy("doc_id", "term").agg(F.count("*").alias("cnt"))
 
 
-def tf_max(counts: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def tf_max(counts: DataFrame) -> DataFrame:
     """Max-normalized TF (relevance-scorer variant)."""
-    w = Window.partitionBy(id_col)
+    w = Window.partitionBy("doc_id")
     return counts.select(
-        id_col, "term", (F.col("cnt") / F.max("cnt").over(w)).alias("tf")
+        "doc_id", "term", (F.col("cnt") / F.max("cnt").over(w)).alias("tf")
     )
 
 
-def tf_sum(counts: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def tf_sum(counts: DataFrame) -> DataFrame:
     """Sum-normalized TF (duplicate-detector variant)."""
-    w = Window.partitionBy(id_col)
+    w = Window.partitionBy("doc_id")
     return counts.select(
-        id_col, "term", (F.col("cnt") / F.sum("cnt").over(w)).alias("tf")
+        "doc_id", "term", (F.col("cnt") / F.sum("cnt").over(w)).alias("tf")
     )
 
 
-def idf(tokens: DataFrame, corpus_size: int | Column, id_col: str = "doc_id") -> DataFrame:
+def idf(tokens: DataFrame, corpus_size: int | Column) -> DataFrame:
     """Per-term IDF table: ``ln(N / (1 + df))``.
 
     ``corpus_size`` is N = total docs (including docs with zero
@@ -92,14 +92,12 @@ def idf(tokens: DataFrame, corpus_size: int | Column, id_col: str = "doc_id") ->
     n = F.lit(corpus_size) if isinstance(corpus_size, int) else corpus_size
     return (
         tokens.groupBy("term")
-        .agg(F.countDistinct(id_col).alias("df"))
+        .agg(F.countDistinct("doc_id").alias("df"))
         .select("term", F.log(n / (F.lit(1) + F.col("df"))).alias("idf"))
     )
 
 
-def idf_from_counts(
-    counts: DataFrame, corpus_size: int | Column, id_col: str = "doc_id"
-) -> DataFrame:
+def idf_from_counts(counts: DataFrame, corpus_size: int | Column) -> DataFrame:
     """Per-term IDF from the (id, term, cnt) table.
 
     ``counts`` rows are already distinct (id, term), so df is a plain
@@ -131,12 +129,12 @@ def idf_from_counts(
     )
 
 
-def tfidf(tf_df: DataFrame, idf_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def tfidf(tf_df: DataFrame, idf_df: DataFrame) -> DataFrame:
     """Join TF x IDF -> (id, term, tfidf).
 
     The IDF side is tiny (vocabulary-sized) -> broadcast, so the TF
     table never shuffles for this join.
     """
     return tf_df.join(F.broadcast(idf_df), "term").select(
-        id_col, "term", (F.col("tf") * F.col("idf")).alias("tfidf")
+        "doc_id", "term", (F.col("tf") * F.col("idf")).alias("tfidf")
     )

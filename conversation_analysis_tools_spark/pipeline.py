@@ -57,14 +57,11 @@ DEFAULT_CONFIG: dict[str, Any] = {
 def run_content_pipeline(
     docs: DataFrame,
     config: dict[str, Any] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns the per-stage DataFrames.
 
     Keys: relevance, duplicate_pairs, components, unique_docs,
-    ranked (TextRank, when group_col given), analysis_results, stats.
+    analysis_results, stats.
     """
     cfg = {**DEFAULT_CONFIG, **(config or {})}
     kws = cfg["keywords"]
@@ -78,24 +75,21 @@ def run_content_pipeline(
 
     from conversation_analysis_tools_spark.operators.cache import track
 
-    counts = track(T.term_counts(
-        T.explode_tokens(docs, id_col, text_col), id_col
-    ))
+    counts = track(T.term_counts(T.explode_tokens(docs)))
 
     scored = R.score_documents(
-        docs, kws, cfg["relevance_weights"], id_col, text_col, counts=counts
+        docs, kws, cfg["relevance_weights"], counts=counts
     ).select(
-        id_col, F.round("relevance", 6).alias("relevance"), text_col,
-        *( [group_col] if group_col else [] ),
+        "doc_id", F.round("relevance", 6).alias("relevance"), "text"
     )
 
     pairs = S.duplicate_pairs(
-        docs, cfg["duplicate_threshold"], id_col, text_col, counts=counts,
+        docs, cfg["duplicate_threshold"], counts=counts,
         route=cfg["duplicate_route"],
     )
     comp = C.connected_components(pairs.select("id1", "id2"))
     uniq = C.unique_representatives(
-        docs.select(F.col(id_col).alias("id")), comp
+        docs.select(F.col("doc_id").alias("id")), comp
     )
 
     classified = P.classify(
@@ -103,12 +97,11 @@ def run_content_pipeline(
         "relevance",
         cfg["critical_keywords"],
         cfg["high_keywords"],
-        text_col,
         cfg["priority_weights"],
     )
 
     dups = comp.where(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col), F.lit(True).alias("is_duplicate")
+        F.col("id").alias("doc_id"), F.lit(True).alias("is_duplicate")
     )
     # Sentence-grain extractive summaries (summarizer.py:161-242) --
     # the reference's analysis_results.summary column
@@ -116,16 +109,16 @@ def run_content_pipeline(
     # classified relation (which still carries the text): no join, no
     # shuffle; '' when no sentence survives, like ' '.join([]).
     results = (
-        classified.join(dups, id_col, "left")
+        classified.join(dups, "doc_id", "left")
         .withColumn("is_duplicate", F.coalesce("is_duplicate", F.lit(False)))
         .withColumn(
             "summary",
             TR.summary_column(
-                text_col, cfg["summary_top_k"], cfg["textrank_damping"]
+                "text", cfg["summary_top_k"], cfg["textrank_damping"]
             )["summary"],
         )
         .select(
-            F.col(id_col).alias("message_id"),
+            F.col("doc_id").alias("message_id"),
             F.col("relevance").alias("relevance_score"),
             "summary",
             F.round("priority_score", 6).alias("priority_score"),
@@ -137,23 +130,12 @@ def run_content_pipeline(
         results = results.where(~F.col("is_duplicate"))
 
     out: dict[str, DataFrame] = {
-        "relevance": scored.drop(text_col),
+        "relevance": scored.drop("text"),
         "duplicate_pairs": pairs,
         "components": comp,
         "unique_docs": uniq,
         "analysis_results": results,
     }
-
-    if group_col:
-        from conversation_analysis_tools_spark.functions.text import tokens_expr
-
-        toks = docs.select(
-            group_col, id_col, tokens_expr(text_col).alias("tokens")
-        )
-        ranked = TR.textrank_rank(
-            toks, group_col, id_col, "tokens", cfg["textrank_damping"]
-        )
-        out["ranked"] = TR.summarize_top_k(ranked, cfg["summary_top_k"], id_col)
 
     # A21-style stats rollup (pipeline/pipeline.py:325-354)
     out["stats"] = results.agg(

@@ -387,7 +387,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count("*").alias("n"))
-    return gapfill_forward(daily, key="event_type", day="day", value="n")
+    return gapfill_forward(daily)
 
 
 @register(
@@ -426,6 +426,4 @@ def cumulative_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = firsts.groupBy("day").agg(
         F.count("*").cast("bigint").alias("new_users")
     )
-    return distributed_cumsum(
-        daily, day="day", value="new_users", out="cumulative_users"
-    )
+    return distributed_cumsum(daily, out="cumulative_users")

@@ -933,7 +933,7 @@ def pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conversation_analysis_tools_spark.operators.pagerank import pagerank
 
     edges = spark.createDataFrame(PAGERANK_FIXED_EDGES, "src long, dst long")
-    ranks = pagerank(edges, directed=False)
+    ranks = pagerank(edges)
     return ranks.select(
         F.col("id"),
         F.round(F.col("rank") * 1_000_000).cast("bigint").alias("rank_x1e6"),
@@ -955,7 +955,7 @@ def dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     pairs = D.minhash_dedup_pairs(docs, threshold=0.2).select("id1", "id2")
-    ranks = pagerank(pairs, src="id1", dst="id2", directed=False)
+    ranks = pagerank(pairs, src="id1", dst="id2")
     return ranks.select(
         F.col("id").alias("doc_id"), F.round("rank", 6).alias("rank")
     ).orderBy(F.desc("rank"), F.asc("doc_id")).limit(50)
@@ -1305,7 +1305,7 @@ def boilerplate_line_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", 1, 60), F.lit(" body continues."),
     )
     pages = docs.select("doc_id", page.alias("page"))
-    return D.remove_boilerplate_lines(pages, max_df=5)
+    return D.remove_boilerplate_lines(pages)
 
 
 # ---------------------------------------------------------------------------

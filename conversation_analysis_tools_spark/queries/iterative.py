@@ -377,7 +377,7 @@ def doc_summaries_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas-UDF column (top-3 by score, re-sorted to document order,
     joined with ' ' -- summarizer.py:161-242). Literal oracle pins the
     exact summary STRINGS, certifying selection AND assembly."""
-    out = TR.summarize_documents(_fixed_docs(spark), "doc_id", "text", k=3)
+    out = TR.summarize_documents(_fixed_docs(spark), k=3)
     return out.select(
         F.col("doc_id").cast("int").alias("doc_id"),
         F.col("n_sentences").cast("int").alias("n_sentences"),
@@ -432,7 +432,7 @@ def doc_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection semantics are pinned against a pure-Python reference
     implementation in tests/test_summarizer.py."""
     docs = _catalog_table(spark, "documents", sf_dir)
-    return TR.summarize_documents(docs, "doc_id", "text", k=3).orderBy("doc_id")
+    return TR.summarize_documents(docs, k=3).orderBy("doc_id")
 
 
 @register(

@@ -903,7 +903,7 @@ def embedding_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conversation_analysis_tools_spark.operators import tfidf as _T
 
     n_vocab = (
-        _T.explode_tokens(docs, "doc_id", "text").select("term").distinct().count()
+        _T.explode_tokens(docs).select("term").distinct().count()
     )
     assert n_vocab < 5000, (
         f"corpus vocabulary {n_vocab} >= vocab_size 5000: the "

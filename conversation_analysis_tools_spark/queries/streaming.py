@@ -511,10 +511,14 @@ def streaming_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_neardup_dedup(spark, src, os.path.join(d, "store"))
 
 
+#: Micro-batches a staged documents stream drains in.
+_STAGE_FILES = 3
+
+
 def _stage_ordered_docs(
-    spark: SparkSession, sf_dir: str, kind: str, cols: list[str], n_files: int = 3
+    spark: SparkSession, sf_dir: str, kind: str, cols: list[str]
 ) -> tuple[str, str]:
-    """Stage the documents table as ``n_files`` doc_id-RANGE files with
+    """Stage the documents table as ``_STAGE_FILES`` doc_id-RANGE files with
     strictly increasing mtimes, so a maxFilesPerTrigger=1 file-source
     stream drains them as ascending-doc_id micro-batches -- the
     deterministic arrival order the greedy-by-arrival oracles replay.
@@ -531,9 +535,9 @@ def _stage_ordered_docs(
     docs = _catalog_table(spark, "documents", sf_dir).select(*cols)
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     span = hi - lo + 1
-    for k in range(n_files):
-        a = lo + span * k // n_files
-        b = lo + span * (k + 1) // n_files
+    for k in range(_STAGE_FILES):
+        a = lo + span * k // _STAGE_FILES
+        b = lo + span * (k + 1) // _STAGE_FILES
         part = os.path.join(d, f"part{k}")
         (
             docs.where((F.col("doc_id") >= a) & (F.col("doc_id") < b))

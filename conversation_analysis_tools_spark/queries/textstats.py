@@ -1751,7 +1751,7 @@ def curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join("kept_arr", "\n").alias("page"),
         )
     )
-    bl = D2.remove_boilerplate_lines(staged.select("doc_id", "page"), max_df=5)
+    bl = D2.remove_boilerplate_lines(staged.select("doc_id", "page"))
     survivors = staged.select("doc_id", "source", "n_lines_in").join(
         bl.select("doc_id", "n_kept", "cleaned").where(F.col("n_kept") > 0),
         "doc_id",

@@ -44,14 +44,14 @@ def read_event_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     return events_ts(stream)
 
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
+def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     """Tumbling event-time windows; watermark bounds late data and
     state size when the input is a stream.
 
     avg(value) uses the exact-integer path (functions/numeric.avg4):
     cent sums are order-independent and the half-up rounding happens
     in integer space, so the oracle holds at every scale."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return (
         src.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(
@@ -62,11 +62,9 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "
     )
 
 
-def sliding_counts(
-    events: DataFrame, width: str = "2 hours", slide: str = "1 hour", watermark: str = "3 hours"
-) -> DataFrame:
+def sliding_counts(events: DataFrame, width: str = "2 hours", slide: str = "1 hour") -> DataFrame:
     """Sliding windows: each event lands in width/slide windows."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", "3 hours") if events.isStreaming else events
     return (
         src.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
@@ -74,12 +72,10 @@ def sliding_counts(
     )
 
 
-def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def session_aggregate(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session windows per user: events closer than ``gap`` merge into
     one session (built-in session_window state merge)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return (
         src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
@@ -95,20 +91,15 @@ def session_aggregate(
     )
 
 
-def enrich_with_dim(
-    events: DataFrame,
-    dim: DataFrame,
-    on_left: str = "user_id",
-    on_right: str = "c_custkey",
-) -> DataFrame:
+def enrich_with_dim(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: the dimension side is a bounded
     batch table, broadcast to every task, so the (unbounded) stream
     side never shuffles for the join -- the standard pattern for
     attaching slowly-changing reference data to an event stream. The
     same plan serves batch inputs unchanged."""
     return events.join(
-        F.broadcast(dim), events[on_left] == dim[on_right], "inner"
-    ).drop(on_right)
+        F.broadcast(dim), events["user_id"] == dim["c_custkey"], "inner"
+    ).drop("c_custkey")
 
 
 def dedup_first(
@@ -161,25 +152,23 @@ STATE_ROWS_PER_PARTITION = 1_000_000
 STATE_PARTITION_FLOOR = 4
 
 
-def size_state_partitions(
-    est_state_rows: int, rows_per_partition: int = STATE_ROWS_PER_PARTITION
-) -> int:
+def size_state_partitions(est_state_rows: int) -> int:
     """Shuffle-partition count for a stateful streaming query, derived
     from the estimated state volume instead of a constant: one
-    partition per ``rows_per_partition`` state rows, floor
+    partition per STATE_ROWS_PER_PARTITION state rows, floor
     STATE_PARTITION_FLOOR. The estimate only needs the right order of
     magnitude -- the measured cost curve is flat within 2x of the
     optimum at both sf0.1 and sf1 -- so callers size it from
     driver-side metadata (parquet footer row counts x filter
     selectivity), never from an extra Spark job. Round 12 retargeted
-    rows_per_partition 10k -> 1M after the sf1 A/B showed the 10k
+    STATE_ROWS_PER_PARTITION 10k -> 1M after the sf1 A/B showed the 10k
     target deriving 40 partitions whose store open/commit overhead
     tripled the query (see STATE_ROWS_PER_PARTITION)."""
     import math
 
     return max(
         STATE_PARTITION_FLOOR,
-        math.ceil(max(0, est_state_rows) / rows_per_partition),
+        math.ceil(max(0, est_state_rows) / STATE_ROWS_PER_PARTITION),
     )
 
 
@@ -270,11 +259,7 @@ def scoped_session(spark: "SparkSession", shuffle_partitions: int | None) -> "Sp
     return s2
 
 
-def sessionize_with_state(
-    events: "DataFrame",
-    gap_minutes: float = 30.0,
-    watermark: str = "2 hours",
-) -> "DataFrame":
+def sessionize_with_state(events: "DataFrame", gap_minutes: float = 30.0) -> "DataFrame":
     """Custom stateful streaming operator via applyInPandasWithState:
     per-user session tracking with arbitrary state (the escape hatch
     for semantics session_window can't express -- e.g. carrying
@@ -392,7 +377,7 @@ def sessionize_with_state(
                 ],
             )
 
-    src = events.withWatermark("ts", watermark)
+    src = events.withWatermark("ts", "2 hours")
     return src.select("user_id", "ts", "value").groupBy("user_id").applyInPandasWithState(
         with_state,
         outputStructType=out_schema,
@@ -555,7 +540,7 @@ def tws_available() -> bool:
         return False
 
 
-def _cumulative_processor(gap_unused=None):
+def _cumulative_processor():
     """Build the StatefulProcessor for :func:`cumulative_user_stats`.
 
     Deferred into a factory so importing this module never requires

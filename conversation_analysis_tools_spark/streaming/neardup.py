@@ -89,8 +89,6 @@ def fold_neardup_batch(
     batch_id: int,
     store_dir: str,
     threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """One foreachBatch fold: admit/drop ``batch_df`` against the
     store, write admitted docs into the batch's own store partition.
@@ -106,25 +104,21 @@ def fold_neardup_batch(
     arrs_path = os.path.join(store_dir, "arrs")
     bands_path = os.path.join(store_dir, "bands")
 
-    arrs = D.shingle_arrays(
-        batch_df.select(id_col, text_col), id_col, text_col
-    ).persist()
-    id_type = arrs.schema[id_col].dataType.simpleString()
+    arrs = D.shingle_arrays(batch_df.select("doc_id", "text")).persist()
+    id_type = arrs.schema["doc_id"].dataType.simpleString()
     # Identical shingle sets relate identically to every store and
     # batch doc, so greedy admission keeps at most their min-id
     # representative: non-reps drop before any candidate join, which
     # keeps a replica burst from going quadratic. Shingle-less docs
     # have no fingerprint and no bands; they are always admitted.
     non_reps = (
-        set_fp(arrs, id_col)
-        .withColumn("_rep", F.min(id_col).over(Window.partitionBy("_fp")))
-        .where(F.col(id_col) > F.col("_rep"))
-        .select(id_col)
+        set_fp(arrs, "doc_id")
+        .withColumn("_rep", F.min("doc_id").over(Window.partitionBy("_fp")))
+        .where(F.col("doc_id") > F.col("_rep"))
+        .select("doc_id")
     )
-    reps = arrs.join(non_reps, id_col, "left_anti").persist()
-    bands = D.lsh_bands(
-        D.minhash_signatures_from_arrays(reps, id_col), id_col
-    ).persist()
+    reps = arrs.join(non_reps, "doc_id", "left_anti").persist()
+    bands = D.lsh_bands(D.minhash_signatures_from_arrays(reps)).persist()
     try:
         # One candidate relation: batch bands against batch bands
         # (id1 < id2) and against the store bands of EARLIER batches
@@ -133,22 +127,22 @@ def fold_neardup_batch(
         # first-fold crash between the writes replays as an empty store.
         def tagged(b: DataFrame, store: bool) -> DataFrame:
             return b.select(
-                F.col(id_col).alias("id1"), "band", "key", F.lit(store).alias("_store")
+                F.col("doc_id").alias("id1"), "band", "key", F.lit(store).alias("_store")
             )
 
         pool, sh_arrs = tagged(bands, False), reps
         if os.path.exists(bands_path):
             prior = F.col("batch") < batch_id
             store_bands = spark.read.schema(
-                f"{id_col} {id_type}, band int, key string, batch int"
+                f"doc_id {id_type}, band int, key string, batch int"
             ).parquet(bands_path)
             store_arrs = spark.read.schema(
-                f"{id_col} {id_type}, sh_arr array<string>, batch int"
+                f"doc_id {id_type}, sh_arr array<string>, batch int"
             ).parquet(arrs_path)
             pool = pool.unionByName(tagged(store_bands.where(prior), True))
-            sh_arrs = store_arrs.where(prior).select(id_col, "sh_arr").unionByName(reps)
+            sh_arrs = store_arrs.where(prior).select("doc_id", "sh_arr").unionByName(reps)
         cands = (
-            bands.select(F.col(id_col).alias("id2"), "band", "key")
+            bands.select(F.col("doc_id").alias("id2"), "band", "key")
             .join(pool, ["band", "key"])
             .where(F.col("_store") | (F.col("id1") < F.col("id2")))
             .select("id1", "id2", "_store")
@@ -157,7 +151,7 @@ def fold_neardup_batch(
         # The only collect: verified candidate pairs, candidate-sized.
         # A store hit drops its batch doc outright; batch pairs between
         # docs the store left go through greedy admission by id.
-        rows = D.jaccard_verify(cands, sh_arrs, threshold, id_col).select(
+        rows = D.jaccard_verify(cands, sh_arrs, threshold).select(
             "id1", "id2", "_store"
         ).collect()
         dropped = {r["id2"] for r in rows if r["_store"]}
@@ -171,13 +165,13 @@ def fold_neardup_batch(
 
         drop_df = F.broadcast(
             spark.createDataFrame(
-                [(i,) for i in sorted(dropped)], f"{id_col} {id_type}"
+                [(i,) for i in sorted(dropped)], f"doc_id {id_type}"
             )
         )
-        reps.join(drop_df, id_col, "left_anti").write.mode("overwrite").parquet(
+        reps.join(drop_df, "doc_id", "left_anti").write.mode("overwrite").parquet(
             os.path.join(arrs_path, f"batch={batch_id}")
         )
-        bands.join(drop_df, id_col, "left_anti").write.mode("overwrite").parquet(
+        bands.join(drop_df, "doc_id", "left_anti").write.mode("overwrite").parquet(
             os.path.join(bands_path, f"batch={batch_id}")
         )
     finally:
@@ -224,4 +218,7 @@ def stream_neardup_dedup(
         # zero source files -> no fold ever ran -> empty admission set
         # (reading the never-created store would raise AnalysisException)
         return spark.createDataFrame([], "doc_id bigint")
-    return spark.read.parquet(arrs_path).select("doc_id")
+    # the store's declared schema: no inference job on the caller's thread
+    return spark.read.schema(
+        "doc_id bigint, sh_arr array<string>, batch int"
+    ).parquet(arrs_path).select("doc_id")

@@ -37,12 +37,12 @@ from conversation_analysis_tools_spark.streaming.events import (
 )
 
 
-def build_day_sketches(events: DataFrame, key_col: str = "user_id") -> DataFrame:
-    """(d, sk): one HLL sketch of ``key_col`` per event day."""
+def build_day_sketches(events: DataFrame) -> DataFrame:
+    """(d, sk): one HLL sketch of ``user_id`` per event day."""
     return (
-        events.select(F.to_date("ts").alias("d"), key_col)
+        events.select(F.to_date("ts").alias("d"), "user_id")
         .groupBy("d")
-        .agg(F.expr(f"hll_sketch_agg({key_col})").alias("sk"))
+        .agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
     )
 
 
@@ -60,9 +60,7 @@ def merge_day_sketches(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def fold_sketch_batch(
-    batch_df: DataFrame, batch_id: int, state_path: str, key_col: str = "user_id"
-) -> bool:
+def fold_sketch_batch(batch_df: DataFrame, batch_id: int, state_path: str) -> bool:
     """Fold one micro-batch into the persistent day-sketch table
     (events.swap_fold). Returns False for marker-skipped replays
     (which would also be harmless to apply -- union is idempotent)."""
@@ -70,21 +68,19 @@ def fold_sketch_batch(
         batch_df,
         batch_id,
         state_path,
-        lambda batch: build_day_sketches(batch, key_col),
+        build_day_sketches,
         merge_day_sketches,
     )
 
 
 def stream_maintain_sketches(
-    spark: SparkSession, path_dir: str, state_path: str, key_col: str = "user_id"
+    spark: SparkSession, path_dir: str, state_path: str
 ) -> DataFrame:
     """Drain the staged event stream through the sketch fold; returns
     the maintained day-sketch table."""
     drain(
         read_event_stream(scoped_session(spark, 8), path_dir),
-        lambda batch_df, batch_id: fold_sketch_batch(
-            batch_df, batch_id, state_path, key_col
-        ),
+        lambda batch_df, batch_id: fold_sketch_batch(batch_df, batch_id, state_path),
         state_path + "._ckpt",
     )
     return spark.read.parquet(state_path)

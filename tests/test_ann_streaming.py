@@ -1,6 +1,7 @@
 """ANN recall against exact kNN; streaming-vs-batch window equality."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,6 +126,89 @@ def test_stateful_sessionize_streaming_mode(spark):
     assert streamed and all(
         (r["user_id"], r["session_start"]) in batch_keys for r in streamed
     )
+
+
+def _session_events(path):
+    """Three users; gaps just under, at, and just over 30 minutes at
+    microsecond resolution, and half-cent values."""
+    from datetime import datetime, timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = datetime(2024, 1, 1, 10, 0, 0, 1)
+    gap = timedelta(minutes=30)
+    us = timedelta(microseconds=1)
+    offsets = {
+        1: [timedelta(0), gap - us, 2 * gap, 3 * gap + us, 4 * gap + us,
+            9 * gap],
+        2: [timedelta(0), gap + us, 3 * gap + 2 * us, 3 * gap + 3 * us],
+        3: [timedelta(0), gap, 2 * gap - us],
+    }
+    values = [0.005, 1.015, 2.675, 0.125, 10.335, 4.445]
+    rows = [
+        (uid, t0 + off, values[i % len(values)])
+        for uid, offs in offsets.items()
+        for i, off in enumerate(offs)
+    ]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[0] for r in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows), pa.string()),
+            "value": pa.array([r[2] for r in rows], pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }),
+        f"{path}/events.parquet",
+    )
+
+
+def test_stateful_sessionize_streaming_matches_batch(spark, tmp_path):
+    """Small-input pin on the streaming branch's state arithmetic (the
+    soak above runs it on sf0.001 only on request): every session the
+    stream closes equals its batch row in all columns, at microsecond
+    and cent precision. Within one micro-batch a session closes when a
+    later event of its user is more than 30 minutes after its end, so
+    the stream emits every batch session except each user's last."""
+    from conversation_analysis_tools_spark.streaming.events import (
+        read_event_stream,
+        scoped_session,
+        sessionize_with_state,
+    )
+
+    _session_events(tmp_path)
+    session = scoped_session(spark, 2)
+    # Stopped once the one data batch has reported progress (after its
+    # sink commit): the processing-time timeout makes every batch ask
+    # for another, so neither an availableNow drain nor
+    # processAllAvailable ever returns on this operator.
+    q = (
+        sessionize_with_state(read_event_stream(session, str(tmp_path)), gap_minutes=30.0)
+        .writeStream.format("memory")
+        .queryName("sessionize_small")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not any(p["numInputRows"] for p in q.recentProgress):
+            assert q.exception() is None, q.exception()
+            assert time.monotonic() < deadline, "the data batch did not commit in 120 s"
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    streamed = session.table("sessionize_small").collect()
+    batch = sessionize_with_state(
+        table(spark, "events", str(tmp_path)), gap_minutes=30.0
+    ).collect()
+    last = {}
+    for r in batch:
+        last[r["user_id"]] = max(last.get(r["user_id"], r["session_start"]),
+                                 r["session_start"])
+    closed = sorted(tuple(r) for r in batch if r["session_start"] != last[r["user_id"]])
+    assert [r[0] for r in closed] == [1, 1, 1, 2, 2]
+    assert sorted(tuple(r) for r in streamed) == closed
 
 
 def test_int8_quantized_recall_and_range(spark):

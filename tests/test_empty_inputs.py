@@ -92,7 +92,7 @@ def test_priority_empty(spark, empty_docs):
     from conversation_analysis_tools_spark.operators import priority as P
 
     scored = empty_docs.withColumn("relevance", F.lit(0.0))
-    out = P.classify(scored, "relevance", [], [], "text", None)
+    out = P.classify(scored, "relevance", [], [], None)
     assert out.count() == 0
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql.streaming import StreamingQueryListener
 
 from conversation_analysis_tools_spark.streaming import neardup as N
+from tests.test_ingest import _jobs
 from tests.test_neardup_stream import _stage
 
 #: Jobs of a 3-batch drain of ``sample_docs`` as measured on this fold
@@ -33,7 +34,9 @@ def test_drain_job_count(spark, sample_docs, tmp_path, monkeypatch):
     """A stream's jobs run in the job group of its run id (Structured
     Streaming sets it on the query thread), so the drain's jobs are
     counted in that group; the run id comes from a listener on the
-    stream's own session (``scoped_session`` clones one per stream)."""
+    stream's own session (``scoped_session`` clones one per stream).
+    The caller's thread runs no job before it collects: the admitted
+    store is read against its declared schema, not inferred."""
     runs = _RunIds()
     scoped = N.scoped_session
 
@@ -45,8 +48,11 @@ def test_drain_job_count(spark, sample_docs, tmp_path, monkeypatch):
     monkeypatch.setattr(N, "scoped_session", listened)
     src = str(tmp_path / "src")
     _stage(spark, sample_docs, src, 3)
-    kept = N.stream_neardup_dedup(spark, src, str(tmp_path / "store"), threshold=0.5)
-    assert sorted(r[0] for r in kept.collect()) == [0, 1, 2, 3, 4]
+    out = []
+    caller_jobs = _jobs(spark, lambda: out.append(N.stream_neardup_dedup(
+        spark, src, str(tmp_path / "store"), threshold=0.5)))
+    assert caller_jobs == 0
+    assert sorted(r[0] for r in out[0].collect()) == [0, 1, 2, 3, 4]
     (run,) = runs.ids
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(run)
     assert len(jobs) <= DRAIN_JOBS

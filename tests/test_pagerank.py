@@ -33,7 +33,7 @@ def test_pagerank_matches_python_reference(spark):
     df = spark.createDataFrame(edges, "id1 long, id2 long")
     got = {
         r["id"]: r["rank"]
-        for r in pagerank(df, src="id1", dst="id2", directed=False).collect()
+        for r in pagerank(df, src="id1", dst="id2").collect()
     }
     want = _py_pagerank(edges)
     assert set(got) == set(want)

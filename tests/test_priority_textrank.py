@@ -33,7 +33,7 @@ def test_length_score_monotone(spark):
     ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     scores = [
-        r["s"] for r in df.select(P.length_score_expr("text").alias("s")).collect()
+        r["s"] for r in df.select(P.length_score_expr().alias("s")).collect()
     ]
     assert scores == [0.1, 0.5, 0.8, 1.0]
 
@@ -43,7 +43,7 @@ def test_keyword_score_max_combine(spark):
         [("urgent crash in prod",), ("just a bit slow",), ("all fine",)],
         "text string",
     )
-    expr = P.keyword_score_expr(["crash"], ["slow"], "text")
+    expr = P.keyword_score_expr(["crash"], ["slow"])
     scores = [r["s"] for r in df.select(expr.alias("s")).collect()]
     assert scores == [1.0, 0.7, 0.0]
 

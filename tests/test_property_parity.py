@@ -115,7 +115,7 @@ def test_inverted_cosine_matches_numpy_reference(spark):
     tf = S.tf_vectors(docs)
     got = {
         (r["id1"], r["id2"]): r["sim"]
-        for r in S._pairwise_cosine_inverted(tf, "doc_id").collect()
+        for r in S._pairwise_cosine_inverted(tf).collect()
     }
 
     # reference: sum-normalized TF dicts -> cosine

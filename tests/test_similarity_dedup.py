@@ -516,7 +516,7 @@ def test_minhash_collapse_matches_direct(spark, sample_docs):
     arrs = D.shingle_arrays(reps)
     direct_pairs = D.jaccard_verify(
         D.minhash_candidates(
-            D.lsh_bands(D.minhash_signatures_from_arrays(arrs)), "doc_id"
+            D.lsh_bands(D.minhash_signatures_from_arrays(arrs))
         ),
         arrs,
         0.2,
@@ -596,12 +596,9 @@ def test_edit_distance_collapse_self_and_cross(spark, sample_docs):
     assert 0.7 <= s < 1.0
 
 
-def test_duplicate_pairs_collapse_modes_and_max_df(spark, sample_docs):
+def test_duplicate_pairs_collapse_modes(spark, sample_docs):
     """collapse='always' and 'never' are output-identical (no probe
-    job on either), and max_df forces the direct plan whose df filter
-    counts the FULL corpus -- on the replicated corpus every term's df
-    is >= 5, so max_df=4 yields no pairs at all (the collapsed corpus
-    would have df=1 per term and wrongly keep everything)."""
+    job on either)."""
     reps = _replicate(sample_docs)
     always = {
         (r["id1"], r["id2"]): round(r["sim"], 9)
@@ -614,15 +611,6 @@ def test_duplicate_pairs_collapse_modes_and_max_df(spark, sample_docs):
     assert set(always) == set(never) and always
     for k in always:
         assert abs(always[k] - never[k]) < 1e-6, k
-    # every doc has 5 byte-exact replicas -> every term df >= 5
-    assert S.duplicate_pairs(reps, 0.3, max_df=4).count() == 0
-    # df just above the replica count: behaves like the unfiltered run
-    # for terms unique to one doc-group, still df-filters shared terms
-    filtered = {
-        (r["id1"], r["id2"])
-        for r in S.duplicate_pairs(reps, 0.3, max_df=5).collect()
-    }
-    assert filtered  # replica pairs survive (their unique terms have df=5)
 
 
 def test_duplicate_pairs_rejects_bad_collapse(spark, sample_docs):
@@ -941,9 +929,7 @@ def test_grouped_grid_pairs_matches_reference(spark):
     thr = 0.3
     got = {
         (r["id1"], r["id2"]): r["sim"]
-        for r in S.grouped_grid_pairs(
-            df, "grp", thr, id_col="vec_id", vec_col="embedding"
-        ).collect()
+        for r in S.grouped_grid_pairs(df, "grp", thr).collect()
     }
     want = {}
     by_g = {}
@@ -976,12 +962,12 @@ def test_grouped_grid_pairs_multiblock_parity(spark, monkeypatch):
     df = spark.createDataFrame(rows, "grp int, vec_id long, embedding array<double>")
     one = sorted(
         (r["id1"], r["id2"], round(r["sim"], 9))
-        for r in S.grouped_grid_pairs(df, "grp", 0.2, id_col="vec_id").collect()
+        for r in S.grouped_grid_pairs(df, "grp", 0.2).collect()
     )
     monkeypatch.setattr(S, "DENSE_BLOCK_ROWS", 4)  # force B(B+1)/2 cells
     grid = sorted(
         (r["id1"], r["id2"], round(r["sim"], 9))
-        for r in S.grouped_grid_pairs(df, "grp", 0.2, id_col="vec_id").collect()
+        for r in S.grouped_grid_pairs(df, "grp", 0.2).collect()
     )
     assert one == grid
 
@@ -1101,9 +1087,8 @@ def test_grouped_grid_pairs_string_group_key(spark):
     ]
     df = spark.createDataFrame(rows, "lang string, vec_id long, embedding array<double>")
     got = sorted(
-        (r["lang"], r["id1"], r["id2"]) for r in S.grouped_grid_pairs(
-            df, "lang", 0.5, id_col="vec_id"
-        ).collect()
+        (r["lang"], r["id1"], r["id2"])
+        for r in S.grouped_grid_pairs(df, "lang", 0.5).collect()
     )
     assert got == [("de", 3, 4), ("en", 1, 2)]
 
@@ -1365,12 +1350,6 @@ def test_cosine_route_matches_exact_on_planted(spark):
         S.duplicate_pairs(docs, 0.9, route="auto", route_budget=10**9)
     (info2,) = _gate(recs, "duplicate_pairs")
     assert info2["choice"] == "exact" and info2["requested"] == "auto"
-    # max_df pins the exact plan but the record still reports the
-    # caller's actual request (ADVICE r9)
-    with capture() as recs:
-        S.duplicate_pairs(docs, 0.9, max_df=5, route="auto")
-    (info3,) = _gate(recs, "duplicate_pairs")
-    assert info3["choice"] == "exact" and info3["requested"] == "auto"
     import pytest
 
     with pytest.raises(ValueError, match="route must be"):

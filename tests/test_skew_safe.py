@@ -64,8 +64,8 @@ def test_span_removal_skew_safe_value_identical(spark):
 
 def test_boilerplate_skew_safe_value_identical(spark):
     pages = _skewed_pages(spark)
-    fast = D.remove_boilerplate_lines(pages, max_df=5, skew_safe=False)
-    safe = D.remove_boilerplate_lines(pages, max_df=5, skew_safe=True)
+    fast = D.remove_boilerplate_lines(pages, skew_safe=False)
+    safe = D.remove_boilerplate_lines(pages, skew_safe=True)
     rows_fast = _sorted(fast)
     assert rows_fast == _sorted(safe)
     # the all-boilerplate doc keeps its row with n_kept 0, cleaned ''

@@ -97,7 +97,7 @@ DOCS = [
 @pytest.fixture(scope="module")
 def summaries(spark):
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    out = summarize_documents(df, "doc_id", "text", k=3)
+    out = summarize_documents(df, k=3)
     return {r["doc_id"]: r for r in out.collect()}
 
 
